@@ -12,6 +12,7 @@ read per op through the op's job group.
 from __future__ import annotations
 
 import functools
+import re
 import sys
 import time
 
@@ -114,6 +115,27 @@ def _wrap(fn, name: str):
     return traced
 
 
+def span_cost_s(calls: int = 20000) -> float:
+    """Seconds a traced call adds to an untraced one: the wrapper plus the
+    span it records, timed over ``calls`` calls of a no-op."""
+    def noop() -> None:
+        return None
+
+    traced = _wrap(noop, "calibrate")
+    saved, TRACER.spans = TRACER.spans, []
+    t0 = time.perf_counter()
+    for _ in range(calls):
+        noop()
+    raw = time.perf_counter() - t0
+    TRACER.enabled = True
+    t0 = time.perf_counter()
+    for _ in range(calls):
+        traced()
+    wrapped = time.perf_counter() - t0
+    TRACER.enabled, TRACER.spans = False, saved
+    return max(wrapped - raw, 0.0) / calls
+
+
 def install() -> None:
     """Import the program's modules and swap every binding of each
     WRAPPED function for its traced wrapper."""
@@ -177,6 +199,17 @@ def group_counters(spark, group: str) -> dict[str, float]:
         out["shuffle_write_mb"] += sd.shuffleWriteBytes() / 2**20
         out["spill_mb"] += (sd.memoryBytesSpilled() + sd.diskBytesSpilled()) / 2**20
     return out
+
+
+# A Union, Project or Filter line of a plan's tree string.
+_OVERLAY_NODE = re.compile(r"^[\s:|+-]*(?:Union|Project|Filter)\b", re.M)
+
+
+def overlay_nodes(spark, view: str) -> int:
+    """Union, Project and Filter nodes in the analyzed plan of a session
+    view. No job runs: the plan is only analyzed."""
+    plan = spark.table(view)._jdf.queryExecution().analyzed().treeString()
+    return len(_OVERLAY_NODE.findall(plan))
 
 
 def pinned_mb(spark) -> float:

@@ -6,10 +6,11 @@ tool loop or the operator batch in a single process.
 
 Run it from the root of a checkout. It starts Spark through the program's
 own ``get_spark`` with one core per available CPU over the sf0.1 tables in
-``perfbench/data``, sets up three times (``setup_s`` is the median), runs
-one warm-up pass, then runs seeded op lists pass after pass until
-``--seconds`` of op time are used. Each op is sent only after the previous one returned.
-Results are checked against DuckDB off the clock. The last stdout line is
+``perfbench/data``, sets up from a cold JVM, runs one warm-up pass for
+``tool_calls_rw`` (both count in ``setup_s``), then runs seeded op lists
+pass after pass until ``--seconds`` of op time are used. Each op is sent
+only after the previous one returned. Results are checked against DuckDB
+off the clock. The last stdout line is
 one JSON object; ``--trace 1`` reports per-layer numbers instead of the
 end-to-end ones (see perfbench/NOTES.md). Everything it writes goes under
 ``.bench_build/perfbench`` in the checkout.
@@ -31,10 +32,8 @@ WORK = os.path.join(ROOT, ".bench_build", "perfbench")
 PINNED = os.path.join(HERE, "workloads.json")
 
 WORKLOADS = ("tool_calls_rw", "batch")
-SETUPS = 3
-# A fixed-size JVM heap (-Xms = -Xmx) keeps the JVM's resident peak from
-# following heap-resizing decisions run to run.
-HEAP = "3g"
+# Session views a tool_calls_rw pass writes to.
+WRITTEN = ("customer", "orders")
 
 
 def cores() -> int:
@@ -50,19 +49,25 @@ def prepare_env() -> None:
     os.environ.update(
         SPARK_GRAFT_CPUS=str(cores()),
         SPARK_GRAFT_SF_DIR=SF_DIR,
-        SPARK_GRAFT_DRIVER_MEM=HEAP,
         SPARK_LOCAL_DIRS=os.path.join(WORK, "local"),
         TMPDIR=tmp,
         # no hsperfdata files: the JVMs would write them to /tmp
         SPARK_LAUNCHER_OPTS="-XX:-UsePerfData",
+        # The driver heap starts at the maximum get_spark configures, is
+        # touched once at launch and never shrinks, so the JVM's resident
+        # peak does not follow heap-sizing decisions run to run.
         PYSPARK_SUBMIT_ARGS=(
-            f"--driver-java-options '-Djava.io.tmpdir={tmp} -Xms{HEAP} "
+            f"--driver-java-options '-Djava.io.tmpdir={tmp} "
+            "-XX:InitialRAMPercentage=100 -XX:MaxHeapFreeRatio=100 "
+            "-XX:+AlwaysPreTouch "
             "-XX:-UsePerfData' "
             f"--conf spark.sql.warehouse.dir={os.path.join(WORK, 'warehouse')} "
             "pyspark-shell"),
     )
-    os.environ.pop("SPARK_GRAFT_DOCSTORE_PERSIST", None)
-    os.environ.pop("SPARK_GRAFT_MAX_TOOL_ROWS", None)
+    # the program's own defaults for heap size, persistence and row caps
+    for var in ("SPARK_GRAFT_DRIVER_MEM", "SPARK_GRAFT_DOCSTORE_PERSIST",
+                "SPARK_GRAFT_MAX_TOOL_ROWS"):
+        os.environ.pop(var, None)
     sys.path.insert(0, ROOT)
 
 
@@ -70,16 +75,17 @@ def prepare_env() -> None:
 
 
 def set_up():
-    """Time one set-up: session start (the JVM launch on the first call;
-    ``get_spark`` returns the live session after that), table
-    registration from parquet, and one scan per table. The warm-up pass
-    that follows the set-ups compiles the workload's own code paths."""
+    """Time the cold set-up: the JVM launch and session start in the
+    program's ``get_spark``, table registration from parquet, one scan per
+    table, and one job that starts a Python worker per core."""
     from database_toolbox_spark import session
 
     t0 = time.perf_counter()
     spark = session.get_spark(app_name="perfbench")
     for df in session.load_tables(spark, SF_DIR, replace=True).values():
         df.limit(1).write.mode("overwrite").format("noop").save()
+    n = cores()
+    spark.sparkContext.parallelize(range(n), n).map(abs).count()
     return spark, time.perf_counter() - t0
 
 
@@ -107,6 +113,10 @@ class Workload:
         self.name, self.seed, self.spark = name, seed, spark
         self.checker, self.domains = checker, domains
         self.batch = name == "batch"
+        # A served tool loop is long-lived, so its calls are measured warm;
+        # a batch job runs each query once per session and pays the first
+        # run's compilation every time, so batch ops are measured cold.
+        self.warms_up = not self.batch
         if self.batch:
             from database_toolbox_spark.operators import all_oracles, all_queries
 
@@ -114,7 +124,6 @@ class Workload:
                 pinned = json.load(f)["batch"]
             self.pinned = pinned["floor"] + pinned["heavy"]
             self.queries, self.oracles = all_queries(), all_oracles()
-        self.checked: set[str] = set()
 
     def ops(self, pass_key: str) -> list[dict]:
         import gen
@@ -150,15 +159,21 @@ class Workload:
             "params": {"name": op["tool"], "arguments": op["args"]}})
 
     def check(self, op: dict, out) -> str | None:
-        """Off the clock. A batch query is checked on its first run in the
-        process (the warm-up pass), while its checkpoints are still pinned."""
+        """Off the clock, before ``after`` releases the op's checkpoints.
+        A batch result is compared with its oracle's cached canonical hash."""
         if not self.batch:
             return self.checker.tool(op, out)
         q = op["query"]
-        if q in self.checked:
-            return None
-        self.checked.add(q)
         return self.checker.query(q, self.oracles[q], out.toPandas())
+
+    def overlay_nodes(self) -> dict[str, int]:
+        """Per written view, the Union/Project/Filter nodes of its analyzed
+        plan (each docstore write stacks one more on it)."""
+        import layers
+
+        if self.batch:
+            return {}
+        return {t: layers.overlay_nodes(self.spark, t) for t in WRITTEN}
 
     def after(self) -> None:
         """Off the clock, after the check: release the op's checkpoints
@@ -175,18 +190,23 @@ class Pass:
         self.samples: list[float] = []
         self.failures: list[str] = []
         self.layer_rows: list[dict] = []
+        self.overlay_depth = 0
 
     @property
     def seconds(self) -> float:
         return sum(self.samples)
 
 
-def run_pass(wl: Workload, pass_key: str, traced: bool = False) -> Pass:
-    """One pass over a fresh op list, each op timed on its own."""
+def run_pass(wl: Workload, pass_key: str, traced: bool = False,
+             checked: bool = True) -> Pass:
+    """One pass over a fresh op list, each op timed on its own. An op that
+    raises always counts as failed; ``checked`` also compares each result
+    with DuckDB (off the clock)."""
     import layers
 
     layers.TRACER.enabled = False  # the reset is the benchmark's, not an op's
     wl.reset()
+    base = wl.overlay_nodes() if traced else {}
     layers.TRACER.enabled = traced
     p = Pass(wl.ops(pass_key))
     sc = wl.spark.sparkContext
@@ -210,7 +230,7 @@ def run_pass(wl: Workload, pass_key: str, traced: bool = False) -> Pass:
             row["rows"], row["truncated"] = content_stats(out)
             row["op_s"] = dt
             p.layer_rows.append(row)
-        if err is None:
+        if err is None and checked:
             try:
                 err = wl.check(op, out)
             except Exception as exc:  # noqa: BLE001
@@ -221,6 +241,8 @@ def run_pass(wl: Workload, pass_key: str, traced: bool = False) -> Pass:
     layers.TRACER.enabled = False
     if traced:
         sc.setJobGroup("perfbench-idle", "between ops")
+        end = wl.overlay_nodes()
+        p.overlay_depth = max((end[t] - base[t] for t in end), default=0)
     return p
 
 
@@ -246,9 +268,10 @@ def parse_args(argv=None):
 
 
 def measure(args) -> dict:
-    """Set up, warm up with one unmeasured pass, then either measure
-    passes until ``--seconds`` of op time are used (untraced), or run a
-    traced pass between two untraced ones over the same op list (traced)."""
+    """Set up cold and, for a workload that warms up, run one warm-up
+    pass; then measure passes until ``--seconds`` of op time are used
+    (untraced), or run one traced pass (traced). Every measured or traced
+    result is checked."""
     import gen
     import layers
     from checks import Checker
@@ -257,38 +280,35 @@ def measure(args) -> dict:
     domains = gen.domains(SF_DIR)
     if args.trace:
         layers.install()
-    spark, first = set_up()
-    setup_times = [first]
-    if not args.trace:
-        for _ in range(SETUPS - 1):
-            spark, dt = set_up()
-            setup_times.append(dt)
+    spark, cold_s = set_up()
     checker = Checker(ROOT, SF_DIR, domains, mirror_writes=not args.workload == "batch")
     wl = Workload(args.workload, args.seed, spark, checker, domains)
     done: list[Pass] = []
     try:
-        # The warm-up pass compiles every op's code paths before timing.
-        done.append(run_pass(wl, "warm"))
+        setup_s = cold_s
+        if wl.warms_up:
+            # compiles every op's code paths before timing; its op time is
+            # part of the set-up
+            warm = run_pass(wl, "warm", checked=False)
+            done.append(warm)
+            setup_s += warm.seconds
         if args.trace:
-            # untraced, traced, untraced over one op list: the overhead is
-            # the traced pass against the mean of the two around it
-            before = run_pass(wl, "0")
             traced = run_pass(wl, "0", traced=True)
-            after = run_pass(wl, "0")
-            done += [before, traced, after]
-            result = layer_metrics(wl, traced, (before.seconds + after.seconds) / 2)
+            done.append(traced)
+            result = layer_metrics(wl, traced)
         else:
             measured: list[Pass] = []
             while True:
                 measured.append(run_pass(wl, str(len(measured))))
                 used = sum(p.seconds for p in measured)
-                if used + measured[-1].seconds > args.seconds:
+                # a second pass of cold-measured ops would run them warm
+                if not wl.warms_up or used + measured[-1].seconds > args.seconds:
                     break
             done += measured
             samples = [s for p in measured for s in p.samples]
             rss = max(layers.vm_hwm_mb(), layers.vm_hwm_mb(layers.jvm_pid(spark)))
             result = {
-                "setup_s": (statistics.median(setup_times), "s"),
+                "setup_s": (setup_s, "s"),
                 "wall_s": (statistics.median(p.seconds for p in measured), "s"),
                 "op_p50_ms": (1000 * percentile(samples, 0.5), "ms"),
                 "peak_rss_mb": (rss, "MB"),
@@ -301,8 +321,9 @@ def measure(args) -> dict:
                 f"(needs {samples_needed(q)})" for q in (0.5, 0.9))
             print(f"perfbench: {args.workload} seed={args.seed} "
                   f"passes={len(measured)} op samples={len(samples)}; {rule}; "
-                  f"setups_s={[round(s, 3) for s in setup_times]}", file=sys.stderr)
-            write_detail(args, setup_times, measured)
+                  f"set-up {setup_s:.3f} s, of it cold {cold_s:.3f} s",
+                  file=sys.stderr)
+            write_detail(args, cold_s, done)
     finally:
         checker.close()
         shut_down(spark)
@@ -318,16 +339,17 @@ def measure(args) -> dict:
     }
 
 
-def write_detail(args, setup_times: list[float], measured: list[Pass]) -> None:
-    """Per-op times of the measured passes, for looking behind a median."""
+def write_detail(args, cold_s: float, passes: list[Pass]) -> None:
+    """Per-op times of every pass (the warm-up first, if any), for looking
+    behind a median."""
     path = os.path.join(WORK, f"run-{args.workload}-{args.seed}.json")
     with open(path, "w") as f:
-        json.dump({"setup_s": setup_times, "passes": [
+        json.dump({"cold_setup_s": cold_s, "passes": [
             [[op["label"], t] for op, t in zip(p.ops, p.samples)]
-            for p in measured]}, f)
+            for p in passes]}, f)
 
 
-def layer_metrics(wl: Workload, traced: Pass, base_s: float) -> dict:
+def layer_metrics(wl: Workload, traced: Pass) -> dict:
     """Per-layer numbers of the traced pass; also writes the span dump and
     the self-time table under .bench_build/perfbench."""
     import layers
@@ -336,7 +358,10 @@ def layer_metrics(wl: Workload, traced: Pass, base_s: float) -> dict:
     spans = layers.TRACER.frozen()
     table = layer_totals(spans)
     rows, n = traced.layer_rows, len(traced.ops)
-    traced_s = traced.seconds
+    # Tracing adds a wrapper call and a recorded span per traced call: far
+    # less time than a pass's wall time varies from run to run, so the
+    # cost is calibrated rather than read off two passes' wall times.
+    overhead_s = len(spans) * layers.span_cost_s()
 
     def per_op_ms(name, key="total"):
         return 1000 * table.get(name, {}).get(key, 0.0) / n
@@ -346,11 +371,6 @@ def layer_metrics(wl: Workload, traced: Pass, base_s: float) -> dict:
 
     totals = {k: sum(r[k] for r in rows) for k in rows[0]}
     op_ms = 1000 * sum(r["op_s"] for r in rows)
-    writes_per_coll: dict[str, int] = {}
-    for op in traced.ops:
-        if op.get("expect", {}).get("kind") == "write":
-            c = op["args"]["collection"]
-            writes_per_coll[c] = writes_per_coll.get(c, 0) + 1
     build = per_op_ms("operators.build")
     mat = per_op_ms("session.materialize")
     m = {
@@ -366,8 +386,7 @@ def layer_metrics(wl: Workload, traced: Pass, base_s: float) -> dict:
         "looker.run_query_ms": (per_op_ms("looker.run_query"), "ms"),
         "document_store.read_ms": (per_op_ms("document_store.read"), "ms"),
         "document_store.write_ms": (per_op_ms("document_store.write"), "ms"),
-        "document_store.overlay_depth": (
-            float(max(writes_per_coll.values(), default=0)), "count"),
+        "document_store.overlay_depth": (float(traced.overlay_depth), "count"),
         "session.load_tables_ms": (per_op_ms("session.load_tables"), "ms"),
         "session.load_table_calls": (calls("session.load_table"), "count"),
         "session.materialize_ms": (mat, "ms"),
@@ -391,7 +410,7 @@ def layer_metrics(wl: Workload, traced: Pass, base_s: float) -> dict:
         "spark.busy_ratio": (totals["task_run_ms"] / (op_ms * cores()), "ratio"),
         "executor.rows": (totals["rows"], "count"),
         "executor.truncated": (totals["truncated"], "count"),
-        "trace.overhead_ms": (1000 * (traced_s - base_s) / n, "ms"),
+        "trace.overhead_ms": (1000 * overhead_s / n, "ms"),
         "client.ops": (float(n), "count"),
     }
     dump = {
@@ -399,7 +418,7 @@ def layer_metrics(wl: Workload, traced: Pass, base_s: float) -> dict:
         "self_time_ms_per_op": {k: round(v, 4) for k, (v, _) in m.items()
                                 if k.endswith("_ms")},
         "layer_table": table, "per_op_spark": rows,
-        "tracing_overhead_s": traced_s - base_s, "untraced_pass_s": base_s,
+        "tracing_overhead_s": overhead_s, "traced_pass_s": traced.seconds,
         "spans": [list(s) for s in spans],
     }
     path = os.path.join(WORK, f"trace-{wl.name}.json")

@@ -5,6 +5,7 @@
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 
@@ -14,6 +15,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
 import gen  # noqa: E402
+from classify import GRAPH, pin  # noqa: E402
 from stats import layer_totals, percentile, samples_needed, self_times, tail_ok  # noqa: E402
 
 SF_DIR = os.path.join(HERE, "data", "sf0.1")
@@ -105,3 +107,15 @@ def test_predicted_counts_follow_the_writes(domains):
               for op in ops if op["expect"]["kind"] == "count"}
     for coll, n in counts.items():
         assert n == domains["counts"][coll] + adds[coll] - deletes[coll]
+
+
+def test_pinned_batch_lists_follow_the_rule():
+    with open(os.path.join(HERE, "workloads.json")) as f:
+        pinned = json.load(f)
+    batch = pinned["batch"]
+    assert pin(pinned["membership"]) == batch
+    queries = batch["floor"] + batch["heavy"]
+    assert len(set(queries)) == samples_needed(0.5)
+    assert set(batch["floor"]) <= set(pinned["membership"]["floor"])
+    assert set(batch["heavy"]) <= set(pinned["membership"]["heavy"])
+    assert set(batch["heavy"]) & set(GRAPH)
