@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from database_toolbox_spark.session import local_frame
+
 # Row shape contract: images/redshift/redshift.yaml:14-22.
 LIST_TABLES_SCHEMA = T.StructType(
     [
@@ -93,7 +95,7 @@ def list_tables(
     # UTF8-binary order agree) instead of paying a sort exchange for a
     # ~70-row result
     rows.sort(key=lambda r: (r[0], r[1], r[3]))
-    return spark.createDataFrame(rows, LIST_TABLES_SCHEMA)
+    return local_frame(spark, rows, LIST_TABLES_SCHEMA)
 
 
 def list_table_names(spark: SparkSession, table_names: str | None = "") -> DataFrame:
@@ -105,7 +107,8 @@ def list_table_names(spark: SparkSession, table_names: str | None = "") -> DataF
         for _, name in _visible_tables(spark)
         if wanted is None or name in wanted
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n,) for n in names],
         T.StructType([T.StructField("table_name", T.StringType(), False)]),
     )

@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from database_toolbox_spark.gate import StatementDenied
+from database_toolbox_spark.session import local_frame
 
 # collection → document-id column(s). Composite keys join with '-' in the
 # document path (Firestore ids are opaque strings, so 'l_orderkey-l_linenumber'
@@ -99,7 +100,8 @@ def list_collections(spark: SparkSession, parent_path: str = "") -> DataFrame:
         for name, ids in sorted(COLLECTION_IDS.items())
         if not parent_path and _registered(spark, name)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         T.StructType(
             [
@@ -207,7 +209,8 @@ def get_documents(spark: SparkSession, document_paths: str) -> DataFrame:
         )
         found = part if found is None else found.unionByName(part)
 
-    req = spark.createDataFrame(
+    req = local_frame(
+        spark,
         [(i, p) for i, p in enumerate(paths)],
         T.StructType(
             [
@@ -452,7 +455,8 @@ def get_rules(spark: SparkSession) -> DataFrame:
     rows = [("allow", c) for c in sorted(gate.ALLOWED_CLASSES)] + [
         ("deny", c) for c in sorted(gate.DENIED_CLASSES)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         T.StructType(
             [
@@ -471,11 +475,13 @@ def get_rules(spark: SparkSession) -> DataFrame:
 # Round-9: an operator can OPT IN per session
 # (spark.conf.set(WRITES_CONF, "session")), which executes writes as
 # SESSION-SCOPED copy-on-write VIEW overlays — the registered temp view is
-# replaced by a DataFrame that unions / rewrites / anti-joins rows on top
-# of the immutable parquet. Storage is never touched (the sinks policy
-# holds); a load_tables() re-register drops the overlay. This is the
-# Spark-native reading of a document write: a new logical plan over the
-# same files, not an in-place mutation.
+# replaced by a DataFrame that unions new rows onto (add), rewrites columns
+# of (update, a per-column CASE) or filters rows out of (delete, a NOT
+# key-IN filter) the immutable parquet; added rows are a LocalRelation, so
+# reads of the overlaid view stay JVM-only. Storage is never touched (the
+# sinks policy holds); a load_tables() re-register drops the overlay. This
+# is the Spark-native reading of a document write: a new logical plan over
+# the same files, not an in-place mutation.
 
 WRITES_CONF = "spark.database_toolbox.docstore.writes"
 
@@ -588,8 +594,10 @@ def add_documents(
     """Upstream `firestore-add-documents` (opt-in; see section comment):
     append documents (JSON array of field dicts, key fields required) to
     the collection's session view. Returns (doc_path, action) per added
-    document. The overlay plan is base UNION ALL new-rows — the parquet
-    scan under it is untouched and every prior pushdown still applies."""
+    document. The overlay plan is base UNION ALL a LocalRelation of the
+    new rows (session.local_frame) — the parquet scan under it is untouched,
+    every prior pushdown still applies, and no later read of the view runs
+    a Python worker."""
     if not _writes_enabled(spark):
         _deny("add_documents")
     df, types = _overlay_base(spark, collection)
@@ -609,8 +617,8 @@ def add_documents(
                     f"collection {collection!r}"
                 )
         rows.append(row)
-    new = spark.createDataFrame(
-        [tuple(r.get(c) for c in df.columns) for r in rows], df.schema
+    new = local_frame(
+        spark, [tuple(r.get(c) for c in df.columns) for r in rows], df.schema
     )
     df.unionByName(new).createOrReplaceTempView(collection)
     _persist_overlay(spark, collection)
@@ -656,7 +664,8 @@ def update_document(
     _persist_overlay(spark, collection)
     from pyspark.sql import types as T  # noqa: PLC0415
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(document_path, "updated", n)],
         T.StructType([
             T.StructField("doc_path", T.StringType(), False),
@@ -703,7 +712,8 @@ def delete_documents(
     _persist_overlay(spark, collection)
     from pyspark.sql import types as T  # noqa: PLC0415
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(p, "deleted") for p in paths],
         T.StructType([
             T.StructField("doc_path", T.StringType(), False),

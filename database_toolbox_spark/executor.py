@@ -20,6 +20,8 @@ import json
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from database_toolbox_spark.gate import check
 
@@ -35,14 +37,39 @@ def execute_sql(
     return spark.sql(sql)
 
 
+def json_rows(df: DataFrame, limit: int | None = None) -> DataFrame:
+    """One JSON string column, one row per result row, capped at ``limit``.
+
+    Rows render executor-side with ``to_json(struct(...))`` and the cap
+    stays a DataFrame ``limit`` at the plan root, so it plans as a
+    ``CollectLimit`` (``TakeOrderedAndProject`` under an ORDER BY) that
+    reads only as many partitions as it needs. ``df.toJSON()`` would drop
+    to an RDD first, and the limit would then plan as a ``GlobalLimit``
+    over a single-partition shuffle. The strings are the ones
+    ``Dataset.toJSON`` writes: columns are renamed positionally before the
+    struct is built (duplicate and dotted names stay addressable) and cast
+    to the row encoder's types, which is what ``toJSON`` renders (ANSI
+    intervals widen to DAY TO SECOND / YEAR TO MONTH). Null fields are
+    omitted and timestamps use the session time zone, as in ``toJSON``."""
+    enc = T.StructType.fromJson(json.loads(df._jdf.exprEnc().schema().json()))
+    cols = []
+    for i, (f, e) in enumerate(zip(df.schema.fields, enc.fields)):
+        col = F.col(f"_{i}")
+        if e.dataType != f.dataType:
+            col = col.cast(e.dataType)
+        cols.append(col.alias(f.name))
+    out = df.toDF(*[f"_{i}" for i in range(len(cols))]).select(
+        F.to_json(F.struct(*cols)).alias("json")
+    )
+    return out if limit is None else out.limit(limit)
+
+
 def rows_as_json(df: DataFrame, limit: int | None = None) -> list[str]:
     """Serialize a result as one JSON string per row — the reference's result
     contract (tests/redshift/example_usage.py:54-65: clients json.loads each
-    content item). `df.toJSON()` serializes executor-side; only the final
+    content item). Serialized executor-side (see json_rows); only the final
     strings are collected. `limit` caps driver memory for interactive use."""
-    if limit is not None:
-        df = df.limit(limit)
-    return df.toJSON().collect()
+    return [r[0] for r in json_rows(df, limit).collect()]
 
 
 def mcp_content(df: DataFrame, limit: int | None = None) -> list[dict[str, str]]:
@@ -70,7 +97,9 @@ def capped_mcp_content(
     count job); a trailing `{"truncated": true, "max_rows": N}` item flags
     the cut, mirroring `isError`-style signaling. The cap protects the
     driver from `SELECT * FROM lineitem` arriving over MCP — the plan
-    itself stays distributed (`df.limit` executes executor-side)."""
+    itself stays distributed, and the cap is a CollectLimit at its root
+    (see json_rows), so no shuffle and no extra job gathers the capped
+    rows."""
     n = max_tool_rows() if max_rows is None else max_rows
     if n <= 0:
         return mcp_content(df)

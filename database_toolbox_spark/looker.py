@@ -25,7 +25,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from database_toolbox_spark.operators._oracle import R
-from database_toolbox_spark.session import load_tables
+from database_toolbox_spark.session import load_table, local_frame
 
 
 @dataclass(frozen=True)
@@ -34,6 +34,8 @@ class Explore:
     description: str
     # FROM clause body (tables + join chain); tables come from session.TABLES
     sql_from: str
+    # the session.TABLES the FROM clause reads — all run_query registers
+    tables: tuple[str, ...]
     dimensions: dict[str, str] = field(default_factory=dict)  # name -> SQL
     measures: dict[str, str] = field(default_factory=dict)  # name -> agg SQL
 
@@ -48,6 +50,7 @@ EXPLORES: dict[str, Explore] = {
             "orders o JOIN customer c ON o.o_custkey = c.c_custkey "
             "JOIN nation n ON c.c_nationkey = n.n_nationkey"
         ),
+        tables=("orders", "customer", "nation"),
         dimensions={
             "order_status": "o.o_orderstatus",
             "order_priority": "o.o_orderpriority",
@@ -66,6 +69,7 @@ EXPLORES: dict[str, Explore] = {
         name="lineitem",
         description="Line items with part attributes",
         sql_from="lineitem l JOIN part p ON l.l_partkey = p.p_partkey",
+        tables=("lineitem", "part"),
         dimensions={
             "return_flag": "l.l_returnflag",
             "line_status": "l.l_linestatus",
@@ -82,6 +86,7 @@ EXPLORES: dict[str, Explore] = {
         name="events",
         description="Event stream",
         sql_from="events e",
+        tables=("events",),
         dimensions={
             "event_type": "e.event_type",
             "event_day": "CAST(e.ts AS DATE)",
@@ -163,9 +168,11 @@ def run_query(
     sorts: list[str] | None = None,
     limit: int | None = None,
 ) -> DataFrame:
-    """The Looker `query` tool: compile + execute against the star schema."""
-    load_tables(spark, sf_dir)
+    """The Looker `query` tool: compile + execute against the star schema.
+    Registers only the explore's own tables, not the whole star schema."""
     sql, args = compile_query_sql(explore, fields, filters, sorts, limit)
+    for table in EXPLORES[explore].tables:
+        load_table(spark, sf_dir, table)
     return spark.sql(sql, args=args) if args else spark.sql(sql)
 
 
@@ -214,8 +221,8 @@ LOOKS: dict[int, Look] = {
 
 def get_models(spark: SparkSession) -> DataFrame:
     """Looker get_models: the single Spark model and its explore count."""
-    return spark.createDataFrame(
-        [(MODEL, len(EXPLORES))], "model string, explore_count int"
+    return local_frame(
+        spark, [(MODEL, len(EXPLORES))], "model string, explore_count int"
     )
 
 
@@ -223,8 +230,8 @@ def get_explores(spark: SparkSession, model: str = MODEL) -> DataFrame:
     if model != MODEL:
         raise KeyError(f"unknown model {model!r}")
     rows = [(MODEL, e.name, e.description) for e in EXPLORES.values()]
-    return spark.createDataFrame(
-        rows, "model string, explore string, description string"
+    return local_frame(
+        spark, rows, "model string, explore string, description string"
     )
 
 
@@ -234,8 +241,8 @@ def _fields_df(spark: SparkSession, explore: str, kind: str) -> DataFrame:
         raise KeyError(f"unknown explore {explore!r}")
     src = spec.dimensions if kind == "dimension" else spec.measures
     rows = [(explore, name, kind, sql) for name, sql in sorted(src.items())]
-    return spark.createDataFrame(
-        rows, "explore string, field string, kind string, sql string"
+    return local_frame(
+        spark, rows, "explore string, field string, kind string, sql string"
     )
 
 
@@ -252,8 +259,8 @@ def get_looks(spark: SparkSession) -> DataFrame:
         (lk.look_id, lk.title, lk.explore, json.dumps(list(lk.fields)))
         for lk in LOOKS.values()
     ]
-    return spark.createDataFrame(
-        rows, "look_id int, title string, explore string, fields string"
+    return local_frame(
+        spark, rows, "look_id int, title string, explore string, fields string"
     )
 
 

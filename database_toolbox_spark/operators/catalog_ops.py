@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from database_toolbox_spark.catalog import list_tables
-from database_toolbox_spark.session import TABLES, load_tables
+from database_toolbox_spark.session import TABLES, load_tables, local_frame
 
 
 def catalog_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -44,7 +44,7 @@ def fast_table_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         for t in TABLES
     ]
     return (
-        spark.createDataFrame(rows, "table_name string, n_rows bigint")
+        local_frame(spark, rows, "table_name string, n_rows bigint")
         .orderBy("table_name")
     )
 

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from database_toolbox_spark.operators._oracle import R
-from database_toolbox_spark.session import load_tables
+from database_toolbox_spark.session import load_tables, local_frame
 
 K_CELLS = 8
 N_ITERS = 2  # unrolled Lloyd updates after init
@@ -339,8 +339,8 @@ def grid_density_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)  # min-label union
     labels = [(int(n), int(find(n))) for n in parent]
-    spark.createDataFrame(
-        labels, "node BIGINT, label BIGINT"
+    local_frame(
+        spark, labels, "node BIGINT, label BIGINT"
     ).createOrReplaceTempView("gdc_labels_v")
     return spark.sql(f"""
         WITH rep AS (

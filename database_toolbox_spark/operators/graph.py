@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from database_toolbox_spark.functions import bounded_rank_window
-from database_toolbox_spark.session import load_tables, materialize
+from database_toolbox_spark.session import load_tables, local_frame, materialize
 
 DAMPING = 0.85
 ITERATIONS = 3
@@ -372,8 +372,8 @@ def kcore_rounds_from_edges(
         if n_edges == rows[-1][2]:
             break
         rows.append((rnd, cur.selectExpr("src").distinct().count(), n_edges))
-    return spark.createDataFrame(
-        rows, "round INT, n_nodes BIGINT, n_edges BIGINT"
+    return local_frame(
+        spark, rows, "round INT, n_nodes BIGINT, n_edges BIGINT"
     ).orderBy("round")
 
 

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from database_toolbox_spark.functions import money
 from database_toolbox_spark.operators._oracle import R
-from database_toolbox_spark.session import load_table, load_tables
+from database_toolbox_spark.session import load_table, load_tables, local_frame
 
 _STATUS_DIM = [("O", "open"), ("F", "finished"), ("P", "pending")]
 
@@ -43,6 +43,19 @@ def ensure_partitioned_orders(spark: SparkSession, sf_dir: str) -> str:
             .parquet(path)
         )
     return path
+
+
+def _status_dim(spark: SparkSession) -> DataFrame:
+    """The status dimension, written once as parquet and read back like a
+    warehouse dimension. DPP needs the dimension's filter to survive
+    optimization; over driver-local rows Catalyst evaluates the filter at
+    plan time into a smaller LocalRelation, leaving no predicate to prune
+    with."""
+    path = os.path.join(tempfile.gettempdir(), "dts_status_dim")
+    if not os.path.isdir(path):
+        dim = local_frame(spark, _STATUS_DIM, "status string, label string")
+        dim.write.mode("overwrite").parquet(path)
+    return spark.read.parquet(path)
 
 
 def partition_pruned_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -65,7 +78,7 @@ def dynamic_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension filtered on a non-partition attribute."""
     path = ensure_partitioned_orders(spark, sf_dir)
     orders = spark.read.parquet(path)
-    dim = spark.createDataFrame(_STATUS_DIM, "status string, label string")
+    dim = _status_dim(spark)
     open_dim = F.broadcast(dim.filter(F.col("label") == "open"))
     return (
         orders.join(open_dim, orders.o_orderstatus == open_dim.status)

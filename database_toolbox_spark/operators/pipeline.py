@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from database_toolbox_spark.operators._oracle import R
-from database_toolbox_spark.session import load_tables, materialize
+from database_toolbox_spark.session import load_tables, local_frame, materialize
 
 CHUNK_TOKENS = 32
 CHUNK_STRIDE = 24  # 8-token overlap
@@ -619,7 +619,8 @@ def train_bpe(
     if stats is not None:
         stats["rounds"] = rounds
         stats["merges"] = len(merges)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         merges,
         "rank int, left_sym string, right_sym string, "
         "merged string, pair_count bigint",

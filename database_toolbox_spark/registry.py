@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from database_toolbox_spark import catalog as _catalog
 from database_toolbox_spark import executor as _executor
+from database_toolbox_spark.session import local_frame
 
 
 @dataclass(frozen=True)
@@ -548,7 +549,8 @@ def _list_jdbc_sources_tool(spark: SparkSession) -> DataFrame:
     rows = [
         (name, src.driver_class) for name, src in sorted(_JDBC_SOURCES.items())
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         T.StructType(
             [
@@ -615,7 +617,7 @@ def _register_jdbc_table_tool(
          "YES" if f.nullable else "NO", None)
         for pos, f in enumerate(df.schema.fields, start=1)
     ]
-    return spark.createDataFrame(rows, _cat.LIST_TABLES_SCHEMA)
+    return local_frame(spark, rows, _cat.LIST_TABLES_SCHEMA)
 
 
 register(

@@ -20,10 +20,12 @@ from __future__ import annotations
 
 import os
 import sys
+import warnings
 from functools import lru_cache as _lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # The ten driver tables (TESTDATA.md + FIXTURES.md). region/nation/supplier
 # are broadcast-sized dimensions at every scale factor.
@@ -85,6 +87,35 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """Driver-local rows (a list of tuples, one value per schema field) as
+    a DataFrame over a JVM ``LocalRelation``.
+
+    This is the package's only way to turn Python rows into a DataFrame.
+    ``spark.createDataFrame(<list>, schema)`` would go through
+    ``sc.parallelize``: an RDD split ``defaultParallelism`` ways whose every
+    scan pipes each partition through a Python worker, and any view built
+    over it (a docstore write overlay) pays that on every later read. An
+    Arrow table below ``spark.sql.execution.arrow.localRelationThreshold``
+    is shipped to the JVM once and planned as a ``LocalTableScan`` — no
+    Python worker, no partition count tied to cores. ``schema`` is a
+    StructType or a DDL string."""
+    import pyarrow as pa  # noqa: PLC0415
+    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -181,23 +212,22 @@ def _view_registry(spark: SparkSession) -> dict[str, tuple[DataFrame, str]]:
     return reg
 
 
-# Parquet schema per resolved data file (see _dataset_file_key): the
-# first read of a dataset infers the schema JVM-side (~85 ms of file
-# listing + footer work); every later read passes it explicitly (~14 ms).
-# Keyed on the part FILE path, so a rewritten docstore dataset (fresh
-# randomized part names per overwrite) can never hit a stale entry.
-_schema_cache: dict[str, object] = {}
+@_lru_cache(maxsize=256)
+def _dataset_schema(spark: SparkSession, key: str, path: str) -> T.StructType:
+    """Parquet schema per resolved data file (``key``, see
+    _dataset_file_key): the first read of a dataset infers the schema
+    JVM-side (~85 ms of file listing + footer work); every later read
+    passes it explicitly (~14 ms). Keyed on the part FILE path, so a
+    rewritten docstore dataset (fresh randomized part names per
+    overwrite) can never hit a stale entry; bounded like
+    _nanos_ts_columns_cached, so dead keys from overwrites age out."""
+    return spark.read.parquet(path).schema
 
 
 def _fresh_read(spark: SparkSession, path: str) -> DataFrame:
     """A fresh DataFrame over ``path`` (fresh expression IDs per call)
     with schema inference paid once per dataset per process."""
-    key = _dataset_file_key(path)
-    schema = _schema_cache.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        _schema_cache[key] = df.schema
-        return df
+    schema = _dataset_schema(spark, _dataset_file_key(path), path)
     return spark.read.schema(schema).parquet(path)
 
 
@@ -347,16 +377,26 @@ def release_materialized(spark: SparkSession, blocking: bool = False) -> int:
     tests/test_window_gate.py-style audit: grep '\\.persist(|\\.cache('),
     so engine-owned sessions lose nothing else; callers who persist their
     own DataFrames should unpersist those themselves before relying on
-    this sweep."""
+    this sweep.
+
+    A JVM-side failure (py4j error) mid-sweep is not fatal — cleanup runs
+    between queries — but it is loud: a RuntimeWarning names the failure
+    and the return value still counts the unpersists that succeeded
+    before it. Any other exception propagates."""
+    from py4j.protocol import Py4JError  # noqa: PLC0415
+
+    n = 0
     try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        n = 0
-        for jrdd in jmap.values():
+        for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
             jrdd.unpersist(blocking)
             n += 1
-        return n
-    except Exception:  # noqa: BLE001 — best-effort cleanup, never fatal
-        return 0
+    except Py4JError as exc:
+        warnings.warn(
+            f"release_materialized: released {n} RDD(s), then failed: {exc}",
+            RuntimeWarning,
+            stacklevel=2,
+        )
+    return n
 
 
 def ensure_session_confs(spark: SparkSession) -> None:

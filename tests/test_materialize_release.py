@@ -61,3 +61,39 @@ def test_released_checkpoint_fails_loudly_not_silently(spark):
     release_materialized(spark, blocking=True)
     with pytest.raises(Exception):
         df.count()
+
+
+class _FakeRDD:
+    def __init__(self, error: Exception | None = None) -> None:
+        self.error, self.released = error, False
+
+    def unpersist(self, blocking: bool) -> None:
+        if self.error is not None:
+            raise self.error
+        self.released = True
+
+
+def _fake_spark(rdds):
+    from types import SimpleNamespace
+
+    jsc = SimpleNamespace(getPersistentRDDs=lambda: dict(enumerate(rdds)))
+    return SimpleNamespace(sparkContext=SimpleNamespace(_jsc=jsc))
+
+
+def test_release_failure_warns_and_counts_what_was_released():
+    """A JVM-side failure mid-sweep is loud (a RuntimeWarning naming it)
+    and the count keeps the unpersists that succeeded before it."""
+    import pytest
+    from py4j.protocol import Py4JError
+
+    rdds = [_FakeRDD(), _FakeRDD(Py4JError("unpersist failed")), _FakeRDD()]
+    with pytest.warns(RuntimeWarning, match="released 1 RDD.*unpersist failed"):
+        assert release_materialized(_fake_spark(rdds)) == 1
+    assert rdds[0].released and not rdds[2].released
+
+
+def test_release_non_jvm_errors_propagate():
+    import pytest
+
+    with pytest.raises(TypeError):
+        release_materialized(_fake_spark([_FakeRDD(TypeError("bug"))]))
