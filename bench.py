@@ -16,28 +16,28 @@ outgrew the driver's tail buffer.
 Each query executes its full plan into a noop sink (no driver-side result
 transfer — measures the engine, not collect()).
 
-Timed region (since round 13): each sample times CONSTRUCTION + EXECUTION
-(``queries[name](spark, sf_dir)`` inside the perf_counter window) because
-``session.materialize`` is an eager localCheckpoint — building the plan
-already executes every materialized subtree, and timing only the write let
-that work run off the clock. Rounds <= 12 timed the write only; the
-committed round-12 numbers are NOT directly comparable (the discontinuity
-is quantified in OPTIMIZATION_r13.md with a same-window pair of runs).
-Checkpoint storage is released after every sample
-(``session.release_materialized``), so no sample can reuse a previous
-sample's computation."""
+Timed region (since round 13): each sample is one ``session.measured``
+scope timing CONSTRUCTION + EXECUTION, because ``session.materialize`` is an
+eager localCheckpoint — building the plan already executes every
+materialized subtree, and timing only the write let that work run off the
+clock. Rounds <= 12 timed the write only; the committed round-12 numbers are
+NOT directly comparable (the discontinuity is quantified in
+OPTIMIZATION_r13.md with a same-window pair of runs). The scope releases the
+checkpoints its sample pinned, so no sample can reuse another's computation.
+``query_layers`` holds the min sample's ``build_sec``, ``exec_sec`` and
+``jobs`` (Spark jobs of its job group); ``jobs`` is their sum."""
 
 from __future__ import annotations
 
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from database_toolbox_spark.operators import all_queries
 from database_toolbox_spark.session import DEFAULT_SF_DIR, get_spark
+from database_toolbox_spark.session import measured, noop_write, warm_up
 
 HEADLINE = [
     # core SQL surface
@@ -410,54 +410,26 @@ def main() -> None:
         spark = get_spark(app_name="dts-bench")
         queries = all_queries()
 
-        # session warmup: JVM/codegen + parquet footers + one real
-        # scan/shuffle pass + Python-worker spin-up — one-time session
-        # costs, not query cost (measured: the first 2 timed queries
-        # otherwise run 2-4x their steady state even under min-of-3, and
-        # the first mapInPandas query pays ~15 s of worker forks)
-        from database_toolbox_spark.session import load_tables
-
-        for df in load_tables(spark, sf_dir).values():
-            df.limit(1).write.mode("overwrite").format("noop").save()
-        queries["pricing_summary"](spark, sf_dir).write.mode(
-            "overwrite"
-        ).format("noop").save()
-
-        def _noop_pandas(batches):
-            yield from batches
-
-        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        spark.range(n_parts * 4).repartition(n_parts).mapInPandas(
-            _noop_pandas, schema="id long"
-        ).write.mode("overwrite").format("noop").save()
-
-        from database_toolbox_spark.session import release_materialized
+        warm_up(spark, sf_dir)
 
         raw: dict[str, list[float]] = {n: [] for n in HEADLINE}
-        for _run in range(runs):
+        layers: dict[str, dict] = {}
+        for _pass in range(runs):
             for name in HEADLINE:
                 # min of 3 per pass: the shared host shows 20-40%
                 # inter-run contention swings (SCALING.md round-3 note);
                 # 2 samples were not enough to reach steady state reliably.
-                # The timed region includes query CONSTRUCTION (round-12
-                # verdict item 1): materialize() is an EAGER
-                # localCheckpoint, so building the plan executes every
-                # materialized subtree — timing only the write let that
-                # work run off the clock (copurchase_capped_pairs and
-                # personalized_pagerank timed as near-empty shells). Each
-                # sample therefore rebuilds the query from the parquet
-                # inputs and pays build + execute, and the checkpoint
-                # blocks the build pinned are released after each sample
-                # (verdict item 2) so a 1038-sample run cannot accrete
-                # executor storage.
                 for _ in range(3):
-                    t0 = time.perf_counter()
-                    df = queries[name](spark, sf_dir)
-                    df.write.mode("overwrite").format("noop").save()
-                    raw[name].append(
-                        round(time.perf_counter() - t0, 3)
-                    )
-                    release_materialized(spark)
+                    with measured(spark, name) as run:
+                        df = run.build(queries[name], spark, sf_dir)
+                        run.execute(noop_write, df)
+                    raw[name].append(round(run.seconds, 3))
+                    if raw[name][-1] <= min(raw[name]):
+                        layers[name] = {
+                            "build_sec": round(run.build_s, 3),
+                            "exec_sec": round(run.exec_s, 3),
+                            "jobs": run.jobs,
+                        }
         timings = {n: min(s) for n, s in raw.items()}
         # comparison median for the regression gate: with one pass, the
         # plain median of 3 (the historical gate); with --runs N > 1, the
@@ -479,6 +451,7 @@ def main() -> None:
         }
 
         total = round(sum(timings.values()), 3)
+        jobs = sum(q["jobs"] for q in layers.values())
         prev = prev_timings()  # read BEFORE overwriting BENCH_DETAIL.json
         regressions = compute_regressions(timings, spreads, medians, prev)
     finally:
@@ -510,6 +483,8 @@ def main() -> None:
                 "query_median_sec": medians,
                 "query_spread_sec": spreads,
                 "query_samples_sec": raw,
+                "query_layers": layers,
+                "jobs": jobs,
                 "runs": runs,
                 "regressions_vs_prev_round": regressions,
                 "window_warnings": window_warnings,
@@ -541,6 +516,7 @@ def main() -> None:
                 "detail": "BENCH_DETAIL.json",
                 "window_warnings": window_warnings,
                 "queries": top10,
+                "jobs": jobs,
                 "value": total,
             }
         )

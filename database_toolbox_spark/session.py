@@ -18,9 +18,15 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
+import itertools
 import os
 import sys
+import threading
+import time
 import warnings
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
+from dataclasses import dataclass
 from functools import lru_cache as _lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
@@ -337,58 +343,51 @@ def materialize(df: DataFrame) -> DataFrame:
     lineage (Catalyst inlines CTEs/views, so an expensive stage referenced
     N times otherwise re-runs N times).
 
-    Mode via SPARK_GRAFT_MATERIALIZE:
-    - ``local_checkpoint`` (default): eager ``localCheckpoint`` — partitions
-      land in executor block storage with no InMemoryRelation columnar
-      rebuild, measurably faster than ``cache()`` for skinny exploded
-      intermediates (MinHash shingles: ~3x at sf0.1). Executor-local, so an
-      executor loss forces a job retry — fine single-node and for batch
-      jobs that simply rerun.
-    - ``persist``: MEMORY_AND_DISK persist with recomputable lineage — the
-      resilient choice on large shared clusters with dynamic allocation /
-      spot executors; same results, slightly slower locally.
-    """
-    if os.environ.get("SPARK_GRAFT_MATERIALIZE", "local_checkpoint") == "persist":
-        from pyspark import StorageLevel  # noqa: PLC0415
+    An eager ``localCheckpoint``: ~3x faster than ``cache()`` for skinny
+    exploded intermediates, and faster than a MEMORY_AND_DISK ``persist``
+    in 10 of 12 same-window A/Bs (OPTIMIZATION_r13.md). The pinned RDD is
+    recorded under the calling thread's Spark job group (``None`` when
+    unset) for ``release_materialized``."""
+    cp = df.localCheckpoint(eager=True)
+    sc = df.sparkSession.sparkContext
+    rdd_id = cp._jdf.queryExecution().analyzed().rdd().id()
+    with _PINS_LOCK:
+        _pins(sc).setdefault(sc.getLocalProperty(_JOB_GROUP), []).append(rdd_id)
+    return cp
 
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
-        df.count()  # JVM-side action: populate the cache before reuse
-        return df
-    return df.localCheckpoint(eager=True)
+
+_JOB_GROUP = "spark.jobGroup.id"
+_PINS_LOCK = threading.Lock()
+
+
+def _pins(sc) -> dict[str | None, list[int]]:
+    """Job group -> ids of the RDDs ``materialize`` pinned under it in
+    this SparkContext and nobody has released yet."""
+    return vars(sc).setdefault("_dts_pins", {})
 
 
 def release_materialized(spark: SparkSession, blocking: bool = False) -> int:
-    """Unpersist every RDD pinned in this SparkContext's block storage and
-    return how many were released.
+    """Unpersist the checkpoints ``materialize`` pinned under the caller's
+    current Spark job group; return how many were released.
 
-    ``materialize()`` pins each checkpointed intermediate in executor
-    storage for the SESSION lifetime — nothing in Spark scopes a
-    localCheckpoint to a query. A long-lived session serving many queries
-    (the bench's 173x6 samples, driver_check's 470-query sweep, the MCP
-    server) therefore accretes every materialized subtree; the sf5 growth
-    study OOMed at 8 GB exactly this way (round-12 verdict item 2). Call
-    this BETWEEN queries, after the previous query's result is fully
-    consumed: a released localCheckpoint cannot be recomputed (lineage is
-    truncated), so any still-live DataFrame from the previous build will
-    fail loudly rather than silently rerun.
+    Without a release a long-lived session accretes every materialized
+    subtree (the sf5 growth study once OOMed at 8 GB this way). The job
+    group is the query's scope: a caller's own ``persist()`` and other
+    groups' checkpoints survive. Call it once the query's result is
+    consumed: a released checkpoint cannot be recomputed, so a live frame
+    from that query fails loudly instead of silently rerunning.
 
-    This releases ALL persistent RDDs in the context. Inside this engine
-    that is exactly the materialize() set (the only persist caller —
-    tests/test_window_gate.py-style audit: grep '\\.persist(|\\.cache('),
-    so engine-owned sessions lose nothing else; callers who persist their
-    own DataFrames should unpersist those themselves before relying on
-    this sweep.
-
-    A JVM-side failure (py4j error) mid-sweep is not fatal — cleanup runs
-    between queries — but it is loud: a RuntimeWarning names the failure
-    and the return value still counts the unpersists that succeeded
-    before it. Any other exception propagates."""
+    A py4j error mid-release warns (RuntimeWarning) and the count keeps
+    the unpersists made before it; any other exception propagates."""
     from py4j.protocol import Py4JError  # noqa: PLC0415
 
+    sc = spark.sparkContext
+    with _PINS_LOCK:
+        pinned = _pins(sc).pop(sc.getLocalProperty(_JOB_GROUP), [])
     n = 0
     try:
-        for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            jrdd.unpersist(blocking)
+        for rdd_id in pinned:
+            sc._jsc.sc().unpersistRDD(rdd_id, blocking)
             n += 1
     except Py4JError as exc:
         warnings.warn(
@@ -397,6 +396,96 @@ def release_materialized(spark: SparkSession, blocking: bool = False) -> int:
             stacklevel=2,
         )
     return n
+
+
+# the thread-local properties SparkContext.setJobGroup sets
+_GROUP_PROPS = (_JOB_GROUP, "spark.job.description", "spark.job.interruptOnCancel")
+_RUN_IDS = itertools.count()
+
+
+@dataclass
+class MeasuredRun:
+    """The record of one ``measured`` query run."""
+
+    name: str
+    build_s: float = 0.0
+    exec_s: float = 0.0
+    jobs: int = 0  # Spark jobs the run's job group ran
+    checkpoints: int = 0  # materialize pins released on exit
+    error: str | None = None  # class name of the exception that escaped
+
+    @property
+    def seconds(self) -> float:
+        return self.build_s + self.exec_s
+
+    def build(self, fn: Callable, *args):
+        """``fn(*args)`` on the build clock (``materialize`` is eager, so
+        building a plan already runs its checkpointed subtrees)."""
+        t0 = time.perf_counter()
+        try:
+            return fn(*args)
+        finally:
+            self.build_s += time.perf_counter() - t0
+
+    def execute(self, action: Callable, *args):
+        t0 = time.perf_counter()
+        try:
+            return action(*args)
+        finally:
+            self.exec_s += time.perf_counter() - t0
+
+
+@contextmanager
+def measured(spark: SparkSession, name: str) -> Iterator[MeasuredRun]:
+    """One query's lifecycle: ``with measured(spark, name) as run: df =
+    run.build(fn, spark, sf_dir); run.execute(noop_write, df)``.
+
+    The block runs under a job group of its own, which owns the query's
+    Spark jobs and ``materialize`` pins; work outside ``build``/``execute``
+    (collecting the frame for a check) is off the clock. On exit the pins
+    are released, the jobs counted and the previous group restored. An
+    escaping exception is recorded in ``run.error`` and re-raised."""
+    sc = spark.sparkContext
+    saved = [sc.getLocalProperty(key) for key in _GROUP_PROPS]
+    group = f"measured-{next(_RUN_IDS)}-{name}"
+    sc.setJobGroup(group, name)
+    run = MeasuredRun(name)
+    try:
+        yield run
+    except Exception as exc:
+        run.error = type(exc).__name__
+        raise
+    finally:
+        run.checkpoints = len(_pins(sc).get(group, ()))
+        release_materialized(spark)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are async
+        run.jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        for key, value in zip(_GROUP_PROPS, saved):
+            sc.setLocalProperty(key, value)
+
+
+def noop_write(df: DataFrame) -> None:
+    """Run ``df``'s full plan into the noop sink (no result transfer)."""
+    df.write.mode("overwrite").format("noop").save()
+
+
+def warm_up(spark: SparkSession, sf_dir: str) -> None:
+    """Pay one-time session costs before anything is timed — a scan per
+    table (parquet footers, codegen), ``pricing_summary`` (a real shuffle)
+    and a Python worker per shuffle partition (``mapInPandas``). Without
+    it the first timed queries run 2-4x their steady state and the first
+    mapInPandas query pays ~15 s of worker forks."""
+    from database_toolbox_spark.operators.tpch import pricing_summary  # noqa: PLC0415
+
+    def _batches(batches):
+        yield from batches
+
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with measured(spark, "warm-up"):
+        for df in load_tables(spark, sf_dir).values():
+            noop_write(df.limit(1))
+        noop_write(pricing_summary(spark, sf_dir))
+        noop_write(spark.range(n * 4).repartition(n).mapInPandas(_batches, "id long"))
 
 
 def ensure_session_confs(spark: SparkSession) -> None:

@@ -36,6 +36,7 @@ import duckdb
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from database_toolbox_spark.session import TABLES, get_spark, table_path
+from database_toolbox_spark.session import measured, warm_up
 
 import __spark_entry__ as entrymod
 
@@ -62,21 +63,9 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{table_path(SF_DIR, t)}')"
         )
-    # session warmup (same rationale as bench.py): parquet footers, codegen,
-    # one shuffle, Python-worker forks — one-time session costs that would
-    # otherwise be charged to the alphabetically-first queries and show up
-    # as phantom 5-8 s outliers in the sweep's slowest-query report
-    from database_toolbox_spark.session import load_tables
-
-    for df in load_tables(spark, SF_DIR).values():
-        df.limit(1).write.mode("overwrite").format("noop").save()
-
-    def _noop_pandas(batches):
-        yield from batches
-
-    spark.range(64).repartition(8).mapInPandas(
-        _noop_pandas, schema="id long"
-    ).write.mode("overwrite").format("noop").save()
+    # one-time session costs would otherwise show up as phantom 5-8 s
+    # outliers on the alphabetically-first queries in the slowest report
+    warm_up(spark, SF_DIR)
 
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -90,11 +79,12 @@ def main() -> int:
             continue
         oracle = oracles.get(name)
         try:
-            import time as _time
-
-            _t0 = _time.perf_counter()
-            sdf = queries[name](spark, SF_DIR).toPandas()
-            elapsed = round(_time.perf_counter() - _t0, 3)
+            # the scope releases the query's checkpoints on exit
+            with measured(spark, name) as run:
+                sdf = run.execute(
+                    run.build(queries[name], spark, SF_DIR).toPandas
+                )
+            elapsed = round(run.seconds, 3)
             if oracle is None:
                 results[name] = {"rows_only": len(sdf), "rows": len(sdf),
                                  "sec": elapsed}
@@ -134,13 +124,6 @@ def main() -> int:
             n_bad += 1
             results[name] = {"err": f"{type(e).__name__}: {e}"}
             print(f"{name}: ERROR {type(e).__name__}: {str(e)[:300]}", flush=True)
-        finally:
-            # the full 470-query sweep would otherwise accrete every
-            # materialized intermediate in block storage for the whole
-            # session (round-12 verdict item 2)
-            from database_toolbox_spark.session import release_materialized
-
-            release_materialized(spark)
     slow = sorted(
         ((n, r["sec"]) for n, r in results.items() if r.get("sec")),
         key=lambda x: -x[1],

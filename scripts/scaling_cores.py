@@ -21,7 +21,6 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
@@ -54,38 +53,19 @@ def worker(cpus: int) -> None:
     os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
     os.environ["SPARK_GRAFT_SHUFFLE"] = str(cpus)
     from database_toolbox_spark.operators import all_queries
-    from database_toolbox_spark.session import (
-        get_spark,
-        load_tables,
-        release_materialized,
-    )
+    from database_toolbox_spark.session import get_spark, measured, noop_write, warm_up
 
     spark = get_spark(app_name=f"core-scaling-{cpus}")
     queries = all_queries()
-    for df in load_tables(spark, BIG).values():
-        df.limit(1).write.mode("overwrite").format("noop").save()
-    queries["pricing_summary"](spark, BIG).write.mode("overwrite").format(
-        "noop"
-    ).save()
-    release_materialized(spark)
-
-    def _noop(batches):
-        yield from batches
-
-    spark.range(cpus * 4).repartition(cpus).mapInPandas(
-        _noop, schema="id long"
-    ).write.mode("overwrite").format("noop").save()
+    warm_up(spark, BIG)
 
     out = {}
     for name in QUERIES:
-        spark.sparkContext.setJobDescription(f"core-scaling: {name}")
         best = float("inf")
         for _ in range(SAMPLES):
-            t0 = time.perf_counter()
-            df = queries[name](spark, BIG)
-            df.write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
-            release_materialized(spark)
+            with measured(spark, name) as run:
+                run.execute(noop_write, run.build(queries[name], spark, BIG))
+            best = min(best, run.seconds)
         out[name] = round(best, 3)
         print(f"cores={cpus} {name}: {out[name]}", flush=True)
     print("CORES_JSON " + json.dumps(out), flush=True)

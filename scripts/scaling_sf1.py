@@ -33,12 +33,12 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from database_toolbox_spark.operators import all_queries
-from database_toolbox_spark.session import TABLES, get_spark, load_tables
+from database_toolbox_spark.session import TABLES, get_spark
+from database_toolbox_spark.session import measured, noop_write, warm_up
 
 SF_SMALL = "/root/testdata/sf0.1"
 BIG = os.environ.get("SPARK_GRAFT_SFBIG_DIR", "/tmp/sfbig")
@@ -663,62 +663,59 @@ def synthesize() -> None:
 
 
 def measure(spark, queries, sf_dir):
+    """Min-of-2 build+execute seconds per suspect, plus the facts its
+    assertion needs, read off the clock from the first sample's frame."""
+    warm_up(spark, sf_dir)
+    out = {}
+    for name, mode in SUSPECTS:
+        best = float("inf")
+        for sample in range(2):
+            with measured(spark, name) as run:
+                df = run.build(queries[name], spark, sf_dir)
+                run.execute(noop_write, df)
+                if sample == 0:
+                    out[name] = _observe(spark, df, mode)
+            best = min(best, run.seconds)
+        out[name]["sec"] = round(best, 3)
+    return out
+
+
+def _observe(spark, df, mode):
     from pyspark.sql import functions as F
 
     from database_toolbox_spark.operators.dedup import (
         simhash_band_candidate_count,
     )
 
-    from database_toolbox_spark.session import release_materialized
+    if mode == "cells":
+        # the growth metric is the examined-pair work bound
+        obs = {"rows": int(
+            df.agg(F.sum(F.col("n_vectors") * F.col("n_vectors")))
+            .collect()[0][0]
+            or 0
+        )}
+    elif mode in _COLLECT_MODES:
+        collected = df.collect()
+        obs = {"rows": len(collected), "collected": collected}
+    else:
+        obs = {"rows": df.count()}
+    if mode == "overhead":
+        # banded-join candidate volume over the CURRENT documents
+        # view (warm_up's load_tables pointed it at sf_dir)
+        obs["candidates"] = simhash_band_candidate_count(spark)
+    if mode == "decon10":
+        from database_toolbox_spark.operators.dedup import (
+            decon_contaminated_count,
+        )
 
-    for df in load_tables(spark, sf_dir).values():
-        df.limit(1).write.mode("overwrite").format("noop").save()
-    out = {}
-    for name, mode in SUSPECTS:
-        # free the previous suspect's checkpoint blocks before building
-        # the next (round-12 verdict item 2); the df built below is still
-        # live for the collects that follow
-        release_materialized(spark)
-        df = queries[name](spark, sf_dir)
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            df.write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
-        if mode == "cells":
-            # the growth metric is the examined-pair work bound
-            rows = int(
-                df.agg(F.sum(F.col("n_vectors") * F.col("n_vectors")))
-                .collect()[0][0]
-                or 0
-            )
-        elif mode in _COLLECT_MODES:
-            collected = df.collect()
-            rows = len(collected)
-        else:
-            rows = df.count()
-        out[name] = {"sec": round(best, 3), "rows": rows}
-        if mode in _COLLECT_MODES:
-            out[name]["collected"] = collected
-        if mode == "overhead":
-            # banded-join candidate volume over the CURRENT documents
-            # view (load_tables above pointed it at sf_dir)
-            out[name]["candidates"] = simhash_band_candidate_count(spark)
-        if mode == "decon10":
-            from database_toolbox_spark.operators.dedup import (
-                decon_contaminated_count,
-            )
+        obs["contam"] = decon_contaminated_count(spark)
+    if mode == "capbound":
+        from database_toolbox_spark.operators.graph import (
+            lcc_examined_pairs,
+        )
 
-            out[name]["contam"] = decon_contaminated_count(spark)
-        if mode == "capbound":
-            from database_toolbox_spark.operators.graph import (
-                lcc_examined_pairs,
-            )
-
-            examined, n_parts = lcc_examined_pairs(spark)
-            out[name]["examined"] = examined
-            out[name]["n_parts"] = n_parts
-    return out
+        obs["examined"], obs["n_parts"] = lcc_examined_pairs(spark)
+    return obs
 
 
 def main() -> int:

@@ -46,7 +46,6 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -56,7 +55,8 @@ from database_toolbox_spark.operators.similarity import (
     ivf_bq_probe_count,
     ivf_probe_count,
 )
-from database_toolbox_spark.session import TABLES, get_spark, load_tables
+from database_toolbox_spark.session import TABLES, get_spark
+from database_toolbox_spark.session import measured, noop_write, warm_up
 
 SF_SMALL = "/root/testdata/sf0.1"
 BIG = os.environ.get("SPARK_GRAFT_SF5_DIR", "/tmp/sf5big")
@@ -250,75 +250,55 @@ def synthesize() -> None:
 
 
 def measure(spark, queries, sf_dir):
-    from database_toolbox_spark.session import release_materialized
-
-    for df in load_tables(spark, sf_dir).values():
-        df.limit(1).write.mode("overwrite").format("noop").save()
+    """Min-of-2 build+execute seconds per suspect, plus the facts its
+    assertion needs, read off the clock from the first sample's frame."""
+    warm_up(spark, sf_dir)
     out = {}
     for name, mode in SUSPECTS:
-        # release the previous suspect's checkpoint blocks BEFORE building
-        # the next one (round-12 verdict item 2): without this, 13
-        # suspects' accumulated blocks OOMed the big phase at 8g and the
-        # study needed a fresh session per phase; release makes one
-        # session serve both phases. (Release-before-build, not
-        # after-measure: the df is still collected below.)
-        release_materialized(spark)
-        df = queries[name](spark, sf_dir)
         best = float("inf")
-        for _ in range(2):
-            t0 = time.perf_counter()
-            df.write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
-        if mode == "evalfloor":
-            collected = df.collect()
-            out[name] = {"sec": round(best, 3), "rows": len(collected)}
-            col = EVAL_METRIC[name]
-            out[name]["mean_metric"] = round(
-                sum(r[col] for r in collected) / max(len(collected), 1), 4
-            )
-        elif mode in ("bqfloor", "asymfloor"):
-            collected = df.collect()
-            out[name] = {"sec": round(best, 3), "rows": len(collected)}
-            by_bits: dict[int, list[float]] = {}
-            for r in collected:
-                by_bits.setdefault(r.n_bits, []).append(r.recall_at_10)
-            out[name]["level_means"] = {
-                int(b): round(sum(v) / len(v), 4)
-                for b, v in sorted(by_bits.items())
-            }
-        elif mode == "ivfbq":
-            collected = df.collect()
-            out[name] = {"sec": round(best, 3), "rows": len(collected)}
-            out[name]["mean_metric"] = round(
-                sum(r.cos_sim for r in collected)
-                / max(len(collected), 1), 4
-            )
-            out[name]["probe"] = ivf_bq_probe_count(spark)
-        elif mode == "frontier":
-            out[name] = {"sec": round(best, 3), "rows": df.count()}
-            out[name]["frontier"] = ppr_frontier_counts(spark, sf_dir)
-        elif mode == "mrlfloor":
-            collected = df.collect()
-            out[name] = {"sec": round(best, 3), "rows": len(collected)}
-            by_dim: dict[int, list[float]] = {}
-            for r in collected:
-                by_dim.setdefault(r.n_dims, []).append(r.recall_at_10)
-            out[name]["level_means"] = {
-                int(d): round(sum(v) / len(v), 4)
-                for d, v in sorted(by_dim.items())
-            }
-        elif mode == "hnmono":
-            collected = df.collect()
-            out[name] = {"sec": round(best, 3), "rows": len(collected)}
-            out[name]["mean_metric"] = round(
-                sum(r.cos_sim for r in collected)
-                / max(len(collected), 1), 6
-            )
-        else:
-            out[name] = {"sec": round(best, 3), "rows": df.count()}
-        if mode == "probe":
-            out[name]["probe"] = ivf_probe_count(spark)
+        for sample in range(2):
+            with measured(spark, name) as run:
+                df = run.build(queries[name], spark, sf_dir)
+                run.execute(noop_write, df)
+                if sample == 0:
+                    out[name] = _observe(spark, df, name, mode, sf_dir)
+            best = min(best, run.seconds)
+        out[name]["sec"] = round(best, 3)
     return out
+
+
+# per collecting mode: the column a mean is taken of (and its digits), or
+# the level column the recall@10 means are grouped by
+_MEAN_OF = {"ivfbq": ("cos_sim", 4), "hnmono": ("cos_sim", 6)}
+_LEVEL_OF = {"bqfloor": "n_bits", "asymfloor": "n_bits", "mrlfloor": "n_dims"}
+
+
+def _observe(spark, df, name, mode, sf_dir):
+    if mode not in (*_MEAN_OF, *_LEVEL_OF, "evalfloor"):
+        obs = {"rows": df.count()}
+    else:
+        collected = df.collect()
+        obs = {"rows": len(collected)}
+    if mode in _LEVEL_OF:
+        by_level: dict[int, list[float]] = {}
+        for r in collected:
+            by_level.setdefault(r[_LEVEL_OF[mode]], []).append(r.recall_at_10)
+        obs["level_means"] = {
+            int(k): round(sum(v) / len(v), 4)
+            for k, v in sorted(by_level.items())
+        }
+    elif mode in _MEAN_OF or mode == "evalfloor":
+        col, digits = _MEAN_OF.get(mode, (EVAL_METRIC.get(name), 4))
+        obs["mean_metric"] = round(
+            sum(r[col] for r in collected) / max(len(collected), 1), digits
+        )
+    if mode == "ivfbq":
+        obs["probe"] = ivf_bq_probe_count(spark)
+    elif mode == "probe":
+        obs["probe"] = ivf_probe_count(spark)
+    elif mode == "frontier":
+        obs["frontier"] = ppr_frontier_counts(spark, sf_dir)
+    return obs
 
 
 def main() -> int:
@@ -326,13 +306,9 @@ def main() -> int:
         "SPARK_GRAFT_SF5_REBUILD"
     ):
         synthesize()
-    # 50x corpora: ONE session serves both phases now that measure()
-    # releases each suspect's checkpoint blocks via
-    # session.release_materialized (round-12 verdict item 2 — the old
-    # fresh-session-per-phase workaround existed because accumulated
-    # blocks OOMed the big phase at 8g). The larger default heap stays:
-    # a single 50x suspect's working set is legitimately bigger than the
-    # 8g query-session default.
+    # one session serves both phases because every measured scope
+    # releases its checkpoints; a single 50x suspect's working set still
+    # needs more than the 8g query-session default heap
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "24g")
     spark = get_spark(app_name="scaling-sf5")
     queries = all_queries()

@@ -10,12 +10,11 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from database_toolbox_spark.operators import all_queries
-from database_toolbox_spark.session import get_spark, load_tables
+from database_toolbox_spark.session import get_spark, measured, noop_write, warm_up
 
 SF_SMALL = "/root/testdata/sf0.01"
 SF_BIG = "/root/testdata/sf0.1"
@@ -23,18 +22,15 @@ DATA_RATIO = 10.0
 
 
 def run_all(spark, sf_dir: str) -> dict[str, float]:
-    for df in load_tables(spark, sf_dir).values():
-        df.limit(1).write.mode("overwrite").format("noop").save()
+    warm_up(spark, sf_dir)
     out: dict[str, float] = {}
     for name, fn in sorted(all_queries().items()):
-        df = fn(spark, sf_dir)
         best = float("inf")
         for _ in range(2):
-            t0 = time.perf_counter()
-            df.write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
+            with measured(spark, name) as run:
+                run.execute(noop_write, run.build(fn, spark, sf_dir))
+            best = min(best, run.seconds)
         out[name] = best
-        spark.catalog.clearCache()
     return out
 
 
@@ -333,8 +329,8 @@ def main() -> None:
     with open("SCALING.md", "w") as f:
         f.write(
             "# SCALING — per-query runtime vs data growth\n\n"
-            "Generated by `python scripts/scaling_study.py`: min-of-2 wall\n"
-            f"seconds per query at sf0.01 and sf0.1 (10x rows), local[32].\n\n"
+            "Generated by `python scripts/scaling_study.py`: min-of-2 build+\n"
+            "execute seconds per query at sf0.01 and sf0.1 (10x rows), local[32].\n\n"
             "Reading: at these sizes most queries are fixed-overhead bound\n"
             "(scheduling + stage launch ~0.2-0.5 s), so time_ratio well BELOW\n"
             "10 means the data term is not yet dominant. time_ratio NEAR or\n"

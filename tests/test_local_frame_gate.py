@@ -1,4 +1,4 @@
-"""Driver-local rows gate (no Spark).
+"""Driver-local rows and block-storage gates (no Spark).
 
 ``session.local_frame`` is the package's only way to turn Python rows
 into a DataFrame: it ships an Arrow table to the JVM as a
@@ -10,6 +10,12 @@ built over it, such as a docstore write overlay) then pipes
 This gate audits the package source: every ``createDataFrame(`` call must
 sit inside ``local_frame``, and nothing may call ``parallelize(``. A new
 site fails here until it goes through the helper.
+
+The same audit covers block storage: ``session.materialize`` is the only
+place that may call ``localCheckpoint``, ``persist``, ``cache`` or
+``checkpoint``. It records each pin under the caller's job group, which is
+what lets ``release_materialized`` free a query's storage without touching
+anyone else's; a pin made anywhere else would never be released.
 """
 
 import ast
@@ -24,14 +30,18 @@ PKG = os.path.join(
 # (file, enclosing function) -> reviewed createDataFrame call count
 ALLOWED = {("session.py", "local_frame"): 1}
 BANNED = ("createDataFrame", "parallelize")
+# (file, enclosing function) -> reviewed block-storage call count
+STORAGE_ALLOWED = {("session.py", "materialize"): 1}
+STORAGE = ("localCheckpoint", "persist", "cache", "checkpoint")
 
 
 class _Sites(ast.NodeVisitor):
-    """Collects (file, enclosing function, method) for every call of a
-    BANNED method name."""
+    """Collects (file, enclosing function, method) for every call of one
+    of the ``methods``."""
 
-    def __init__(self, rel: str) -> None:
-        self.rel, self.owner, self.found = rel, "<module>", []
+    def __init__(self, rel: str, methods: tuple[str, ...]) -> None:
+        self.rel, self.methods = rel, methods
+        self.owner, self.found = "<module>", []
 
     def visit_FunctionDef(self, node) -> None:
         outer, self.owner = self.owner, node.name
@@ -41,21 +51,21 @@ class _Sites(ast.NodeVisitor):
     visit_AsyncFunctionDef = visit_FunctionDef
 
     def visit_Call(self, node: ast.Call) -> None:
-        if isinstance(node.func, ast.Attribute) and node.func.attr in BANNED:
+        if isinstance(node.func, ast.Attribute) and node.func.attr in self.methods:
             self.found.append((self.rel, self.owner, node.func.attr))
         self.generic_visit(node)
 
 
-def _calls():
+def _calls(methods: tuple[str, ...]):
     for path in sorted(glob.glob(f"{PKG}/**/*.py", recursive=True)):
-        sites = _Sites(os.path.relpath(path, PKG))
+        sites = _Sites(os.path.relpath(path, PKG), methods)
         sites.visit(ast.parse(open(path).read(), filename=path))
         yield from sites.found
 
 
 def test_local_rows_go_through_local_frame():
     got: dict[tuple[str, str], int] = {}
-    for rel, owner, attr in _calls():
+    for rel, owner, attr in _calls(BANNED):
         assert attr != "parallelize", (
             f"{rel}:{owner} calls parallelize — build driver-local rows "
             "with session.local_frame"
@@ -64,4 +74,14 @@ def test_local_rows_go_through_local_frame():
     assert got == ALLOWED, (
         f"createDataFrame call sites changed: {got} — build driver-local "
         "rows with session.local_frame instead"
+    )
+
+
+def test_block_storage_goes_through_materialize():
+    got: dict[tuple[str, str], int] = {}
+    for rel, owner, _ in _calls(STORAGE):
+        got[(rel, owner)] = got.get((rel, owner), 0) + 1
+    assert got == STORAGE_ALLOWED, (
+        f"block-storage call sites changed: {got} — pin intermediates "
+        "with session.materialize, which scopes them to the job group"
     )

@@ -7,6 +7,8 @@ before per-query release existed)."""
 
 from database_toolbox_spark.session import (
     materialize,
+    measured,
+    noop_write,
     release_materialized,
 )
 from tests.conftest import SF_DIR
@@ -63,37 +65,173 @@ def test_released_checkpoint_fails_loudly_not_silently(spark):
         df.count()
 
 
-class _FakeRDD:
-    def __init__(self, error: Exception | None = None) -> None:
-        self.error, self.released = error, False
+class _FakeJvmContext:
+    """Stands in for the JVM SparkContext: ``unpersistRDD`` raises the
+    error planted for an id and records every id it released."""
 
-    def unpersist(self, blocking: bool) -> None:
-        if self.error is not None:
-            raise self.error
-        self.released = True
+    def __init__(self, errors: dict[int, Exception]) -> None:
+        self.errors, self.released = errors, []
+
+    def unpersistRDD(self, rdd_id: int, blocking: bool) -> None:
+        if rdd_id in self.errors:
+            raise self.errors[rdd_id]
+        self.released.append(rdd_id)
 
 
-def _fake_spark(rdds):
+def _fake_spark(jvm: _FakeJvmContext, pinned: list[int]):
+    """A session whose caller (no job group) has ``pinned`` registered."""
     from types import SimpleNamespace
 
-    jsc = SimpleNamespace(getPersistentRDDs=lambda: dict(enumerate(rdds)))
-    return SimpleNamespace(sparkContext=SimpleNamespace(_jsc=jsc))
+    sc = SimpleNamespace(
+        getLocalProperty=lambda key: None,
+        _dts_pins={None: list(pinned)},
+        _jsc=SimpleNamespace(sc=lambda: jvm),
+    )
+    return SimpleNamespace(sparkContext=sc)
 
 
 def test_release_failure_warns_and_counts_what_was_released():
-    """A JVM-side failure mid-sweep is loud (a RuntimeWarning naming it)
+    """A JVM-side failure mid-release is loud (a RuntimeWarning naming it)
     and the count keeps the unpersists that succeeded before it."""
     import pytest
     from py4j.protocol import Py4JError
 
-    rdds = [_FakeRDD(), _FakeRDD(Py4JError("unpersist failed")), _FakeRDD()]
+    jvm = _FakeJvmContext({1: Py4JError("unpersist failed")})
     with pytest.warns(RuntimeWarning, match="released 1 RDD.*unpersist failed"):
-        assert release_materialized(_fake_spark(rdds)) == 1
-    assert rdds[0].released and not rdds[2].released
+        assert release_materialized(_fake_spark(jvm, [0, 1, 2])) == 1
+    assert jvm.released == [0]
 
 
 def test_release_non_jvm_errors_propagate():
     import pytest
 
+    jvm = _FakeJvmContext({0: TypeError("bug")})
     with pytest.raises(TypeError):
-        release_materialized(_fake_spark([_FakeRDD(TypeError("bug"))]))
+        release_materialized(_fake_spark(jvm, [0]))
+
+
+def _clear_job_group(sc) -> None:
+    for key in ("spark.jobGroup.id", "spark.job.description",
+                "spark.job.interruptOnCancel"):
+        sc.setLocalProperty(key, None)
+
+
+def test_release_is_scoped_to_the_callers_job_group(spark, ddb):
+    """Two materialize-heavy queries built under two job groups in one
+    session, interleaved: releasing the first group's pins leaves the
+    second query's checkpoints alone, so it still executes and matches its
+    oracle."""
+    from database_toolbox_spark.operators import all_oracles
+    from database_toolbox_spark.operators.dedup import fuzzy_decontamination
+    from database_toolbox_spark.operators.graph import personalized_pagerank
+    from tests.conftest import compare_with_oracle
+
+    sc = spark.sparkContext
+    start, built = _n_persistent(spark), {}
+    try:
+        for fn in (fuzzy_decontamination, personalized_pagerank):
+            sc.setJobGroup(fn.__name__, fn.__name__)
+            before = _n_persistent(spark)
+            built[fn.__name__] = fn(spark, SF_DIR)
+            assert _n_persistent(spark) > before, fn.__name__
+        pinned = _n_persistent(spark)
+        sc.setJobGroup("fuzzy_decontamination", "release")
+        released = release_materialized(spark, blocking=True)
+        assert released > 0
+        assert _n_persistent(spark) == pinned - released
+        sc.setJobGroup("personalized_pagerank", "execute")
+        compare_with_oracle(
+            spark, ddb, lambda *_: built["personalized_pagerank"],
+            all_oracles()["personalized_pagerank"],
+        )
+        assert release_materialized(spark, blocking=True) > 0
+    finally:
+        _clear_job_group(sc)
+    assert _n_persistent(spark) == start
+
+
+def test_concurrent_callers_release_only_their_own_pins(spark):
+    """Threads each pin and release under their own job group (PySpark
+    keeps local properties per thread): a release frees exactly its own
+    thread's pins, so it never breaks another thread's live query."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    n_threads = 8
+    barrier = threading.Barrier(n_threads, timeout=120)
+
+    def query(i: int) -> tuple[int, int]:
+        sc = spark.sparkContext
+        sc.setJobGroup(f"thread-{i}", "concurrent release")
+        try:
+            frames = [materialize(spark.range(10 * i + k)) for k in range(3)]
+            barrier.wait()  # every thread has pinned before any releases
+            rows = sum(f.count() for f in frames)
+            return release_materialized(spark, blocking=True), rows
+        finally:
+            _clear_job_group(sc)
+
+    before = _n_persistent(spark)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=n_threads) as pool:
+            futures = [pool.submit(query, i) for i in range(n_threads)]
+            results = [f.result(timeout=300) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert results == [(3, 30 * i + 3) for i in range(n_threads)]
+    assert _n_persistent(spark) == before
+
+
+def test_callers_own_persist_survives_release(spark):
+    from pyspark import StorageLevel
+
+    own = spark.table("region").persist()
+    try:
+        own.count()
+        before = _n_persistent(spark)
+        materialize(spark.table("nation"))
+        assert release_materialized(spark, blocking=True) == 1
+        assert _n_persistent(spark) == before
+        assert own.storageLevel != StorageLevel.NONE
+    finally:
+        own.unpersist(blocking=True)
+
+
+def test_measured_records_a_query_and_releases_its_pins(spark):
+    from database_toolbox_spark.operators.graph import personalized_pagerank
+
+    sc = spark.sparkContext
+    before = _n_persistent(spark)
+    with measured(spark, "ppr") as run:
+        df = run.build(personalized_pagerank, spark, SF_DIR)
+        assert _n_persistent(spark) > before
+        run.execute(noop_write, df)
+    assert run.name == "ppr" and run.error is None
+    assert run.build_s > 0 and run.exec_s > 0
+    assert run.jobs >= 1 and run.checkpoints > 0
+    assert _n_persistent(spark) == before
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+
+
+def test_measured_records_a_failed_build_and_still_releases(spark):
+    import pytest
+
+    def broken_build(spark, sf_dir):
+        materialize(spark.table("region"))
+        raise ValueError("broken build")
+
+    sc = spark.sparkContext
+    before = _n_persistent(spark)
+    try:
+        sc.setJobGroup("outer", "caller's own group")
+        with pytest.raises(ValueError, match="broken build"):
+            with measured(spark, "broken") as run:
+                run.build(broken_build, spark, SF_DIR)
+        assert sc.getLocalProperty("spark.jobGroup.id") == "outer"
+    finally:
+        _clear_job_group(sc)
+    assert run.error == "ValueError" and run.checkpoints == 1
+    assert _n_persistent(spark) == before
