@@ -24,8 +24,9 @@ clock. Rounds <= 12 timed the write only; the committed round-12 numbers are
 NOT directly comparable (the discontinuity is quantified in
 OPTIMIZATION_r13.md with a same-window pair of runs). The scope releases the
 checkpoints its sample pinned, so no sample can reuse another's computation.
-``query_layers`` holds the min sample's ``build_sec``, ``exec_sec`` and
-``jobs`` (Spark jobs of its job group); ``jobs`` is their sum."""
+``query_layers`` holds the min sample's ``build_sec``, ``exec_sec``,
+``jobs``, ``stages`` and ``tasks`` (the Spark work of its job group); the
+top-level ``jobs`` sums the per-query jobs."""
 
 from __future__ import annotations
 
@@ -429,6 +430,8 @@ def main() -> None:
                             "build_sec": round(run.build_s, 3),
                             "exec_sec": round(run.exec_s, 3),
                             "jobs": run.jobs,
+                            "stages": run.stages,
+                            "tasks": run.tasks,
                         }
         timings = {n: min(s) for n, s in raw.items()}
         # comparison median for the regression gate: with one pass, the

@@ -137,6 +137,33 @@ def _typed_id(
     return out
 
 
+def _parse_paths(document_paths: str) -> list[str]:
+    """A JSON array of document paths, or a CSV of them; empty is an
+    error."""
+    try:
+        paths = json.loads(document_paths)
+        if not isinstance(paths, list):
+            raise ValueError
+        paths = [str(p) for p in paths]
+    except (json.JSONDecodeError, ValueError):
+        paths = [p.strip() for p in document_paths.split(",") if p.strip()]
+    if not paths:
+        raise ValueError("document_paths is empty")
+    return paths
+
+
+def _key_pred(id_cols: tuple[str, ...], keys: list[list[Any]]):
+    """True for rows whose key columns equal any of `keys` (an OR of
+    per-key ANDs over typed literals, pushdown-eligible)."""
+    pred = F.lit(False)
+    for key in keys:
+        conj = F.lit(True)
+        for c, v in zip(id_cols, key):
+            conj = conj & (F.col(c) == F.lit(v))
+        pred = pred | conj
+    return pred
+
+
 def get_documents(spark: SparkSession, document_paths: str) -> DataFrame:
     """Upstream `firestore-get-documents`: fetch documents by path.
 
@@ -153,15 +180,7 @@ def get_documents(spark: SparkSession, document_paths: str) -> DataFrame:
     broadcast-joined relation, never a driver-side loop over lookups."""
     from pyspark.sql import types as T  # noqa: PLC0415
 
-    try:
-        paths = json.loads(document_paths)
-        if not isinstance(paths, list):
-            raise ValueError
-        paths = [str(p) for p in paths]
-    except (json.JSONDecodeError, ValueError):
-        paths = [p.strip() for p in document_paths.split(",") if p.strip()]
-    if not paths:
-        raise ValueError("document_paths is empty")
+    paths = _parse_paths(document_paths)
 
     by_coll: dict[str, list[list[Any]]] = {}
     schemas: dict[str, dict[str, str]] = {}
@@ -187,12 +206,7 @@ def get_documents(spark: SparkSession, document_paths: str) -> DataFrame:
         if len(id_cols) == 1:
             pred = F.col(id_cols[0]).isin([k[0] for k in keys])
         else:
-            pred = F.lit(False)
-            for key in keys:
-                conj = F.lit(True)
-                for c, v in zip(id_cols, key):
-                    conj = conj & (F.col(c) == F.lit(v))
-                pred = pred | conj
+            pred = _key_pred(id_cols, keys)
         # a path denotes AT MOST ONE document: if the declared key is
         # non-unique in the backing table (the fixture's lineitem has
         # up-to-5x duplicate (l_orderkey, l_linenumber)), collapse to the
@@ -228,6 +242,21 @@ def get_documents(spark: SparkSession, document_paths: str) -> DataFrame:
         .orderBy("req_order")
         .select("doc_path", "found", "data")
     )
+
+
+def _collection(spark: SparkSession, collection: str):
+    """The collection's registered view and its column -> DataType map;
+    unknown or unregistered collections raise ValueError."""
+    if collection not in COLLECTION_IDS:
+        raise ValueError(
+            f"unknown collection {collection!r}; collections: "
+            f"{sorted(COLLECTION_IDS)}"
+        )
+    if not _registered(spark, collection):
+        raise ValueError(f"collection {collection!r} is not registered")
+    df = spark.table(collection)
+    types = {f.name: f.dataType for f in df.schema.fields}
+    return df, types
 
 
 def _typed_lit(types: dict, field: str, value: Any):
@@ -311,15 +340,7 @@ def query_collection(
     compile to a KEYSET predicate (>= / > ascending, <= / < descending) —
     pushed to the scan like any filter, so page N costs the same as page
     1; no OFFSET-style skip-scan anywhere."""
-    if collection not in COLLECTION_IDS:
-        raise ValueError(
-            f"unknown collection {collection!r}; collections: "
-            f"{sorted(COLLECTION_IDS)}"
-        )
-    if not _registered(spark, collection):
-        raise ValueError(f"collection {collection!r} is not registered")
-    df = spark.table(collection)
-    types = {f.name: f.dataType for f in df.schema.fields}
+    df, types = _collection(spark, collection)
     df = _apply_filters(df, types, filters, collection)
 
     if start_at and start_after:
@@ -397,15 +418,7 @@ def aggregate_collection(
     scalar per aggregate per partition) — the server never pages document
     data to compute a count, which is the entire point of Firestore's
     server-side aggregation surface."""
-    if collection not in COLLECTION_IDS:
-        raise ValueError(
-            f"unknown collection {collection!r}; collections: "
-            f"{sorted(COLLECTION_IDS)}"
-        )
-    if not _registered(spark, collection):
-        raise ValueError(f"collection {collection!r} is not registered")
-    df = spark.table(collection)
-    types = {f.name: f.dataType for f in df.schema.fields}
+    df, types = _collection(spark, collection)
     df = _apply_filters(df, types, filters, collection)
 
     spec = json.loads(aggregations)
@@ -575,19 +588,6 @@ def _coerce_row(types: dict, doc: dict, collection: str) -> dict:
     return out
 
 
-def _overlay_base(spark: SparkSession, collection: str):
-    if collection not in COLLECTION_IDS:
-        raise ValueError(
-            f"unknown collection {collection!r}; collections: "
-            f"{sorted(COLLECTION_IDS)}"
-        )
-    if not _registered(spark, collection):
-        raise ValueError(f"collection {collection!r} is not registered")
-    df = spark.table(collection)
-    types = {f.name: f.dataType for f in df.schema.fields}
-    return df, types
-
-
 def add_documents(
     spark: SparkSession, collection: str, documents: str
 ) -> DataFrame:
@@ -600,7 +600,7 @@ def add_documents(
     a Python worker."""
     if not _writes_enabled(spark):
         _deny("add_documents")
-    df, types = _overlay_base(spark, collection)
+    df, types = _collection(spark, collection)
     docs = json.loads(documents)
     if not isinstance(docs, list):
         docs = [docs]
@@ -643,7 +643,7 @@ def update_document(
             f"document_path {document_path!r} is not in collection "
             f"{collection!r}"
         )
-    df, types = _overlay_base(spark, collection)
+    df, types = _collection(spark, collection)
     schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     key = _typed_id(collection, raw, schema)
     id_cols = COLLECTION_IDS[collection]
@@ -651,9 +651,7 @@ def update_document(
     for k in id_cols:
         if k in upd:
             raise ValueError(f"cannot update key field {k!r}")
-    pred = F.lit(True)
-    for c, v in zip(id_cols, key):
-        pred = pred & (F.col(c) == F.lit(v))
+    pred = _key_pred(id_cols, [key])
     n = df.where(pred).count()
     out = df.select(*[
         F.when(pred, F.lit(upd[c]).cast(types[c])).otherwise(F.col(c))
@@ -684,31 +682,19 @@ def delete_documents(
     per requested path."""
     if not _writes_enabled(spark):
         _deny("delete_documents")
-    df, types = _overlay_base(spark, collection)
-    try:
-        paths = json.loads(document_paths)
-        if not isinstance(paths, list):
-            raise ValueError
-        paths = [str(p) for p in paths]
-    except (json.JSONDecodeError, ValueError):
-        paths = [p.strip() for p in document_paths.split(",") if p.strip()]
-    if not paths:
-        raise ValueError("document_paths is empty")
+    df, types = _collection(spark, collection)
+    paths = _parse_paths(document_paths)
     schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     id_cols = COLLECTION_IDS[collection]
-    pred = F.lit(False)
+    keys = []
     for p in paths:
         coll, _, raw = p.partition("/")
         if coll != collection or not raw:
             raise ValueError(
                 f"document_path {p!r} is not in collection {collection!r}"
             )
-        key = _typed_id(collection, raw, schema)
-        conj = F.lit(True)
-        for c, v in zip(id_cols, key):
-            conj = conj & (F.col(c) == F.lit(v))
-        pred = pred | conj
-    df.where(~pred).createOrReplaceTempView(collection)
+        keys.append(_typed_id(collection, raw, schema))
+    df.where(~_key_pred(id_cols, keys)).createOrReplaceTempView(collection)
     _persist_overlay(spark, collection)
     from pyspark.sql import types as T  # noqa: PLC0415
 

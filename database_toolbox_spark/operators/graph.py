@@ -1,27 +1,33 @@
-"""Graph analytics over the star schema: weighted PageRank by distributed
-power iteration.
+"""Graph analytics over the star schema: PageRank and its personalized
+variant, BFS, k-core, label propagation, HITS, shortest paths, triangle and
+clustering counts, link prediction and temporal churn.
 
-Complements clustering.py (iterative k-means) and dedup.dup_clusters
-(connected components) in the iterative-algorithm tier: each iteration is
-edges ⋈ ranks → groupBy(dst) → re-join — pure DataFrame ops, one shuffle per
-iteration on the edge key, no driver-side graph (SURVEY.md §7 extension
-tier).
+The Spark-side graphs come from three edge families:
 
-Graph: undirected bipartite supplier↔customer, edge weight = number of
-lineitems shipped (supplier side) on the customer's orders. Undirected (both
-edge directions materialized) so every node has out-degree — no dangling-mass
-correction needed and the oracle stays pure SQL.
+- **Trade edges** — supplier↔customer, one row per (l_suppkey, o_custkey)
+  pair with its lineitem count `n`, built by ONE function, `_trade_edges`,
+  and checkpointed once per query. Every consumer derives its weights
+  (`w = n` for pagerank/ppr/HITS, `w6 = 1e6 // n` for sssp) and its
+  `s<k>`/`c<k>` string node ids (`_node_ids`) from that checkpoint;
+  `_undirected` adds the reverse edges. HITS iterates on the raw keys.
+- **Capped co-purchase** — customer pairs sharing parts, each part's
+  customer list capped before pairing (`_capped_pairs_sql`): local
+  clustering, link prediction and `copurchase_capped_pairs`.
+- **Churn** — (month, supplier, customer) occurrences (`_EDGE_CHURN_ET`)
+  for the month-over-month edge churn report.
 
-Scale notes (100 TB design): the edge list is the fact-table aggregation
-(one shuffle), then each of the K iterations shuffles rank mass on src —
-the classic Pregel-as-joins plan. Ranks stay (node, double) — memory per
-executor is O(|V|/partitions); the iteration count is fixed (K=3), so the
-lineage stays shallow and AQE re-plans each join with fresh statistics.
+Oracles stay independent all-SQL formulations of the same relations.
+
+Iterative algorithms are Pregel-as-joins: each iteration is edges ⋈ state
+→ groupBy → re-join — pure DataFrame ops, one shuffle per iteration on the
+edge key, no driver-side graph (SURVEY.md §7 extension tier). Iteration
+counts are fixed, so the lineage stays shallow and AQE re-plans each join
+with fresh statistics.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from database_toolbox_spark.functions import bounded_rank_window
@@ -31,25 +37,56 @@ DAMPING = 0.85
 ITERATIONS = 3
 
 
-def _edges(spark: SparkSession) -> DataFrame:
-    """Undirected weighted bipartite edges: s<k> ↔ c<k>, weight = lineitem
-    count between supplier and ordering customer. The DIRECTED relation
-    checkpoints before the symmetrizing union — the union reads it twice,
-    so the lazy form ran the fact join + aggregation twice in every
-    consumer's build (pagerank, personalized_pagerank)."""
+def _trade_edges(spark: SparkSession, min_count: int = 1) -> DataFrame:
+    """The supplier↔customer trade relation over the registered
+    `lineitem`/`orders` views: (l_suppkey, o_custkey, n = lineitem count),
+    pairs with n < `min_count` dropped BEFORE the one checkpoint (at sf0.1
+    only 12,946 of 586,871 pairs have n >= 2). Every consumer reads it
+    several times (the symmetrizing union, each iteration), so the fact
+    join runs once per query; this checkpoint is the only one the edge
+    relation gets."""
     li = spark.table("lineitem")
     orders = spark.table("orders")
-    base = materialize(
+    return materialize(
         li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy(
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("dst"),
-        )
-        .agg(F.count("*").cast("double").alias("w"))
+        .groupBy("l_suppkey", "o_custkey")
+        .agg(F.count("*").alias("n"))
+        .where(F.col("n") >= min_count)
     )
-    return base.unionByName(
-        base.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
+
+
+def _node_ids(trade: DataFrame, *cols: Column) -> DataFrame:
+    """Trade edges with the contract's string node ids, src = 's<suppkey>'
+    and dst = 'c<custkey>', plus `cols` — the one place ids are rendered."""
+    return trade.select(
+        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
+        F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("dst"),
+        *cols,
     )
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """`edges` UNION ALL its reverse (src and dst swapped, other columns
+    kept)."""
+    rest = [c for c in edges.columns if c not in ("src", "dst")]
+    reverse = edges.select(
+        F.col("dst").alias("src"), F.col("src").alias("dst"), *rest
+    )
+    return edges.unionByName(reverse)
+
+
+def _transition(spark: SparkSession) -> DataFrame:
+    """Normalized transition edges (src, dst, p = w / out-weight(src)) of
+    the undirected trade graph, w = lineitem count. Materialized: every
+    power iteration re-reads them, and materializing raw edges instead
+    would re-run the out-weight join per round."""
+    edges = _undirected(
+        _node_ids(_trade_edges(spark), F.col("n").cast("double").alias("w"))
+    )
+    out_w = edges.groupBy("src").agg(F.sum("w").alias("wout"))
+    return materialize(edges.join(out_w, "src").select(
+        "src", "dst", (F.col("w") / F.col("wout")).alias("p")
+    ))
 
 
 def pagerank_top_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -62,15 +99,10 @@ def pagerank_top_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def pagerank_from_views(spark: SparkSession) -> DataFrame:
     """PageRank over whatever `lineitem`/`orders` views are registered —
-    split out so stress tests can run it against replicated inputs."""
-    edges = _edges(spark)
-    out_w = edges.groupBy("src").agg(F.sum("w").alias("wout"))
-    # materialize the NORMALIZED transition edges — they are what every
-    # iteration re-reads; materializing raw edges instead would re-run the
-    # out-weight join per round
-    norm = materialize(edges.join(out_w, "src").select(
-        "src", "dst", (F.col("w") / F.col("wout")).alias("p")
-    ))
+    split out so stress tests can run it against replicated inputs.
+    Graph: the undirected weighted trade graph (every node has out-degree,
+    so no dangling-mass correction is needed)."""
+    norm = _transition(spark)
     nodes = norm.select("src").distinct()
     n_nodes = nodes.count()  # scalar graph size: drives the teleport term
     ranks = nodes.select("src", F.lit(1.0 / n_nodes).alias("r"))
@@ -201,8 +233,6 @@ def event_type_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     for each of its five references — 11 events scans in the physical
     plan) — the co-transition graph is ≤C(|event types|, 2) rows, so the
     checkpoint is tiny while the triangle joins run over it for free."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     edges = materialize(
         spark.sql("""
@@ -241,14 +271,10 @@ def event_type_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """)
 
 
-_BFS_SQL = """
+def _bfs_sql(base_src: str) -> str:
+    return f"""
         WITH RECURSIVE
-        base AS (
-            SELECT concat('s', CAST(l.l_suppkey AS VARCHAR(30))) AS src,
-                   concat('c', CAST(o.o_custkey AS VARCHAR(30))) AS dst
-            FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-            GROUP BY 1, 2
-        ),
+        base AS ({base_src}),
         edges AS (
             SELECT src, dst FROM base
             UNION ALL
@@ -272,6 +298,14 @@ _BFS_SQL = """
 """
 
 
+_BFS_SQL = _bfs_sql("""
+            SELECT concat('s', CAST(l.l_suppkey AS VARCHAR(30))) AS src,
+                   concat('c', CAST(o.o_custkey AS VARCHAR(30))) AS dst
+            FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+            GROUP BY 1, 2
+        """)
+
+
 def bfs_reachable_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded BFS via RECURSIVE CTE (Spark 4 `WITH RECURSIVE`,
     SPARK-24497): 2-hop neighborhood of the lexicographically-first node in
@@ -286,30 +320,13 @@ def bfs_reachable_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     transitive closure would dedup the frontier per level instead).
     The oracle runs the identical one-statement SQL (DuckDB also speaks
     WITH RECURSIVE and materializes multiply-referenced CTEs); Spark-side
-    the bipartite edge relation is MATERIALIZED first — Catalyst inlines
-    CTEs, so the lineitem-join-orders distinct would otherwise replay at
-    every recursion level plus the min-src scalar subquery (4 corpus-grain
+    the base relation is the checkpointed trade edges — Catalyst inlines
+    CTEs, so a lazy lineitem-join-orders distinct would replay at every
+    recursion level plus the min-src scalar subquery (4 corpus-grain
     joins for a 2-hop walk)."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
-    materialize(spark.sql("""
-        SELECT concat('s', CAST(l.l_suppkey AS VARCHAR(30))) AS src,
-               concat('c', CAST(o.o_custkey AS VARCHAR(30))) AS dst
-        FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        GROUP BY 1, 2
-    """)).createOrReplaceTempView("bfs_base_v")
-    spark_sql = _BFS_SQL.replace(
-        """base AS (
-            SELECT concat('s', CAST(l.l_suppkey AS VARCHAR(30))) AS src,
-                   concat('c', CAST(o.o_custkey AS VARCHAR(30))) AS dst
-            FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-            GROUP BY 1, 2
-        ),""",
-        "base AS (SELECT * FROM bfs_base_v),",
-    )
-    assert "bfs_base_v" in spark_sql, "BFS base CTE shape drifted"
-    return spark.sql(spark_sql)
+    _node_ids(_trade_edges(spark)).createOrReplaceTempView("bfs_base_v")
+    return spark.sql(_bfs_sql("SELECT src, dst FROM bfs_base_v"))
 
 
 QUERIES = {
@@ -351,15 +368,10 @@ def kcore_rounds_from_edges(
     Scale shape: per round = one grouped degree count + two semi-joins on
     the node key — the same shuffle budget as a pagerank iteration; each
     level is materialized so lineage stays flat. Peeling depth is
-    data-bounded (degeneracy ordering), not corpus-bounded."""
-    # checkpoint the DIRECTED edges first: the symmetrizing union reads
-    # them twice, so materializing the union off the lazy fact join ran
-    # that join twice per build
-    base = materialize(edges.selectExpr("src", "dst"))
-    sym = base.unionByName(
-        base.selectExpr("dst AS src", "src AS dst")
-    ).distinct()
-    cur = materialize(sym)
+    data-bounded (degeneracy ordering), not corpus-bounded. The
+    symmetrizing union reads `edges` twice, so they should be a
+    checkpoint already — `_trade_edges` owns that checkpoint."""
+    cur = materialize(_undirected(edges.select("src", "dst")).distinct())
     rows = [(0, cur.selectExpr("src").distinct().count(), cur.count() // 2)]
     for rnd in range(1, KCORE_MAX_ROUNDS + 1):
         deg = cur.groupBy("src").count()
@@ -383,7 +395,9 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes, edges) trajectory. The standard graph-density screen before
     community detection / influence analysis."""
     load_tables(spark, sf_dir)
-    return kcore_rounds_from_edges(spark, spark.sql(_KCORE_EDGE_SQL))
+    return kcore_rounds_from_edges(
+        spark, _node_ids(_trade_edges(spark, KCORE_MIN_W))
+    )
 
 
 def _kcore_oracle() -> str:
@@ -460,17 +474,13 @@ def lpa_labels_from_edges(
     so tests can drive synthetic graphs directly.
 
     Only the multiply-referenced relations checkpoint: the DIRECTED
-    edges (the symmetrizing union reads them twice — materializing the
-    union off the lazy fact join ran that join twice) and the
-    symmetrized relation (read by every round plus the label seed). The
-    label chain itself stays LAZY — each round's labels feed only the
-    next round and consumers run one action, so nothing is recomputed
-    and no per-round checkpoint job is paid."""
-    base = materialize(edges.selectExpr("src", "dst"))
-    sym = materialize(
-        base.unionByName(base.selectExpr("dst AS src", "src AS dst"))
-        .distinct()
-    )
+    edges, read twice by the symmetrizing union — `_trade_edges` owns
+    that checkpoint — and the symmetrized relation here (read by every
+    round plus the label seed). The label chain itself stays LAZY — each
+    round's labels feed only the next round and consumers run one
+    action, so nothing is recomputed and no per-round checkpoint job is
+    paid."""
+    sym = materialize(_undirected(edges.select("src", "dst")).distinct())
     labels = sym.selectExpr("src AS node").distinct().withColumn(
         "label", F.col("node")
     )
@@ -495,7 +505,9 @@ def label_propagation_communities(
     The histogram tail is a two-level grouped aggregate. No driver-side
     graph state; rounds are fixed, not data-dependent."""
     load_tables(spark, sf_dir)
-    labels = lpa_labels_from_edges(spark.sql(_KCORE_EDGE_SQL))
+    labels = lpa_labels_from_edges(
+        _node_ids(_trade_edges(spark, KCORE_MIN_W))
+    )
     comm = labels.groupBy("label").agg(F.count("*").alias("size"))
     return (
         comm.groupBy("size")
@@ -610,8 +622,6 @@ def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     per role is a TakeOrderedAndProject, ranked on a 2xHITS_TOP-row
     bounded window."""
     load_tables(spark, sf_dir)
-    li = spark.table("lineitem")
-    orders = spark.table("orders")
     # iterate on the raw BIGINT keys (the graph is bipartite, so supplier
     # and customer key spaces never mix): every half-round join + grouped
     # sum runs on 8-byte integers instead of strings (measured ~20%
@@ -619,13 +629,10 @@ def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     # contract's string form only at the bounded top-k below, and the
     # (score desc, node) tie-break orders the RENDERED string, so the
     # report is identical to the all-string spelling
-    edges = materialize(
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .groupBy(
-            F.col("l_suppkey").alias("src"),
-            F.col("o_custkey").alias("dst"),
-        )
-        .agg(F.count("*").cast("double").alias("w"))
+    edges = _trade_edges(spark).select(
+        F.col("l_suppkey").alias("src"),
+        F.col("o_custkey").alias("dst"),
+        F.col("n").cast("double").alias("w"),
     )
     auth, hubs = hits_scores_from_edges(edges)
 
@@ -780,6 +787,42 @@ def _lcc_sql(e_src: str, expl: str, mat: str = "") -> str:
     """
 
 
+def _capped_pairs_sql(cap: int, min_shared: int) -> str:
+    """Customer pairs (c1 < c2) sharing >= `min_shared` parts in the CAPPED
+    co-purchase projection, with `shared_parts`. The projection groups the
+    fact join BY PART into its sorted distinct-customer array sliced to
+    the first `cap` members (the smallest-key sample, identical to the
+    oracles' row_number cap) and explodes ordered pairs straight off the
+    array (sorted ascending, so position order IS value order and i < j ⇔
+    c1 < c2) — one shuffle, per-part pair work <= C(cap, 2)."""
+    return f"""
+        WITH parts AS (
+            SELECT l.l_partkey AS p,
+                   slice(array_sort(collect_set(o.o_custkey)), 1, {cap}) AS cs
+            FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+            GROUP BY l.l_partkey
+        )
+        SELECT a.col AS c1, b.col AS c2,
+               CAST(count(*) AS BIGINT) AS shared_parts
+        FROM parts
+        LATERAL VIEW posexplode(cs) a AS i, col
+        LATERAL VIEW posexplode(cs) b AS j, col
+        WHERE a.i < b.j
+        GROUP BY a.col, b.col HAVING count(*) >= {min_shared}
+    """
+
+
+def _lcc_edges(spark: SparkSession) -> str:
+    """Materialize the LCC co-purchase edge set (c1, c2) — its consumers
+    read it several times and inlining would replay the projection each
+    time — and return the SQL that selects it."""
+    pairs = spark.sql(_capped_pairs_sql(LCC_CAP, LCC_MIN_SHARED))
+    materialize(pairs.select("c1", "c2")).createOrReplaceTempView(
+        "lcc_edges_v"
+    )
+    return "SELECT * FROM lcc_edges_v"
+
+
 def local_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-{LCC_TOP} customers by local clustering coefficient on the
     co-purchase graph — "how clique-ish is this node's neighborhood", the
@@ -802,22 +845,7 @@ def local_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     three corners through a single explode, so the triangle work is sum
     over edges of forward-degree products, never per-node wedges."""
     load_tables(spark, sf_dir)
-    materialize(spark.sql(f"""
-        WITH parts AS (
-            SELECT l.l_partkey AS p,
-                   slice(array_sort(collect_set(o.o_custkey)), 1,
-                         {LCC_CAP}) AS cs
-            FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-            GROUP BY l.l_partkey
-        )
-        SELECT a.col AS c1, b.col AS c2
-        FROM parts
-        LATERAL VIEW posexplode(cs) a AS i, col
-        LATERAL VIEW posexplode(cs) b AS j, col
-        WHERE a.i < b.j
-        GROUP BY a.col, b.col HAVING count(*) >= {LCC_MIN_SHARED}
-    """)).createOrReplaceTempView("lcc_edges_v")
-    return spark.sql(_lcc_sql("SELECT * FROM lcc_edges_v",
+    return spark.sql(_lcc_sql(_lcc_edges(spark),
                               "explode(array(a, b, c)) AS v"))
 
 
@@ -921,22 +949,7 @@ def link_prediction_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join against the edge set and the degree joins are
     broadcast-sized relative to the wedge stream."""
     load_tables(spark, sf_dir)
-    materialize(spark.sql(f"""
-        WITH parts AS (
-            SELECT l.l_partkey AS p,
-                   slice(array_sort(collect_set(o.o_custkey)), 1,
-                         {LCC_CAP}) AS cs
-            FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-            GROUP BY l.l_partkey
-        )
-        SELECT a.col AS c1, b.col AS c2
-        FROM parts
-        LATERAL VIEW posexplode(cs) a AS i, col
-        LATERAL VIEW posexplode(cs) b AS j, col
-        WHERE a.i < b.j
-        GROUP BY a.col, b.col HAVING count(*) >= {LCC_MIN_SHARED}
-    """)).createOrReplaceTempView("lcc_edges_v")
-    return spark.sql(_linkpred_sql("SELECT * FROM lcc_edges_v"))
+    return spark.sql(_linkpred_sql(_lcc_edges(spark)))
 
 
 _CAPPED_CP_SQL = f"""WITH cp0 AS (
@@ -1020,48 +1033,20 @@ def copurchase_capped_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (see the section comment: per-part pair work bounded by CAP^2/2 —
     the scale-safe co-occurrence spelling).
 
-    Scale shape: one fact join + distinct (keyed shuffle), one window
-    PARTITIONED BY part (keyed, never global), the pair equi-join runs on
-    the capped relation (<= CAP rows per part), TakeOrdered top-{COPURCHASE_TOP}.
-    Identical SQL text runs on both engines (the rank column is compared,
-    never emitted, so the INT/BIGINT row_number divergence is moot).
-
-    Spark spelling (round-13): the capped per-part member set builds as
-    ONE grouped pass — slice(array_sort(collect_set(custkey)), 1, CAP)
-    per part (identical members to the oracle's row_number cap: the
-    sorted distinct set's first CAP values) — and ordered pairs explode
-    straight off the array (sorted ascending, so position order IS value
-    order and i < j ⇔ c1 < c2). That replaces the DISTINCT + per-part
-    window + capped self-join of the inline form with a single linear
-    chain (no window sort, no second read of the capped relation — so
-    nothing needs materializing either); it is the
-    local_clustering_coefficient projection shape, reused. The oracle
-    keeps the window + self-join spelling — an independent formulation
-    of the same pair multiset."""
+    Scale shape: `_capped_pairs_sql`'s one grouped pass per part and
+    pair explode — a single linear chain (no window sort, no second read
+    of the capped relation, so nothing needs materializing), the
+    local_clustering_coefficient projection with its own cap — then
+    TakeOrdered top-{COPURCHASE_TOP}. The oracle keeps the DISTINCT +
+    per-part window + capped self-join spelling — an independent
+    formulation of the same pair multiset."""
     load_tables(spark, sf_dir)
-    return spark.sql(f"""
-        WITH parts AS (
-            SELECT l.l_partkey AS p,
-                   slice(array_sort(collect_set(o.o_custkey)), 1,
-                         {COPURCHASE_CAP}) AS cs
-            FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-            GROUP BY l.l_partkey
-        ),
-        pairs AS (
-            SELECT a.col AS c1, b.col AS c2,
-                   CAST(count(*) AS BIGINT) AS shared_parts
-            FROM parts
-            LATERAL VIEW posexplode(cs) a AS i, col
-            LATERAL VIEW posexplode(cs) b AS j, col
-            WHERE a.i < b.j
-            GROUP BY a.col, b.col
-        )
-        SELECT c1, c2, shared_parts
-        FROM pairs
-        WHERE shared_parts >= {COPURCHASE_MIN_SHARED}
-        ORDER BY shared_parts DESC, c1, c2
-        LIMIT {COPURCHASE_TOP}
-    """)
+    pairs = spark.sql(
+        _capped_pairs_sql(COPURCHASE_CAP, COPURCHASE_MIN_SHARED)
+    )
+    return pairs.orderBy(
+        F.col("shared_parts").desc(), "c1", "c2"
+    ).limit(COPURCHASE_TOP)
 
 
 QUERIES["copurchase_capped_pairs"] = copurchase_capped_pairs
@@ -1194,7 +1179,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact join per reference; sym itself stays a view, a cheap union of
     the checkpointed edges."""
     load_tables(spark, sf_dir)
-    materialize(spark.sql(_KCORE_EDGE_SQL)).createOrReplaceTempView(
+    _node_ids(_trade_edges(spark, KCORE_MIN_W)).createOrReplaceTempView(
         "assort_e_v"
     )
     return spark.sql(_assort_tail("SELECT * FROM assort_e_v"))
@@ -1235,18 +1220,9 @@ def sssp_dists_from_edges(
     """Run `rounds` Bellman-Ford relaxations over a weighted (src, dst,
     w6) edge DataFrame (symmetrized here); returns (node, pd) with
     pd = dist6 * 16 + hops. Split out so tests can drive synthetic
-    graphs."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
-    # checkpoint the DIRECTED edges first: the symmetrizing union reads
-    # them twice, so materializing the union directly off the lazy fact
-    # join ran that join twice (the kcore/assort pattern, applied here)
-    base = materialize(edges.selectExpr("src", "dst", "w6"))
-    sym = materialize(
-        base.unionByName(
-            base.selectExpr("dst AS src", "src AS dst", "w6")
-        )
-    )
+    graphs. The symmetrizing union reads `edges` twice, so they should be
+    a checkpoint already — `_trade_edges` owns that checkpoint."""
+    sym = materialize(_undirected(edges.select("src", "dst", "w6")))
     sym.createOrReplaceTempView("sssp_edges_v")
     cur = materialize(spark.sql("""
         SELECT node, CAST(0 AS BIGINT) AS pd FROM (
@@ -1281,7 +1257,10 @@ def sssp_weighted_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     past convergence); rounds are fixed. Top-k is
     TakeOrderedAndProject."""
     load_tables(spark, sf_dir)
-    dists = sssp_dists_from_edges(spark, spark.sql(_SSSP_EDGE_SQL))
+    w6 = F.floor(F.lit(1e6) / F.col("n")).cast("bigint").alias("w6")
+    dists = sssp_dists_from_edges(
+        spark, _node_ids(_trade_edges(spark), w6)
+    )
     dists.createOrReplaceTempView("sssp_out_v")
     return spark.sql(f"""
         SELECT node,
@@ -1359,11 +1338,7 @@ def _ppr_rank_states(
     build; only norm and seed — the multiply-referenced relations —
     stay checkpointed)."""
     load_tables(spark, sf_dir)
-    edges = _edges(spark)
-    out_w = edges.groupBy("src").agg(F.sum("w").alias("wout"))
-    norm = materialize(edges.join(out_w, "src").select(
-        "src", "dst", (F.col("w") / F.col("wout")).alias("p")
-    ))
+    norm = _transition(spark)
     seed = materialize(norm.select(F.min("src").alias("node")))
     ranks = seed.select("node", F.lit(1.0).alias("r"))
     states = [ranks]

@@ -411,6 +411,8 @@ class MeasuredRun:
     build_s: float = 0.0
     exec_s: float = 0.0
     jobs: int = 0  # Spark jobs the run's job group ran
+    stages: int = 0  # stages of those jobs that ran a task (not skipped)
+    tasks: int = 0  # completed tasks of those stages
     checkpoints: int = 0  # materialize pins released on exit
     error: str | None = None  # class name of the exception that escaped
 
@@ -443,8 +445,9 @@ def measured(spark: SparkSession, name: str) -> Iterator[MeasuredRun]:
     The block runs under a job group of its own, which owns the query's
     Spark jobs and ``materialize`` pins; work outside ``build``/``execute``
     (collecting the frame for a check) is off the clock. On exit the pins
-    are released, the jobs counted and the previous group restored. An
-    escaping exception is recorded in ``run.error`` and re-raised."""
+    are released, the jobs, stages and tasks counted and the previous group
+    restored. An escaping exception is recorded in ``run.error`` and
+    re-raised."""
     sc = spark.sparkContext
     saved = [sc.getLocalProperty(key) for key in _GROUP_PROPS]
     group = f"measured-{next(_RUN_IDS)}-{name}"
@@ -459,9 +462,30 @@ def measured(spark: SparkSession, name: str) -> Iterator[MeasuredRun]:
         run.checkpoints = len(_pins(sc).get(group, ()))
         release_materialized(spark)
         sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are async
-        run.jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        run.jobs, run.stages, run.tasks = _group_counts(sc, group)
         for key, value in zip(_GROUP_PROPS, saved):
             sc.setLocalProperty(key, value)
+
+
+def _group_counts(sc, group: str) -> tuple[int, int, int]:
+    """Jobs, stages and tasks of one job group. A stage with no completed
+    and no failed task was skipped (its shuffle output was reused) and is
+    not counted; tasks are the completed ones."""
+    tracker = sc.statusTracker()
+    job_ids = tracker.getJobIdsForGroup(group)
+    stage_ids: set[int] = set()
+    for jid in job_ids:
+        info = tracker.getJobInfo(jid)
+        if info is not None:
+            stage_ids.update(info.stageIds)
+    stages = tasks = 0
+    for sid in stage_ids:
+        st = tracker.getStageInfo(sid)
+        if st is None or st.numCompletedTasks + st.numFailedTasks == 0:
+            continue
+        stages += 1
+        tasks += st.numCompletedTasks
+    return len(job_ids), stages, tasks
 
 
 def noop_write(df: DataFrame) -> None:

@@ -5,6 +5,9 @@ without releasing, every localCheckpoint pins its partitions for the
 session lifetime (the sf5 growth study OOMed at 8 GB exactly this way
 before per-query release existed)."""
 
+import pytest
+
+from database_toolbox_spark.operators import graph
 from database_toolbox_spark.session import (
     materialize,
     measured,
@@ -212,6 +215,7 @@ def test_measured_records_a_query_and_releases_its_pins(spark):
     assert run.name == "ppr" and run.error is None
     assert run.build_s > 0 and run.exec_s > 0
     assert run.jobs >= 1 and run.checkpoints > 0
+    assert run.stages >= 1 and run.tasks >= run.stages
     assert _n_persistent(spark) == before
     assert sc.getLocalProperty("spark.jobGroup.id") is None
 
@@ -235,3 +239,39 @@ def test_measured_records_a_failed_build_and_still_releases(spark):
         _clear_job_group(sc)
     assert run.error == "ValueError" and run.checkpoints == 1
     assert _n_persistent(spark) == before
+
+
+# materialize pins per graph query: each graph's one edge checkpoint plus
+# the query's own multiply-read intermediates. A builder that quietly adds
+# a checkpoint (or a consumer that re-checkpoints the edges) fails here.
+GRAPH_CHECKPOINTS = {
+    "pagerank_top_nodes": 2,
+    "event_type_triangles": 1,
+    "bfs_reachable_hops": 1,
+    "kcore_decomposition": None,  # data-dependent, see the test
+    "label_propagation_communities": 2,
+    "hits_hub_authority": 3,
+    "local_clustering_coefficient": 1,
+    "link_prediction_scores": 1,
+    "copurchase_capped_pairs": 0,
+    "graph_edge_churn": 1,
+    "graph_degree_assortativity": 1,
+    "sssp_weighted_hops": 7,
+    "personalized_pagerank": 3,
+}
+
+
+@pytest.mark.parametrize("name", sorted(graph.QUERIES))
+def test_graph_query_checkpoints_are_pinned(spark, name):
+    with measured(spark, name) as run:
+        df = run.build(graph.QUERIES[name], spark, SF_DIR)
+        run.execute(noop_write, df)
+        rows = df.collect()
+    expected = GRAPH_CHECKPOINTS[name]
+    if expected is None:
+        # edges + the symmetrized graph, then one per peeling round run:
+        # every round reported after round 0 plus the unchanged round that
+        # stopped the loop, at most KCORE_MAX_ROUNDS
+        expected = 2 + min(len(rows), graph.KCORE_MAX_ROUNDS)
+    assert run.error is None
+    assert run.checkpoints == expected
