@@ -13,7 +13,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from database_toolbox_spark.catalog import list_tables
-from database_toolbox_spark.session import TABLES, load_tables, local_frame
+from database_toolbox_spark.session import (
+    TABLES,
+    load_tables,
+    local_frame,
+    table_path,
+)
 
 
 def catalog_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -36,8 +41,6 @@ def fast_table_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     very large file sets the same call distributes as a binaryFile read
     of _metadata). Oracle recomputes each count by scanning."""
     import pyarrow.parquet as pq  # noqa: PLC0415
-
-    from database_toolbox_spark.session import table_path  # noqa: PLC0415
 
     rows = [
         (t, pq.ParquetFile(table_path(sf_dir, t)).metadata.num_rows)

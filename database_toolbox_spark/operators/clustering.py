@@ -19,8 +19,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from database_toolbox_spark.operators._fold import fold_l2
 from database_toolbox_spark.operators._oracle import R
-from database_toolbox_spark.session import load_tables, local_frame
+from database_toolbox_spark.session import (
+    load_tables,
+    local_frame,
+    materialize,
+)
 
 K_CELLS = 8
 N_ITERS = 2  # unrolled Lloyd updates after init
@@ -317,8 +322,6 @@ def grid_density_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pointer-jumping CC's per-iteration job overhead (measured 5.3 s for a
     96-edge graph) is avoided. The DuckDB oracle walks the same edges
     with a recursive min-label CTE."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     materialize(spark.sql(_grid_cells_sql(
         "element_at(embedding, 1)", "element_at(embedding, 2)"
@@ -442,8 +445,6 @@ def embedding_outlier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     The per-vector distance table is materialized once — it feeds the
     label moment agg and the z projection, and CTE inlining would replay
     the corpus x dim pass per reference."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     materialize(spark.sql(
         _outlier_d_sql(
@@ -533,8 +534,6 @@ def hbos_outlier_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring join is map-side against broadcast relations and the final
     agg is a map-combinable per-vector sum. Top-{HBOS_TOP} on the
     canon-rounded score with vec_id tie-break is engine-stable."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     materialize(spark.sql(
         _hbos_binned_sql(
@@ -613,8 +612,6 @@ def nearest_centroid_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels x dim broadcast model; distances are one multiply-add pass
     grouped by vec — the same budget as one k-means iteration, and the
     assignment rank partitions by vec over |labels| rows."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     materialize(spark.sql(
         f"SELECT vec_id, label, t.pos - 1 AS dim, "
@@ -653,12 +650,7 @@ ORACLE["nearest_centroid_accuracy"] = _ncc_sql(
 
 FPS_K = 4
 
-_FPS_SPARK_D2 = (
-    "aggregate(zip_with(e.embedding, c.embedding, (x, y) -> "
-    "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) "
-    "* (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
-    "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-)
+_FPS_SPARK_D2 = fold_l2("e.embedding", "c.embedding")
 _FPS_DUCK_D2 = (
     "list_aggregate(list_transform(range(1, len(e.embedding) + 1), "
     "i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(c.embedding[i] AS DOUBLE)) "
@@ -692,8 +684,6 @@ def farthest_point_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     update, and Catalyst would otherwise replay the whole chain per
     reference); the distance to the single new center is a broadcast
     1-row cross join. k linear passes total, no pairwise blowup."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     materialize(spark.sql(
         "SELECT vec_id, embedding FROM embeddings "

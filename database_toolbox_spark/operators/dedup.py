@@ -26,6 +26,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from database_toolbox_spark.operators._fold import (
+    fold_cos,
+    fold_dot,
+    fold_l2,
+    fold_norm2,
+)
 from database_toolbox_spark.operators._oracle import R
 from database_toolbox_spark.session import (
     load_tables,
@@ -580,6 +586,10 @@ def simhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ))
 
 
+# cosine of a v-row pair with both squared norms precomputed
+_PAIR_COS = fold_cos("a.embedding", "b.embedding", "a.norm2", "b.norm2")
+
+
 def embedding_topk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup: top-20 most-similar vector pairs within a
     fixed id range (bounded all-pairs for the oracle; the scalable LSH path
@@ -588,18 +598,12 @@ def embedding_topk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
     return spark.sql(f"""
         WITH v AS (
-            SELECT vec_id, embedding,
-                   aggregate(embedding, CAST(0 AS DOUBLE),
-                             (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))
-                       AS norm2
+            SELECT vec_id, embedding, {fold_norm2("embedding")} AS norm2
             FROM embeddings WHERE vec_id < 300
         ),
         pairs AS (
             SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                   aggregate(zip_with(a.embedding, b.embedding,
-                                      (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
-                             CAST(0 AS DOUBLE), (acc, x) -> acc + x)
-                       / sqrt(a.norm2 * b.norm2) AS cos
+                   {_PAIR_COS} AS cos
             FROM v a JOIN v b ON a.vec_id < b.vec_id
         )
         SELECT vec_a, vec_b, {R("cos", 6)} AS cos_sim
@@ -1135,18 +1139,12 @@ _EMB_PAIR_RANGE = 300
 def _emb_pairs_spark() -> str:
     return f"""
         WITH v AS (
-            SELECT vec_id, embedding,
-                   aggregate(embedding, CAST(0 AS DOUBLE),
-                             (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))
-                       AS norm2
+            SELECT vec_id, embedding, {fold_norm2("embedding")} AS norm2
             FROM embeddings WHERE vec_id < {_EMB_PAIR_RANGE}
         )
         SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
         FROM v a JOIN v b ON a.vec_id < b.vec_id
-        WHERE aggregate(zip_with(a.embedding, b.embedding,
-                                 (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
-                        CAST(0 AS DOUBLE), (acc, x) -> acc + x)
-              / sqrt(a.norm2 * b.norm2) >= {EMB_CLUSTER_COS}
+        WHERE {_PAIR_COS} >= {EMB_CLUSTER_COS}
     """
 
 
@@ -1316,34 +1314,16 @@ def semdedup_drop_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     with embedding_similarity_clusters, which thresholds the global
     pair graph: this is the form that survives 100 TB because k grows."""
     load_tables(spark, sf_dir)
-
-    # the folds stay INTERPRETED deliberately: 64-term unrolled twins
-    # measured ~1.8x slower in same-window A/B (the 64-dim trees fall
-    # out of JIT-compilable method sizes; the 8-dim PQ unroll won) —
-    # see OPTIMIZATION_r12.md "unroll boundary"
-    def norm2(e):
-        return (f"aggregate({e}, CAST(0 AS DOUBLE), (acc, x) -> "
-                f"acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")
-
-    def dot(a, b):
-        return (f"aggregate(zip_with({a}, {b}, (x, y) -> "
-                f"CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-                f"CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
-
-    def l2(a, b):
-        return (f"aggregate(zip_with({a}, {b}, (x, y) -> "
-                f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * "
-                f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
-                f"CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
-
-    m = materialize(spark.sql(_semdedup_assign_sql(norm2, l2, argmin=True)))
+    m = materialize(spark.sql(
+        _semdedup_assign_sql(fold_norm2, fold_l2, argmin=True)
+    ))
     m.createOrReplaceTempView("semdedup_m")
     # the report's per-cell LEFT JOIN tree is all broadcast joins (no
     # exchange below the final sort), so a trailing ORDER BY made the
     # range sampler re-run the 125k-pair dot-product filter once more per
     # action — report_sort runs it exactly once (the per-cell summary is
     # bounded by the cell count)
-    body = _semdedup_report_sql(dot, "SELECT * FROM semdedup_m")
+    body = _semdedup_report_sql(fold_dot, "SELECT * FROM semdedup_m")
     body = strip_order_by(body, "ORDER BY c.cell")
     return report_sort(spark.sql(body), "cell")
 
@@ -1965,8 +1945,6 @@ def blocking_quality_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     each replay the part scan), and all five counts come from ONE
     full-outer join of truth against candidates plus the sample count —
     not a count-CTE per metric."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     bucket = (
         "CAST(conv(substring(md5(CAST(p_partkey AS STRING)), 1, 4), 16, 10)"

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from database_toolbox_spark.functions import canon_round, money
 from database_toolbox_spark.operators._oracle import R
-from database_toolbox_spark.session import load_table
+from database_toolbox_spark.session import load_table, materialize
 
 
 def event_json_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1201,7 +1201,6 @@ def markov_stationary_distribution(spark: SparkSession, sf_dir: str) -> DataFram
     from database_toolbox_spark.operators.profile import (  # noqa: PLC0415
         _PCA_SQ_SQL,
     )
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
 
     load_table(spark, sf_dir, "events")
     materialize(spark.sql(_MARKOV_P0_SQL)).createOrReplaceTempView("mkv_p0")

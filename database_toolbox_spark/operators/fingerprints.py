@@ -50,7 +50,12 @@ from database_toolbox_spark.operators.dedup import (
     _DUCK_SHINGLES,
     _SPARK_SHINGLES,
 )
-from database_toolbox_spark.session import load_tables
+from database_toolbox_spark.session import (
+    load_tables,
+    materialize,
+    report_sort,
+    strip_order_by,
+)
 
 WINNOW_W = 4  # winnowing window: guarantees matches of >= W+3-1 = 6 tokens
 STOP_DF = 32  # fingerprints in more docs than this are boilerplate/stop
@@ -202,8 +207,6 @@ def winnowing_fingerprint_stats(
     positional hash stream `sh` is materialized once — it feeds both the
     per-doc totals and the window pass, and CTE inlining would replay the
     tokenize+hash projection per reference."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     materialize(
         spark.sql(f"{_SPARK_POS_SHINGLES} SELECT * FROM sh")
@@ -226,8 +229,6 @@ def winnowing_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized once (it is referenced 4x: df counts, the pruned
     postings, sizes, and both join sides) — inlined, Catalyst replays
     the positional-window pass per reference (~8 scans, observed)."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     materialize(
         spark.sql(
@@ -425,8 +426,6 @@ def idf_cosine_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings are each materialized once (sh feeds df + the weight join;
     w feeds norms + both pair-join sides) — inlined, Catalyst replays
     the tokenize+shingle pipeline per reference."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     materialize(
         spark.sql(f"{_SPARK_SHINGLES} SELECT * FROM sh")
@@ -441,11 +440,6 @@ def idf_cosine_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # joins, so a trailing ORDER BY made the range sampler re-run the
     # post-shuffle join/filter work once more per action; the thresholded
     # cosine pair list is a bounded report
-    from database_toolbox_spark.session import (  # noqa: PLC0415
-        report_sort,
-        strip_order_by,
-    )
-
     body = strip_order_by(
         "WITH w AS (SELECT * FROM idf_w_v)," + _idf_cosine_tail(),
         "ORDER BY d.doc_a, d.doc_b",
@@ -543,8 +537,6 @@ def cross_doc_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one-statement form replayed tokenize + explode + md5 twice
     (measured 1.62 s -> 0.67 s at sf0.1; the oracle keeps the inline
     form)."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     materialize(
         spark.sql(f"{_SPARK_POS_SHINGLES} SELECT * FROM sh")
@@ -641,7 +633,6 @@ def split_decontaminated_counts(
     from database_toolbox_spark.operators.dedup import (  # noqa: PLC0415
         minhash_near_dup_pairs,
     )
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
 
     load_tables(spark, sf_dir)
     minhash_near_dup_pairs(spark, sf_dir).select(

@@ -371,8 +371,16 @@ def kcore_rounds_from_edges(
     data-bounded (degeneracy ordering), not corpus-bounded. The
     symmetrizing union reads `edges` twice, so they should be a
     checkpoint already — `_trade_edges` owns that checkpoint."""
+    def level(rnd: int, cur: DataFrame) -> tuple[int, int, int]:
+        # one action per level: `src` is never null (ids come from
+        # non-null keys), so countDistinct counts every node
+        n_nodes, n_rows = cur.agg(
+            F.countDistinct("src"), F.count(F.lit(1))
+        ).first()
+        return rnd, n_nodes, n_rows // 2
+
     cur = materialize(_undirected(edges.select("src", "dst")).distinct())
-    rows = [(0, cur.selectExpr("src").distinct().count(), cur.count() // 2)]
+    rows = [level(0, cur)]
     for rnd in range(1, KCORE_MAX_ROUNDS + 1):
         deg = cur.groupBy("src").count()
         keep = deg.filter(F.col("count") >= k).select("src")
@@ -380,10 +388,10 @@ def kcore_rounds_from_edges(
             cur.join(keep, "src", "semi")
             .join(keep.selectExpr("src AS dst"), "dst", "semi")
         )
-        n_edges = cur.count() // 2
-        if n_edges == rows[-1][2]:
+        row = level(rnd, cur)
+        if row[2] == rows[-1][2]:
             break
-        rows.append((rnd, cur.selectExpr("src").distinct().count(), n_edges))
+        rows.append(row)
     return local_frame(
         spark, rows, "round INT, n_nodes BIGINT, n_edges BIGINT"
     ).orderBy("round")

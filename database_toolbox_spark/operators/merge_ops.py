@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from database_toolbox_spark.functions import money
 from database_toolbox_spark.operators._oracle import R
-from database_toolbox_spark.session import load_table
+from database_toolbox_spark.session import load_table, load_tables, materialize
 
 
 def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -32,8 +32,6 @@ def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     inlining otherwise replays the pending-orders scan for each of its
     references (5 orders scans); a real MERGE computes its delta once and
     reads the target once."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -147,8 +145,6 @@ def scd2_point_in_time_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     so this stays a hash join; no range-binning needed (unlike event interval
     joins where both sides are dense in time). Identical SQL on both
     engines."""
-    from database_toolbox_spark.session import load_tables  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     return spark.sql(_SCD2_SQL)
 
@@ -324,11 +320,6 @@ def scd2_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair classification and the per-key coverage rollup — inlining
     would replay three corpus windows per reader. Exact integer
     microsecond arithmetic until the final divisions."""
-    from database_toolbox_spark.session import (  # noqa: PLC0415
-        load_tables,
-        materialize,
-    )
-
     load_tables(spark, sf_dir)
     us = "unix_micros(CAST(ts AS TIMESTAMP))"
     materialize(

@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from database_toolbox_spark.session import load_table
+from database_toolbox_spark.session import load_table, materialize
 
 FEATURE_SCHEMA = "doc_id bigint, n_bytes int, first_byte int, checksum bigint"
 
@@ -1324,8 +1324,6 @@ def image_dhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: hashes materialized once; candidate generation is a
     banded equi-join (never all-pairs); verification is two bit_count
     ops per candidate."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     materialize(_dhash_hashed(spark, sf_dir)).createOrReplaceTempView(
         "dhash_hsh_v"
     )
@@ -1536,7 +1534,6 @@ def image_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from database_toolbox_spark.operators.dedup import (  # noqa: PLC0415
         connected_components,
     )
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
 
     # materialized + single-partition: the verified pair graph is tiny
     # relative to the corpus, and the CC loop re-reads it every round

@@ -27,7 +27,12 @@ from pyspark.sql import functions as F
 
 from database_toolbox_spark.functions import money
 from database_toolbox_spark.operators._oracle import R
-from database_toolbox_spark.session import load_table, load_tables, local_frame
+from database_toolbox_spark.session import (
+    load_table,
+    load_tables,
+    local_frame,
+    materialize,
+)
 
 _STATUS_DIM = [("O", "open"), ("F", "finished"), ("P", "pending")]
 
@@ -364,8 +369,6 @@ def layout_pruning_simulation(spark: SparkSession, sf_dir: str) -> DataFrame:
     maps without paying the global sort the real layout would. Spark
     spells md5-hex-to-int as conv(); the conv result is pre-masked to 16
     bits so both engines' modulo sees the same non-negative operand."""
-    from database_toolbox_spark.session import load_table  # noqa: PLC0415
-
     load_table(spark, sf_dir, "orders")
     return spark.sql(_prune_sim_sql(
         "datediff(o_orderdate, DATE '1992-01-01')"
@@ -454,8 +457,6 @@ def rle_encodability_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one scan to assign files, then per-file lag windows
     (file-keyed — never a global ordering) and a per-column rollup."""
-    from database_toolbox_spark.session import load_table  # noqa: PLC0415
-
     load_table(spark, sf_dir, "orders")
     return spark.sql(_rle_sql(
         "datediff(o_orderdate, DATE '1992-01-01')",
@@ -580,8 +581,6 @@ def zorder_pruning_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate/limit relations are constant broadcasts. No sort is paid —
     equi-width binning on each axis (and the z-prefix) reproduces the
     sorted layouts' zone maps exactly."""
-    from database_toolbox_spark.session import load_table  # noqa: PLC0415
-
     load_table(spark, sf_dir, "orders")
     return spark.sql(_zorder_prune_sql(
         "datediff(CAST(o_orderdate AS DATE), DATE '1995-01-01')"
@@ -703,8 +702,6 @@ def consistent_hash_reshard_audit(spark: SparkSession, sf_dir: str) -> DataFrame
     — see _ch_assigned_sql), the per-key relation materializes once, and
     the movement/load rollups read the materialized 2-ints-per-key
     result."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     h_user = ("CAST(conv(substring(md5(CAST(c_custkey AS STRING)), 1, 8),"
               " 16, 10) AS BIGINT)")

@@ -538,8 +538,6 @@ def train_bpe(
 
     from pyspark.sql import functions as F  # noqa: PLC0415
 
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     docs = load_tables(spark, sf_dir)["documents"]
     words = (
         docs.select(
@@ -1149,8 +1147,6 @@ def token_budget_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection, and inlining would re-run the corpus scan); everything
     after is windows and joins on a source-bounded relation with a 1-row
     broadcast level."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     materialize(spark.sql(_WATERFILL_ST_SPARK)).createOrReplaceTempView(
         "waterfill_st_v"

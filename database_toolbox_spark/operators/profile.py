@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from database_toolbox_spark.operators._oracle import R
-from database_toolbox_spark.session import load_tables
+from database_toolbox_spark.session import load_tables, materialize
 
 _PROFILE_COLS = [
     ("o_orderkey", "bigint"),
@@ -706,8 +706,6 @@ def pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     trace-scaled matrix has mean eigenvalue exactly 1, so λ'₁ ≥ 1 and
     ≤ d. Each squaring level MATERIALIZES (both engines — Spark via
     session.materialize, DuckDB via AS MATERIALIZED)."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     cells = materialize(spark.sql(_pca_cells_sql(_SPARK_PAIR_SRC)))
     cells.createOrReplaceTempView("pca_cells")
@@ -1000,8 +998,6 @@ def analyze_table_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 1-row result is MATERIALIZED before the 4-way UNION unpivot so
     CTE inlining cannot replay the scan per branch (the DuckDB oracle
     pins the same shape with AS MATERIALIZED)."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     materialize(
         spark.sql(_ANALYZE_AGG_SQL.format(str="STRING"))
@@ -1266,8 +1262,6 @@ def t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the grouped counts runs on the |QI classes| x |domain| grid (domain =
     5 priorities); the window partitions by class over that bounded
     grid."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     materialize(spark.sql(_T_CLOSE_J_SQL)).createOrReplaceTempView(
         "tclose_j_v"

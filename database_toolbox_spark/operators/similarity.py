@@ -1,6 +1,6 @@
 """Similarity search over the `embeddings` table (BASELINE.json north star):
-brute-force cosine top-k as the baseline, and a random-hyperplane LSH
-bucketing as the scale path.
+brute-force cosine top-k as the baseline, LSH bucketing, and the IVF /
+PQ / binary-code ANN ladder over one shared IVF index.
 
 Scale design:
 - Brute-force top-k: the query vector is a 1-row broadcast; scoring is a
@@ -12,19 +12,46 @@ Scale design:
   and the bucket join is an equi-join. The hyperplanes come from a fixed
   integer formula (no RNG) so the DuckDB oracle computes the identical
   planes.
-- Dot products fold left-to-right in DOUBLE on both engines (Spark
-  `aggregate` lambda / DuckDB `list_aggregate('sum')`), so scores match
+- IVF: the coarse-quantizer assignment (every vector's nearest of the
+  first N_IVF_CELLS vectors by 1e-6-floored L2) is written once,
+  `_ivf_assign_sql`. `_ivf_assigned` is the one index builder: it
+  checkpoints that relation and registers it as the one `ivf_assigned_v`
+  view every IVF consumer reads. ivf_cell_assignments groups over the SQL
+  inline (no checkpoint), and the IVF+binary index embeds it as a CTE so
+  the durable-index path can write it to parquet.
+- Dot products, norms and L2 distances fold left-to-right in DOUBLE on
+  both engines — the Spark spelling is the fold vocabulary in
+  operators/_fold.py (`fold_dot`, `fold_norm2`, `fold_l2`, `fold_cos`),
+  DuckDB's `list_aggregate('sum')` the oracle's — so scores match
   bit-for-bit before canon-rounding.
 """
 
 from __future__ import annotations
 
+import hashlib
 import math
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from database_toolbox_spark.operators._fold import (
+    fold_cos,
+    fold_dot,
+    fold_l2,
+    fold_norm2,
+    fold_slice,
+    unrolled_l2_idx,
+    unrolled_norm2,
+    unrolled_sum,
+)
 from database_toolbox_spark.operators._oracle import R
-from database_toolbox_spark.session import load_tables
+from database_toolbox_spark.session import (
+    DEFAULT_SF_DIR,
+    load_table,
+    load_tables,
+    materialize,
+    persisted_table_path,
+)
 
 N_PLANES = 8
 QUERY_VEC_ID = 0
@@ -54,6 +81,23 @@ def _duck_dot_plane(p: int) -> str:
     )
 
 
+# the query vector's squared norm, and the cosine of a corpus row against
+# it — the Spark spelling every query-vs-corpus ranking shares
+_QNORM2 = fold_norm2("embedding")
+
+
+def _query_cos(alias: str) -> str:
+    """Cosine of ``{alias}.embedding`` against the query ``q.qv`` whose
+    squared norm ``q.qnorm2`` is precomputed."""
+    e = f"{alias}.embedding"
+    return fold_cos(e, "q.qv", "q.qnorm2", fold_norm2(e))
+
+
+# the same cosine for a panel query `q.qv` without a precomputed norm
+_FULL_COS = fold_cos("e.embedding", "q.qv", fold_norm2("q.qv"),
+                     fold_norm2("e.embedding"))
+
+
 def _bucket_expr(dot_fn) -> str:
     return " + ".join(
         f"(CASE WHEN {dot_fn(p)} > 0 THEN {1 << p} ELSE 0 END)"
@@ -70,20 +114,11 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
     return spark.sql(f"""
         WITH q AS (
-            SELECT embedding AS qv,
-                   aggregate(embedding, CAST(0 AS DOUBLE),
-                             (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))
-                       AS qnorm2
+            SELECT embedding AS qv, {_QNORM2} AS qnorm2
             FROM embeddings WHERE vec_id = {QUERY_VEC_ID}
         ),
         scored AS (
-            SELECT e.vec_id, e.label,
-                   aggregate(zip_with(e.embedding, q.qv,
-                                      (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
-                             CAST(0 AS DOUBLE), (acc, x) -> acc + x)
-                   / sqrt(q.qnorm2 * aggregate(e.embedding, CAST(0 AS DOUBLE),
-                             (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))
-                       AS cos
+            SELECT e.vec_id, e.label, {_query_cos("e")} AS cos
             FROM embeddings e CROSS JOIN q
             WHERE e.vec_id <> {QUERY_VEC_ID}
         )
@@ -138,10 +173,7 @@ def lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM embeddings
         ),
         q AS (
-            SELECT embedding AS qv, ba AS qa, bb AS qb,
-                   aggregate(embedding, CAST(0 AS DOUBLE),
-                             (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))
-                       AS qnorm2
+            SELECT embedding AS qv, ba AS qa, bb AS qb, {_QNORM2} AS qnorm2
             FROM b WHERE vec_id = {QUERY_VEC_ID}
         ),
         probes AS (
@@ -157,13 +189,7 @@ def lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             WHERE e.vec_id <> {QUERY_VEC_ID}
         ),
         scored AS (
-            SELECT c.vec_id, c.label,
-                   aggregate(zip_with(c.embedding, q.qv,
-                                      (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
-                             CAST(0 AS DOUBLE), (acc, x) -> acc + x)
-                   / sqrt(q.qnorm2 * aggregate(c.embedding, CAST(0 AS DOUBLE),
-                             (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))
-                       AS cos
+            SELECT c.vec_id, c.label, {_query_cos("c")} AS cos
             FROM cand c CROSS JOIN q
         )
         SELECT vec_id, label, {R("cos", 6)} AS cos_sim
@@ -176,46 +202,47 @@ def lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_IVF_CELLS = 16
 
 
-def _spark_l2_to_centroid(vec: str, cent: str) -> str:
-    # kept as the interpreted fold DELIBERATELY: the round-12 unrolled
-    # 64-term codegen twin measured ~1.7x SLOWER in same-window A/B
-    # (ivf_nprobe 0.50 -> 0.84 s; 64-dim trees overflow the JIT-friendly
-    # method size, unlike the 8-dim PQ unroll which won) — see
-    # OPTIMIZATION_r12.md "unroll boundary"
-    return (
-        f"aggregate(zip_with({vec}, {cent}, (x, y) -> "
-        "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) "
-        "* (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
-        "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
+def _ivf_assign_sql() -> str:
+    """The IVF coarse quantizer's (vec_id, cell) assignment, the one Spark
+    spelling: the first N_IVF_CELLS vectors serve as fixed centroids
+    (deterministic — a trained k-means would be iterative and
+    RNG-seeded), and every vector joins its nearest centroid by L2,
+    ranked on the 1e-6-floored distance with a cell tie-break so libm
+    ulps can't flip a cell."""
+    d2 = fold_l2("e.embedding", "c.embedding")
+    return f"""
+            SELECT vec_id, cell FROM (
+                SELECT e.vec_id, c.cell,
+                       row_number() OVER (PARTITION BY e.vec_id
+                           ORDER BY floor({d2} * 1000000e0) / 1000000e0,
+                                    c.cell) AS rn
+                FROM embeddings e CROSS JOIN
+                     (SELECT vec_id AS cell, embedding FROM embeddings
+                      WHERE vec_id < {N_IVF_CELLS}) c
+            ) WHERE rn = 1
+    """
+
+
+def _ivf_assigned(spark: SparkSession) -> None:
+    """Build the IVF index: checkpoint the cell assignment once and
+    register it as ``ivf_assigned_v``, the view every IVF consumer reads.
+    It is exactly what a real IVF build precomputes — two ints per vector;
+    CTE inlining would otherwise replay the corpus x centroids pass for
+    every reference."""
+    materialize(spark.sql(_ivf_assign_sql())).createOrReplaceTempView(
+        "ivf_assigned_v"
     )
 
 
 def ivf_cell_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF coarse quantizer: the first N_IVF_CELLS vectors serve as fixed
-    centroids (deterministic — a trained k-means would be iterative and
-    RNG-seeded); every vector is assigned to its nearest centroid by L2.
-    Output is the cell histogram. At scale the centroid list is a broadcast
-    and assignment is a per-row projection — one pass, no shuffle before
-    the histogram."""
+    """IVF coarse quantizer cell histogram over `_ivf_assign_sql`. At
+    scale the centroid list is a broadcast and assignment is a per-row
+    projection — one pass, no shuffle before the histogram, and no
+    checkpoint: the assignment is read once."""
     load_tables(spark, sf_dir)
-    d2 = _spark_l2_to_centroid("e.embedding", "c.embedding")
     return spark.sql(f"""
-        WITH cents AS (
-            SELECT vec_id AS cell, embedding FROM embeddings
-            WHERE vec_id < {N_IVF_CELLS}
-        ),
-        dists AS (
-            SELECT e.vec_id, c.cell, {d2} AS d2
-            FROM embeddings e CROSS JOIN cents c
-        ),
-        assigned AS (
-            SELECT vec_id, cell,
-                   row_number() OVER (PARTITION BY vec_id
-                       ORDER BY floor(d2 * 1000000e0) / 1000000e0, cell) AS rn
-            FROM dists
-        )
         SELECT cell, count(*) AS n
-        FROM assigned WHERE rn = 1
+        FROM ({_ivf_assign_sql()})
         GROUP BY cell ORDER BY cell
     """)
 
@@ -224,36 +251,17 @@ def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN search: score only vectors in the query's nearest cell, then
     exact cosine top-k. The probe set is ~1/N_IVF_CELLS of the corpus.
 
-    The cell assignment is MATERIALIZED once — it is the IVF *index*
-    (exactly what a real IVF build precomputes): CTE inlining otherwise
-    replays the corpus x centroids assignment pass for each of its three
-    references (9 embeddings scans in the physical plan); checkpointed it
-    is two ints per vector and the probe/query lookups read it for free."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
+    The cell assignment is the IVF index (`_ivf_assigned`): referenced
+    three times, it would be 9 embeddings scans in the physical plan
+    inlined; checkpointed it is two ints per vector and the probe/query
+    lookups read it for free."""
     load_tables(spark, sf_dir)
-    d2 = _spark_l2_to_centroid("e.embedding", "c.embedding")
-    assigned_df = materialize(spark.sql(f"""
-        WITH cents AS (
-            SELECT vec_id AS cell, embedding FROM embeddings
-            WHERE vec_id < {N_IVF_CELLS}
-        )
-        SELECT vec_id, cell FROM (
-            SELECT e.vec_id, c.cell,
-                   row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY floor({d2} * 1000000e0) / 1000000e0, c.cell)
-                       AS rn
-            FROM embeddings e CROSS JOIN cents c
-        ) WHERE rn = 1
-    """))
-    assigned_df.createOrReplaceTempView("ivf_assigned_v")
+    _ivf_assigned(spark)
     return spark.sql(f"""
         WITH assigned AS (SELECT * FROM ivf_assigned_v),
         q AS (
             SELECT e.embedding AS qv, a.cell AS qcell,
-                   aggregate(e.embedding, CAST(0 AS DOUBLE),
-                             (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))
-                       AS qnorm2
+                   {fold_norm2("e.embedding")} AS qnorm2
             FROM embeddings e JOIN assigned a ON e.vec_id = a.vec_id
             WHERE e.vec_id = {QUERY_VEC_ID}
         ),
@@ -267,12 +275,7 @@ def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             -- BROADCAST: q is one row (the query vector); without the hint
             -- Spark plans a CartesianProduct instead of a 1-row broadcast
             SELECT /*+ BROADCAST(q) */ p.vec_id, p.label,
-                   aggregate(zip_with(p.embedding, q.qv,
-                                      (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),
-                             CAST(0 AS DOUBLE), (acc, x) -> acc + x)
-                   / sqrt(q.qnorm2 * aggregate(p.embedding, CAST(0 AS DOUBLE),
-                             (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))
-                       AS cos
+                   {_query_cos("p")} AS cos
             FROM probe p CROSS JOIN q
         )
         SELECT vec_id, label, {R("cos", 6)} AS cos_sim
@@ -282,19 +285,24 @@ def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """)
 
 
-def ivf_probe_count(spark: SparkSession) -> int:
-    """Examined-candidate bound of the LAST ivf_ann_topk build in this
-    session: the number of corpus vectors assigned to the query's IVF cell
-    (reads the materialized `ivf_assigned_v` index view the operator
-    registers). This is the quantity the IVF scale claim bounds — probe
-    work grows with the cell share of the corpus, never the corpus times
-    itself; scripts/scaling_sf5.py asserts it stays linear at 50x."""
+def _cell_probe_count(spark: SparkSession, view: str) -> int:
+    """Vectors other than the query in the query's IVF cell of ``view``."""
     return spark.sql(f"""
-        SELECT count(*) AS n FROM ivf_assigned_v
-        WHERE cell = (SELECT cell FROM ivf_assigned_v
+        SELECT count(*) AS n FROM {view}
+        WHERE cell = (SELECT cell FROM {view}
                       WHERE vec_id = {QUERY_VEC_ID})
           AND vec_id <> {QUERY_VEC_ID}
     """).collect()[0].n  # guard-exempt: bounded driver fetch (1 count row)
+
+
+def ivf_probe_count(spark: SparkSession) -> int:
+    """Examined-candidate bound of the LAST IVF index build in this
+    session: the number of corpus vectors assigned to the query's IVF cell
+    (reads the `ivf_assigned_v` index view). This is the quantity the IVF
+    scale claim bounds — probe work grows with the cell share of the
+    corpus, never the corpus times itself; scripts/scaling_sf5.py asserts
+    it stays linear at 50x."""
+    return _cell_probe_count(spark, "ivf_assigned_v")
 
 
 def sq8_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -368,7 +376,6 @@ def knn_graph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from database_toolbox_spark.functions import canon_round  # noqa: PLC0415
     from pyspark.sql import Window  # noqa: PLC0415
     from pyspark.sql import functions as F  # noqa: PLC0415
-    from database_toolbox_spark.session import load_table  # noqa: PLC0415
 
     emb = load_table(spark, sf_dir, "embeddings")
     qrows = (
@@ -500,11 +507,6 @@ def jl_projection_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.06 s read was contended) - the fixture table is small enough to
     be overhead-bound; the rewrite is kept for the scale shape: the
     projection executes exactly once and runs in codegen."""
-    from database_toolbox_spark.operators._fold import (  # noqa: PLC0415
-        unrolled_norm2,
-        unrolled_sum,
-    )
-
     tables = load_tables(spark, sf_dir)
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     tables["embeddings"].repartitionByRange(
@@ -628,19 +630,12 @@ def hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-breaks, so both engines rank identically; 1/(60+r) is exact
     rational arithmetic on identical integers."""
     load_tables(spark, sf_dir)
-    spark_cos = R(
-        "aggregate(zip_with(e.embedding, q.qv, (x, y) -> "
-        "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0 AS DOUBLE), "
-        "(acc, x) -> acc + x) / sqrt(q.qnorm2 * "
-        "aggregate(e.embedding, CAST(0 AS DOUBLE), (acc, x) -> "
-        "acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))", 6)
     return spark.sql(_hybrid_sql(
         n_words="CAST(size(split(text, ' ')) AS BIGINT)",
         tok_src="SELECT doc_id, explode(split(text, ' ')) AS term "
                 "FROM documents",
-        qnorm2="aggregate(embedding, CAST(0 AS DOUBLE), (acc, x) -> "
-               "acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))",
-        cos=spark_cos,
+        qnorm2=_QNORM2,
+        cos=R(_query_cos("e"), 6),
     ))
 
 
@@ -671,30 +666,16 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-row) relation. The candidate relation is MATERIALIZED — it feeds
     the pair join twice plus the array collapse, and CTE inlining would
     replay the corpus scoring per reference."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
-    dot = (
-        "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * "
-        "CAST(y AS DOUBLE)), CAST(0 AS DOUBLE), (acc, x) -> acc + x)"
-    )
-    norm2 = (
-        "aggregate({a}, CAST(0 AS DOUBLE), (acc, x) -> acc + "
-        "CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
-    )
-    cos = (
-        f"{dot.format(a='e.embedding', b='q.qv')} / "
-        f"sqrt(q.qnorm2 * {norm2.format(a='e.embedding')})"
-    )
     cand = materialize(spark.sql(f"""
         WITH q AS (
-            SELECT embedding AS qv, {norm2.format(a='embedding')} AS qnorm2
+            SELECT embedding AS qv, {_QNORM2} AS qnorm2
             FROM embeddings WHERE vec_id = {QUERY_VEC_ID}
         ),
         cand AS (
             SELECT e.vec_id, e.embedding,
-                   CAST(floor(({cos}) * 1000000 + 0.501e0) AS BIGINT)
-                       AS rel6
+                   CAST(floor(({_query_cos("e")}) * 1000000 + 0.501e0)
+                        AS BIGINT) AS rel6
             FROM embeddings e CROSS JOIN q
             WHERE e.vec_id <> {QUERY_VEC_ID}
             ORDER BY rel6 DESC, vec_id LIMIT {MMR_CAND}
@@ -709,11 +690,8 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM cand
     """))
     cand.createOrReplaceTempView("mmr_cand_v")
-    psim = (
-        f"{dot.format(a='a.embedding', b='b.embedding')} / "
-        f"sqrt(({norm2.format(a='a.embedding')}) * "
-        f"({norm2.format(a='b.embedding')}))"
-    )
+    psim = fold_cos("a.embedding", "b.embedding",
+                    fold_norm2("a.embedding"), fold_norm2("b.embedding"))
     return spark.sql(f"""
         WITH pairs AS (
             SELECT a.pos AS pa, b.pos AS pb,
@@ -1116,6 +1094,12 @@ ORACLE = {
 PQ_SUBSPACES = 8  # m subvectors of dim/m dims each
 PQ_SUBDIM = 8  # 64-dim fixture embeddings / 8
 PQ_CENTROIDS = 32  # k* codebook entries per subspace (sampled codebook)
+_PQ_SUBSPACES_SPARK = f"SELECT explode(sequence(0, {PQ_SUBSPACES - 1})) AS s"
+
+
+def _pq_slice(e: str, s: str) -> str:
+    """Subspace ``s`` of a 64-dim embedding (the Spark spelling)."""
+    return fold_slice(e, s, PQ_SUBDIM)
 
 
 def _pq_codes_argmin(src: str, cents: str = "cents") -> str:
@@ -1128,10 +1112,6 @@ def _pq_codes_argmin(src: str, cents: str = "cents") -> str:
     per (vector, subspace)). ``cents`` names the codebook relation in
     the caller's scope (ivfpq aliases it ``pqc``) — a parameter, not
     post-hoc string surgery on the rendered SQL (round-12 ADVICE 2)."""
-    from database_toolbox_spark.operators._fold import (  # noqa: PLC0415
-        unrolled_l2_idx,
-    )
-
     d = unrolled_l2_idx("v.embedding", f"(c.s) * {PQ_SUBDIM}", "c.cemb",
                         PQ_SUBDIM)
     return f"""
@@ -1221,20 +1201,10 @@ def pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     2.12 s -> 1.17 s at sf0.1 under identical host contention (the
     committed idle baseline read 1.34 s)."""
     load_tables(spark, sf_dir)
-
-    def vslice(e, s):
-        return f"slice({e}, 1 + ({s}) * {PQ_SUBDIM}, {PQ_SUBDIM})"
-
-    def l2(a, b):
-        return (f"aggregate(zip_with({a}, {b}, (x, y) -> "
-                f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * "
-                f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
-                f"CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
-
     return spark.sql(_pq_sql(
-        f"SELECT explode(sequence(0, {PQ_SUBSPACES - 1})) AS s",
-        vslice,
-        l2,
+        _PQ_SUBSPACES_SPARK,
+        _pq_slice,
+        fold_l2,
         codes_body=_pq_codes_argmin("embeddings"),
     ))
 
@@ -1332,39 +1302,13 @@ def ivfpq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass per reference); probe-set coding touches ~n/N_IVF_CELLS
     vectors x the broadcast codebook; everything downstream of the
     probe is bounded by cell size; final ranking is TakeOrdered."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
-    d2 = _spark_l2_to_centroid("e.embedding", "c.embedding")
-    assigned_df = materialize(spark.sql(f"""
-        WITH cents AS (
-            SELECT vec_id AS cell, embedding FROM embeddings
-            WHERE vec_id < {N_IVF_CELLS}
-        )
-        SELECT vec_id, cell FROM (
-            SELECT e.vec_id, c.cell,
-                   row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY floor({d2} * 1000000e0) / 1000000e0, c.cell)
-                       AS rn
-            FROM embeddings e CROSS JOIN cents c
-        ) WHERE rn = 1
-    """))
-    assigned_df.createOrReplaceTempView("ivfpq_assigned_v")
-
-    def vslice(e, s):
-        return f"slice({e}, 1 + ({s}) * {PQ_SUBDIM}, {PQ_SUBDIM})"
-
-    def l2(a, b):
-        return (f"aggregate(zip_with({a}, {b}, (x, y) -> "
-                f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * "
-                f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
-                f"CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
-
+    _ivf_assigned(spark)
     return spark.sql(_ivfpq_sql(
-        "SELECT * FROM ivfpq_assigned_v",
-        f"SELECT explode(sequence(0, {PQ_SUBSPACES - 1})) AS s",
-        vslice,
-        l2,
+        "SELECT * FROM ivf_assigned_v",
+        _PQ_SUBSPACES_SPARK,
+        _pq_slice,
+        fold_l2,
         codes_body=_pq_codes_argmin("probe", cents="pqc"),
     ))
 
@@ -1424,36 +1368,11 @@ def hard_negative_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the cell-local self-join is bounded by (n/k)² per cell
     exactly like SemDeDup; the ranking is TakeOrdered. The assignment
-    is MATERIALIZED (the IVF index), shared shape with ivfpq_ann_topk."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
+    is the IVF index (`_ivf_assigned`), shared with ivfpq_ann_topk."""
     load_tables(spark, sf_dir)
-    d2 = _spark_l2_to_centroid("e.embedding", "c.embedding")
-    materialize(spark.sql(f"""
-        WITH cents AS (
-            SELECT vec_id AS cell, embedding FROM embeddings
-            WHERE vec_id < {N_IVF_CELLS}
-        )
-        SELECT vec_id, cell FROM (
-            SELECT e.vec_id, c.cell,
-                   row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY floor({d2} * 1000000e0) / 1000000e0, c.cell)
-                       AS rn
-            FROM embeddings e CROSS JOIN cents c
-        ) WHERE rn = 1
-    """)).createOrReplaceTempView("hn_assigned_v")
-
-    def norm2(e):
-        return (f"aggregate({e}, CAST(0 AS DOUBLE), (acc, x) -> "
-                f"acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")
-
-    def dot(a, b):
-        return (f"aggregate(zip_with({a}, {b}, (x, y) -> "
-                f"CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-                f"CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
-
+    _ivf_assigned(spark)
     return spark.sql(_hard_negative_sql(
-        "SELECT * FROM hn_assigned_v", norm2, dot
+        "SELECT * FROM ivf_assigned_v", fold_norm2, fold_dot
     ))
 
 
@@ -1551,35 +1470,12 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Cites: Jegou et al., "Product Quantization for Nearest Neighbor
     Search", TPAMI'11 (recall@R protocol, Fig. 5 methodology)."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
-    d2 = _spark_l2_to_centroid("e.embedding", "c.embedding")
-    materialize(spark.sql(f"""
-        WITH cents AS (
-            SELECT vec_id AS cell, embedding FROM embeddings
-            WHERE vec_id < {N_IVF_CELLS}
-        )
-        SELECT vec_id, cell FROM (
-            SELECT e.vec_id, c.cell,
-                   row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY floor({d2} * 1000000e0) / 1000000e0, c.cell)
-                       AS rn
-            FROM embeddings e CROSS JOIN cents c
-        ) WHERE rn = 1
-    """)).createOrReplaceTempView("recall_assigned_v")
-    spark_cos = (
-        "aggregate(zip_with(e.embedding, q.qv, (x, y) -> "
-        "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0 AS DOUBLE), "
-        "(acc, x) -> acc + x) / sqrt(q.qnorm2 * "
-        "aggregate(e.embedding, CAST(0 AS DOUBLE), (acc, x) -> "
-        "acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-    )
+    _ivf_assigned(spark)
     return spark.sql(_recall_sql(
-        qnorm2="aggregate(embedding, CAST(0 AS DOUBLE), (acc, x) -> "
-               "acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))",
-        cos=spark_cos,
-        assigned_body="SELECT * FROM recall_assigned_v",
+        qnorm2=_QNORM2,
+        cos=_query_cos("e"),
+        assigned_body="SELECT * FROM ivf_assigned_v",
     ))
 
 
@@ -1654,33 +1550,16 @@ def mutual_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from database_toolbox_spark.operators.dedup import (  # noqa: PLC0415
         _semdedup_assign_sql,
     )
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
 
     load_tables(spark, sf_dir)
-
-    def norm2(e):
-        return (f"aggregate({e}, CAST(0 AS DOUBLE), (acc, x) -> "
-                f"acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")
-
-    def dot(a, b):
-        return (f"aggregate(zip_with({a}, {b}, (x, y) -> "
-                f"CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-                f"CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
-
-    def l2(a, b):
-        return (f"aggregate(zip_with({a}, {b}, (x, y) -> "
-                f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * "
-                f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
-                f"CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
-
     # grouped struct-argmin assignment (the round-12 semdedup rewrite —
     # same (floored distance, cell) order, so the SAME cell wins; only
     # per-vector partials shuffle); the oracle keeps the window spelling
     materialize(
-        spark.sql(_semdedup_assign_sql(norm2, l2, argmin=True))
+        spark.sql(_semdedup_assign_sql(fold_norm2, fold_l2, argmin=True))
     ).createOrReplaceTempView("mnn_m_v")
     materialize(spark.sql(
-        "WITH m AS (SELECT * FROM mnn_m_v) " + _mutual_nn_cte(dot)
+        "WITH m AS (SELECT * FROM mnn_m_v) " + _mutual_nn_cte(fold_dot)
     )).createOrReplaceTempView("mnn_nn_v")
     return spark.sql(
         "WITH nn AS (SELECT * FROM mnn_nn_v)" + _mutual_nn_tail()
@@ -1760,8 +1639,6 @@ def _anisotropy_sql(vals_src: str, mat: str = "") -> str:
 def embedding_anisotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anisotropy health-check of the embedding space (see
     _anisotropy_sql)."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     materialize(spark.sql(
         "SELECT CAST(label AS STRING) AS label, vec_id, pos AS dim,"
@@ -1860,35 +1737,12 @@ def ndcg_ann_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the fixed query panel, IVF arm probes one cell via the
     materialized assignment; the NDCG tail is a K-row-per-query grouped
     aggregate."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
-    d2 = _spark_l2_to_centroid("e.embedding", "c.embedding")
-    materialize(spark.sql(f"""
-        WITH cents AS (
-            SELECT vec_id AS cell, embedding FROM embeddings
-            WHERE vec_id < {N_IVF_CELLS}
-        )
-        SELECT vec_id, cell FROM (
-            SELECT e.vec_id, c.cell,
-                   row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY floor({d2} * 1000000e0) / 1000000e0, c.cell)
-                       AS rn
-            FROM embeddings e CROSS JOIN cents c
-        ) WHERE rn = 1
-    """)).createOrReplaceTempView("ndcg_assigned_v")
-    spark_cos = (
-        "aggregate(zip_with(e.embedding, q.qv, (x, y) -> "
-        "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0 AS DOUBLE), "
-        "(acc, x) -> acc + x) / sqrt(q.qnorm2 * "
-        "aggregate(e.embedding, CAST(0 AS DOUBLE), (acc, x) -> "
-        "acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-    )
+    _ivf_assigned(spark)
     return spark.sql(_ndcg_sql(
-        qnorm2="aggregate(embedding, CAST(0 AS DOUBLE), (acc, x) -> "
-               "acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))",
-        cos=spark_cos,
-        assigned_body="SELECT * FROM ndcg_assigned_v",
+        qnorm2=_QNORM2,
+        cos=_query_cos("e"),
+        assigned_body="SELECT * FROM ivf_assigned_v",
     ))
 
 
@@ -2035,25 +1889,8 @@ def pq_distortion_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus; per-vector work is m x k LUT-free L2s); energy is a second
     map-side pass; both rollups are 8-row aggregates."""
     load_tables(spark, sf_dir)
-
-    def vslice(e, s):
-        return f"slice({e}, 1 + ({s}) * {PQ_SUBDIM}, {PQ_SUBDIM})"
-
-    def l2(a, b):
-        return (f"aggregate(zip_with({a}, {b}, (x, y) -> "
-                f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * "
-                f"(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
-                f"CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
-
-    def sumsq(a):
-        return (f"aggregate({a}, CAST(0 AS DOUBLE), (acc, x) -> "
-                f"acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")
-
     return spark.sql(_pq_distortion_sql(
-        f"SELECT explode(sequence(0, {PQ_SUBSPACES - 1})) AS s",
-        vslice,
-        l2,
-        sumsq,
+        _PQ_SUBSPACES_SPARK, _pq_slice, fold_l2, fold_norm2
     ))
 
 
@@ -2130,32 +1967,10 @@ def dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     are evaluated. Rankings tie-break on (rounded cosine, vec_id) —
     engine-stable."""
     load_tables(spark, sf_dir)
-    # the folds stay INTERPRETED deliberately: the round-12 unrolled
-    # 64-term twins (with a CASE dispatch over the literal truncation
-    # points) measured 2x SLOWER in same-window A/B (0.67 -> 1.36 s) —
-    # the 64-dim trees fall out of JIT-compilable method sizes; see
-    # OPTIMIZATION_r12.md "unroll boundary"
-    cos_full = (
-        "aggregate(zip_with(e.embedding, q.qv, (x, y) -> "
-        "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0 AS DOUBLE), "
-        "(acc, x) -> acc + x) / sqrt("
-        "aggregate(q.qv, CAST(0 AS DOUBLE), (acc, x) -> "
-        "acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) * "
-        "aggregate(e.embedding, CAST(0 AS DOUBLE), (acc, x) -> "
-        "acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-    )
-    cos_k = (
-        "aggregate(zip_with(slice(e.embedding, 1, ks.k), "
-        "slice(q.qv, 1, ks.k), (x, y) -> "
-        "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0 AS DOUBLE), "
-        "(acc, x) -> acc + x) / sqrt("
-        "aggregate(slice(q.qv, 1, ks.k), CAST(0 AS DOUBLE), (acc, x) -> "
-        "acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) * "
-        "aggregate(slice(e.embedding, 1, ks.k), CAST(0 AS DOUBLE), "
-        "(acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-    )
+    ep, qp = "slice(e.embedding, 1, ks.k)", "slice(q.qv, 1, ks.k)"
+    cos_k = fold_cos(ep, qp, fold_norm2(qp), fold_norm2(ep))
     ks_rel = "SELECT explode(array" + str(TRUNC_DIMS) + ") AS k"
-    return spark.sql(_trunc_recall_sql(cos_full, cos_k, ks_rel))
+    return spark.sql(_trunc_recall_sql(_FULL_COS, cos_k, ks_rel))
 
 
 _DUCK_TRUNC_COS_FULL = (
@@ -2265,36 +2080,12 @@ def ivf_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell assignment materialized once (the index), the probe ladder a
     3-row broadcast; the nested candidate sets share one scan via the
     probes cross join instead of re-scanning per level."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
-    d2 = _spark_l2_to_centroid("e.embedding", "c.embedding")
-    materialize(spark.sql(f"""
-        WITH cents AS (
-            SELECT vec_id AS cell, embedding FROM embeddings
-            WHERE vec_id < {N_IVF_CELLS}
-        )
-        SELECT vec_id, cell FROM (
-            SELECT e.vec_id, c.cell,
-                   row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY floor({d2} * 1000000e0) / 1000000e0, c.cell)
-                       AS rn
-            FROM embeddings e CROSS JOIN cents c
-        ) WHERE rn = 1
-    """)).createOrReplaceTempView("nprobe_assigned_v")
-    cos_full = (
-        "aggregate(zip_with(e.embedding, q.qv, (x, y) -> "
-        "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0 AS DOUBLE), "
-        "(acc, x) -> acc + x) / sqrt("
-        "aggregate(q.qv, CAST(0 AS DOUBLE), (acc, x) -> "
-        "acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)) * "
-        "aggregate(e.embedding, CAST(0 AS DOUBLE), (acc, x) -> "
-        "acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-    )
+    _ivf_assigned(spark)
     return spark.sql(_nprobe_sql(
-        cos_full,
-        _spark_l2_to_centroid("q.qv", "c.embedding"),
-        "SELECT * FROM nprobe_assigned_v",
+        _FULL_COS,
+        fold_l2("q.qv", "c.embedding"),
+        "SELECT * FROM ivf_assigned_v",
         "SELECT explode(array" + str(NPROBE_LEVELS) + ") AS np",
     ))
 
@@ -2426,8 +2217,6 @@ def bq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     BQ_RERANK_FRACTION note: a fixed width collapses at 50x). At 100 TB
     the float vectors stay in cold storage; only codes stream through
     the scan."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     codes = materialize(spark.sql(f"""
         SELECT vec_id, label,
@@ -2439,23 +2228,13 @@ def bq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # guard-exempt: bounded driver fetch (1 count row) — sizes the
     # shortlist TakeOrdered constant from table stats at plan time
     width = bq_shortlist_width(codes.count())
-    spark_cos = (
-        "aggregate(zip_with(e.embedding, q.qv, (x, y) -> "
-        "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0 AS DOUBLE), "
-        "(acc, x) -> acc + x) / sqrt(q.qnorm2 * "
-        "aggregate(e.embedding, CAST(0 AS DOUBLE), (acc, x) -> "
-        "acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-    )
     return spark.sql(_bq_sql(
         codes_body="SELECT * FROM bq_codes_v",
         xor1="(c.w1 ^ q.q1)",
         xor2="(c.w2 ^ q.q2)",
-        cos=spark_cos,
+        cos=_query_cos("e"),
         cand_width=str(width),
-    ).format(
-        qnorm2="aggregate(embedding, CAST(0 AS DOUBLE), (acc, x) -> "
-               "acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
-    ))
+    ).format(qnorm2=_QNORM2))
 
 
 QUERIES["bq_ann_topk"] = bq_ann_topk
@@ -2570,8 +2349,6 @@ def bq_bits_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     count); the exact arm is the panel x corpus ground
     truth every recall eval pays. The code table is materialized once and
     shared with bq_ann_topk's view when both run in a session."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     codes = materialize(spark.sql(f"""
         SELECT vec_id, label,
@@ -2580,23 +2357,13 @@ def bq_bits_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM embeddings
     """))
     codes.createOrReplaceTempView("bq_curve_codes_v")
-    spark_cos = (
-        "aggregate(zip_with(e.embedding, q.qv, (x, y) -> "
-        "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0 AS DOUBLE), "
-        "(acc, x) -> acc + x) / sqrt(q.qnorm2 * "
-        "aggregate(e.embedding, CAST(0 AS DOUBLE), (acc, x) -> "
-        "acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-    )
     return spark.sql(_bq_curve_sql(
         codes_body="SELECT * FROM bq_curve_codes_v",
         xor1="(c.w1 ^ q.q1)",
         xor2="(c.w2 ^ q.q2)",
-        cos=spark_cos,
+        cos=_query_cos("e"),
         bits_rel=f"SELECT * FROM VALUES {_bq_masks()} AS t(b, m1, m2)",
-    ).format(
-        qnorm2_e="aggregate(e.embedding, CAST(0 AS DOUBLE), (acc, x) -> "
-                 "acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
-    ))
+    ).format(qnorm2_e=fold_norm2("e.embedding")))
 
 
 QUERIES["bq_bits_recall_curve"] = bq_bits_recall_curve
@@ -2725,8 +2492,6 @@ def bq_asym_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen on the scan — no extra shuffle, no float corpus reads on the
     shortlist path (the code words and the broadcast query panel carry
     everything)."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     codes = materialize(spark.sql(f"""
         SELECT vec_id, label,
@@ -2735,16 +2500,6 @@ def bq_asym_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM embeddings
     """))
     codes.createOrReplaceTempView("bq_asym_codes_v")
-    # folds stay interpreted: the round-12 unrolled 64-term exact-arm
-    # twins measured ~1.7x slower in same-window A/B (0.97 -> 1.70 s);
-    # see OPTIMIZATION_r12.md "unroll boundary"
-    spark_cos = (
-        "aggregate(zip_with(e.embedding, q.qv, (x, y) -> "
-        "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0 AS DOUBLE), "
-        "(acc, x) -> acc + x) / sqrt(q.qnorm2 * "
-        "aggregate(e.embedding, CAST(0 AS DOUBLE), (acc, x) -> "
-        "acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-    )
     spark_score = (
         "aggregate(sequence(1, bt.b), CAST(0 AS DOUBLE), (acc, i) -> "
         "acc + " + _bq_asym_term(
@@ -2756,11 +2511,8 @@ def bq_asym_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_bq_asym_curve_sql(
         codes_body="SELECT * FROM bq_asym_codes_v",
         score=spark_score,
-        cos=spark_cos,
-    ).format(
-        qnorm2_e="aggregate(e.embedding, CAST(0 AS DOUBLE), (acc, x) -> "
-                 "acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
-    ))
+        cos=_query_cos("e"),
+    ).format(qnorm2_e=fold_norm2("e.embedding")))
 
 
 QUERIES["bq_asym_recall_curve"] = bq_asym_recall_curve
@@ -2873,22 +2625,11 @@ ANN_PERSIST_ENV = "SPARK_GRAFT_ANN_PERSIST"
 
 def _ivf_bq_index_sql() -> str:
     """The (vec_id, label, cell, w1, w2) index derivation — shared by the
-    in-session materialize path and the durable-artifact build."""
-    d2 = _spark_l2_to_centroid("e.embedding", "c.embedding")
+    in-session materialize path and the durable-artifact build, which
+    writes this SQL to parquet, so the IVF assignment is inlined as the
+    `a` CTE rather than read from the `ivf_assigned_v` checkpoint."""
     return f"""
-        WITH cents AS (
-            SELECT vec_id AS cell, embedding FROM embeddings
-            WHERE vec_id < {N_IVF_CELLS}
-        ),
-        a AS (
-            SELECT vec_id, cell FROM (
-                SELECT e.vec_id, c.cell,
-                       row_number() OVER (PARTITION BY e.vec_id
-                           ORDER BY floor({d2} * 1000000e0) / 1000000e0,
-                                    c.cell) AS rn
-                FROM embeddings e CROSS JOIN cents c
-            ) WHERE rn = 1
-        )
+        WITH a AS ({_ivf_assign_sql()})
         SELECT e.vec_id, e.label, a.cell,
                {_bq_pack_spark(1)} AS w1,
                {_bq_pack_spark(33)} AS w2
@@ -2904,17 +2645,9 @@ def _ann_index_location(sf_dir: str) -> str | None:
     the new digest simply misses and the index rebuilds (the same
     part-file identity idea the nanos-footer cache uses). Refuses the
     fixture/reference trees like the docstore persist path does."""
-    import hashlib  # noqa: PLC0415
-    import os  # noqa: PLC0415
-
     d = os.environ.get(ANN_PERSIST_ENV, "").strip()
     if not d:
         return None
-    from database_toolbox_spark.session import (  # noqa: PLC0415
-        DEFAULT_SF_DIR,
-        persisted_table_path,
-    )
-
     real = os.path.realpath(d)
     active_sf = os.path.realpath(
         os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
@@ -2971,10 +2704,6 @@ def ivf_bq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     session" contract a 100 TB deployment needs. A changed fixture
     changes the digest, forcing a rebuild (never a stale read); results
     are identical either way (tests/test_round12_ops.py)."""
-    import os  # noqa: PLC0415
-
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     loc = _ann_index_location(sf_dir)
     if loc is not None:
@@ -2986,13 +2715,6 @@ def ivf_bq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     else:
         idx_df = materialize(spark.sql(_ivf_bq_index_sql()))
     idx_df.createOrReplaceTempView("ivf_bq_idx_v")
-    spark_cos = (
-        "aggregate(zip_with(e.embedding, q.qv, (x, y) -> "
-        "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0 AS DOUBLE), "
-        "(acc, x) -> acc + x) / sqrt(q.qnorm2 * "
-        "aggregate(e.embedding, CAST(0 AS DOUBLE), (acc, x) -> "
-        "acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-    )
     spark_score = (
         "aggregate(sequence(1, 64), CAST(0 AS DOUBLE), (acc, i) -> "
         "acc + " + _bq_asym_term(
@@ -3004,12 +2726,9 @@ def ivf_bq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_ivf_bq_sql(
         idx_body="SELECT * FROM ivf_bq_idx_v",
         score=spark_score,
-        cos=spark_cos,
+        cos=_query_cos("e"),
         rank_filter=True,
-    ).format(
-        qnorm2_e="aggregate(e.embedding, CAST(0 AS DOUBLE), (acc, x) -> "
-                 "acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"
-    ))
+    ).format(qnorm2_e=fold_norm2("e.embedding")))
 
 
 def ivf_bq_probe_count(spark: SparkSession) -> int:
@@ -3019,12 +2738,7 @@ def ivf_bq_probe_count(spark: SparkSession) -> int:
     quantity the composite ladder's scale claim bounds; the asymmetric
     scan and the rank-filter shortlist both touch ONLY these rows.
     scripts/scaling_sf5.py asserts it stays linear in cell share at 50x."""
-    return spark.sql(f"""
-        SELECT count(*) AS n FROM ivf_bq_idx_v
-        WHERE cell = (SELECT cell FROM ivf_bq_idx_v
-                      WHERE vec_id = {QUERY_VEC_ID})
-          AND vec_id <> {QUERY_VEC_ID}
-    """).collect()[0].n  # guard-exempt: bounded driver fetch (1 count row)
+    return _cell_probe_count(spark, "ivf_bq_idx_v")
 
 
 QUERIES["ivf_bq_ann_topk"] = ivf_bq_ann_topk
@@ -3101,26 +2815,9 @@ def ivf_rebalance_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     view ivf_ann_topk registers); the report itself is a grouped count
     over the assignment plus a 1-row broadcast total — O(cells) work,
     independent of vector dimensionality or corpus bytes."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
-    d2 = _spark_l2_to_centroid("e.embedding", "c.embedding")
-    materialize(spark.sql(f"""
-        WITH cents AS (
-            SELECT vec_id AS cell, embedding FROM embeddings
-            WHERE vec_id < {N_IVF_CELLS}
-        )
-        SELECT vec_id, cell FROM (
-            SELECT e.vec_id, c.cell,
-                   row_number() OVER (PARTITION BY e.vec_id
-                       ORDER BY floor({d2} * 1000000e0) / 1000000e0, c.cell)
-                       AS rn
-            FROM embeddings e CROSS JOIN cents c
-        ) WHERE rn = 1
-    """)).createOrReplaceTempView("ivf_rebalance_assigned_v")
-    return spark.sql(_ivf_rebalance_sql(
-        "SELECT * FROM ivf_rebalance_assigned_v"
-    ))
+    _ivf_assigned(spark)
+    return spark.sql(_ivf_rebalance_sql("SELECT * FROM ivf_assigned_v"))
 
 
 QUERIES["ivf_rebalance_advisor"] = ivf_rebalance_advisor
@@ -3209,25 +2906,13 @@ def mrl_dim_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     def aslice(arr: str, d: str) -> str:
         return f"slice({arr}, 1, {d})"
 
-    def dot(a: str, b: str) -> str:
-        return (f"aggregate(zip_with({a}, {b}, (x, y) -> "
-                f"CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-                f"CAST(0 AS DOUBLE), (acc, x) -> acc + x)")
-
-    def norm2(a: str) -> str:
-        return (f"aggregate({a}, CAST(0 AS DOUBLE), (acc, x) -> "
-                f"acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))")
-
-    cos = (f"{dot('e.embedding', 'q.qv')} / "
-           f"sqrt(q.qnorm2 * {norm2('e.embedding')})")
     ep, qp = aslice("e.embedding", "dm.d"), aslice("q.qv", "dm.d")
-    pcos = f"{dot(ep, qp)} / sqrt({norm2(ep)} * {norm2(qp)})"
     return spark.sql(_mrl_sql(
         dims_rel="SELECT explode(array"
                  + str(MRL_DIMS) + ") AS d",
-        qnorm2=norm2("embedding"),
-        cos=cos,
-        pcos=pcos,
+        qnorm2=_QNORM2,
+        cos=_query_cos("e"),
+        pcos=fold_cos(ep, qp, fold_norm2(ep), fold_norm2(qp)),
         aslice=aslice,
     ))
 
@@ -3306,18 +2991,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     mining pass DPR-style training runs per epoch (in production the
     scan arm is replaced by the ANN ladder above — same contract)."""
     load_tables(spark, sf_dir)
-    spark_cos = (
-        "aggregate(zip_with(e.embedding, q.qv, (x, y) -> "
-        "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0 AS DOUBLE), "
-        "(acc, x) -> acc + x) / sqrt(q.qnorm2 * "
-        "aggregate(e.embedding, CAST(0 AS DOUBLE), (acc, x) -> "
-        "acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-    )
-    return spark.sql(_hn_mine_sql(
-        qnorm2="aggregate(embedding, CAST(0 AS DOUBLE), (acc, x) -> "
-               "acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))",
-        cos=spark_cos,
-    ))
+    return spark.sql(_hn_mine_sql(qnorm2=_QNORM2, cos=_query_cos("e")))
 
 
 QUERIES["hard_negative_mining"] = hard_negative_mining

@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from database_toolbox_spark.functions import money
 from database_toolbox_spark.operators._oracle import R
-from database_toolbox_spark.session import load_table, load_tables
+from database_toolbox_spark.session import load_table, load_tables, materialize
 
 
 def hll_sketch_merge_check(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -504,8 +504,6 @@ def bloom_token_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     then per-source aggregation. Exact truth via one semi-join for the
     false-positive accounting (test harness only at scale)."""
     load_tables(spark, sf_dir)
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     # toks is referenced by build, probe, and truth — materialize the
     # distinct (source, token) set once instead of re-exploding the corpus
     # per reference (the multiply-referenced-CTE inlining trap)
@@ -966,8 +964,6 @@ def count_min_sketch_accuracy(spark, sf_dir: str):
     joins the TakeOrdered top-{CMS_TOP} against {CMS_D} cells each. At
     100 TB the sketch build is the only corpus-grain pass and its output
     is a KB-scale table — the point of sketching."""
-    from database_toolbox_spark.session import load_table  # noqa: PLC0415
-
     load_table(spark, sf_dir, "documents")
     return spark.sql(_cms_sql(
         "SELECT explode(split(text, ' ')) AS term FROM documents",

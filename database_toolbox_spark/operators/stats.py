@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from database_toolbox_spark.functions import canon_round
 from database_toolbox_spark.operators._oracle import R
-from database_toolbox_spark.session import load_table, load_tables
+from database_toolbox_spark.session import load_table, load_tables, materialize
 
 
 def segment_stats_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -462,8 +462,6 @@ def theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual pass so the pairwise join runs exactly once. The exact
     medians interpolate identically in both engines (same guard as
     exact_percentile_battery); outputs are canon-rounded."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     materialize(spark.sql(_THEIL_DAILY_SQL.format(
         xd="datediff(CAST(o_orderdate AS DATE), DATE '1992-01-01')",
@@ -1362,8 +1360,6 @@ def stl_decomposition_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized once (referenced by the seasonal agg AND the final
     join; inlined, Catalyst replays the orders scan + window per
     reference)."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     materialize(spark.sql(
         _STL_DET_SQL.format(dow="CAST(dayofweek(o_orderdate) AS BIGINT)")
@@ -1456,8 +1452,6 @@ def ks_divergence_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     source x grid relations bounded by |sources| * |distinct lengths|;
     the cumulative window partitions by source over the bounded grid.
     Identical SQL text on both engines."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     materialize(
         spark.sql(_KS_PER_VAL_SQL)
@@ -2305,8 +2299,6 @@ def weighted_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeds the bounds row, the bucket histogram and the in-bucket refine —
     inlining would re-run the corpus groupBy 3x); windows run over
     <= {WMED_BUCKETS} buckets or one bucket's grid per flag."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     materialize(spark.sql(_WMED_PW)).createOrReplaceTempView("wmed_pw_v")
     return spark.sql(_wmedian_sql("SELECT * FROM wmed_pw_v"))
@@ -2693,8 +2685,6 @@ def brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one join + grouped agg per order, a broadcast-sized model
     relation (|priorities| x |years|), then two tiny rollups. The fold
     split is a pure function of the key (leakage-proof, reshuffle-stable)."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     materialize(spark.sql(_brier_flagged_sql(
         "CAST(conv(substring(md5(CAST(o.o_orderkey AS STRING)), 1, 4), 16, 10)"
@@ -2786,8 +2776,6 @@ def raking_ipf_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell grid (materialized — the unrolled scaling chain references it
     through every level); everything after is fixed-size regardless of
     corpus scale, the defining property of margin raking."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     materialize(spark.sql("SELECT * FROM " + _RAKE_CELLS)).createOrReplaceTempView(
         "rake_cells_v"
@@ -4392,8 +4380,6 @@ def bayes_ab_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE grouped per-user pass (map-side combinable), then
     closed-form Beta-moment arithmetic on a 2-row relation. O(1) after
     the scan."""
-    from database_toolbox_spark.session import load_table  # noqa: PLC0415
-
     load_table(spark, sf_dir, "events")
     return spark.sql(_bayes_ab_sql(
         "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 4),"

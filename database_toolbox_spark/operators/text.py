@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from database_toolbox_spark.operators._oracle import R
-from database_toolbox_spark.session import load_tables
+from database_toolbox_spark.session import load_tables, materialize
 
 # Tiny stopword lists for the heuristic scorers (public knowledge).
 STOPWORDS = ("the", "a", "of", "and", "to", "in")
@@ -428,8 +428,6 @@ def bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     recompute its window 3x), then two vocabulary-sized grouped
     aggregates, hash joins back on bigram keys, a 1-row broadcast for the
     vocab size — everything shuffles on real keys, nothing quadratic."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     toks = (
         "SELECT /*+ REPARTITION */ doc_id, p.pos, p.col AS term "
@@ -1086,8 +1084,6 @@ def distinctive_terms_by_source(
     partitions by source (bounded). The (source, term) count table is
     materialized once — referenced 4x, and CTE inlining would replay the
     token-grain scan per reference."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     materialize(spark.sql(
         _FW_K_SQL.format(
@@ -1231,8 +1227,6 @@ def bigram_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the two train-count aggregates, the vocab count, and the scoring join
     (CTE inlining would re-run the posexplode + window 4x); count tables
     join back on bigram keys; the 1-row vocab broadcasts."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     spark.sql(
         "SELECT /*+ REPARTITION */ doc_id, source, p.pos, p.col AS term "
@@ -1393,8 +1387,6 @@ def kneser_ney_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame
     counts, the totals row, and the scoring join — CTE inlining would
     replay the corpus-scale groupBy per reader). Everything downstream of
     bc is bounded by the distinct-bigram count; the totals row broadcasts."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     spark.sql(
         "SELECT /*+ REPARTITION */ doc_id, source, p.pos, p.col AS term "
@@ -1623,8 +1615,6 @@ def rake_keyword_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed grouped aggs plus one ordered string_agg per phrase (bounded by
     phrase length). The WHERE on the EXPLODED stream keeps stopwords out
     of the shuffle entirely."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     sw = _sql_list(STOPWORDS)
     materialize(spark.sql(
@@ -1737,7 +1727,6 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     from database_toolbox_spark.operators.profile import (  # noqa: PLC0415
         _PCA_SQ_SQL,
     )
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
 
     load_tables(spark, sf_dir)
     materialize(
@@ -1908,8 +1897,6 @@ def prf_expanded_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     head) under a declared single partition — no global sort ever sees
     the corpus-fraction match sets; a doc promoted into the final
     top-{PRF_TOP} from beyond the base head reports NULL base_rank."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     materialize(spark.sql(_PRF_SPARK_TF)).createOrReplaceTempView(
         "prf_tf_v"

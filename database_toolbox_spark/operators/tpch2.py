@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from database_toolbox_spark.functions import bounded_rank_window, disc_price, money, ratio, ts
 from database_toolbox_spark.operators._oracle import R
-from database_toolbox_spark.session import load_table
+from database_toolbox_spark.session import load_table, load_tables, materialize
 
 _DISC = "l_extendedprice * (1 - l_discount)"
 
@@ -236,8 +236,6 @@ def suppliers_kept_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
     order) on a finished multi-supplier order where NO other supplier was
     late — EXISTS → left_semi, NOT EXISTS → left_anti on (orderkey,
     other-supplier) pairs; top-20 by wait count."""
-    from database_toolbox_spark.session import materialize  # noqa: PLC0415
-
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     li = load_table(spark, sf_dir, "lineitem")
     supplier = F.broadcast(load_table(spark, sf_dir, "supplier"))
@@ -544,8 +542,6 @@ def returns_netting_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped agg on the calendar-bounded (month, segment) grid; all four
     measures come from the same pass (conditional aggregation, no second
     scan of the fact table)."""
-    from database_toolbox_spark.session import load_tables  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     return spark.sql(_RETURNS_NET_SQL.format(
         gross=R("sum(rev)", 2),

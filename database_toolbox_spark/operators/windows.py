@@ -22,7 +22,7 @@ from database_toolbox_spark.functions import (
     money,
 )
 from database_toolbox_spark.operators._oracle import R
-from database_toolbox_spark.session import load_table
+from database_toolbox_spark.session import load_table, load_tables, materialize
 
 
 def supplier_top_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -241,8 +241,6 @@ def status_run_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     same-status order runs per customer via the row_number-difference trick
     — two partitioned windows, one grouped collapse, no self-join. Customers
     with a ≥4-order single-status streak. Identical SQL on both engines."""
-    from database_toolbox_spark.session import load_tables  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     return spark.sql(_ISLANDS_SQL)
 
@@ -251,8 +249,6 @@ def revenue_share_of_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ratio-to-report: each nation's share of its region's total customer
     balance — aggregate once, then a partition-total window over the tiny
     aggregated frame (never over raw rows)."""
-    from database_toolbox_spark.session import load_tables  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     return spark.sql("""
         WITH per_nation AS (
@@ -298,8 +294,6 @@ def _argmax_sql(amax: str, amin: str) -> str:
 def argmax_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """max_by/min_by aggregates: the key of the extreme row without a
     self-join or window — one pass, partials merge like min/max."""
-    from database_toolbox_spark.session import load_tables  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     return spark.sql(_argmax_sql("max_by", "min_by"))
 
@@ -360,11 +354,6 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     references across the three rank chains (10 orders scans in the
     physical plan — wrong at 100 TB); the checkpointed profile is one row
     per customer and every chain reads it for free."""
-    from database_toolbox_spark.session import (  # noqa: PLC0415
-        load_tables,
-        materialize,
-    )
-
     load_tables(spark, sf_dir)
     per_cust_df = materialize(
         spark.sql(f"""
@@ -533,11 +522,6 @@ def gini_customer_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (swapping equal x's leaves Σ i·x unchanged), so bin-local
     tie-breaking is safe. Per-customer revenue is canon-rounded first
     so both engines rank identical doubles."""
-    from database_toolbox_spark.session import (  # noqa: PLC0415
-        load_tables,
-        materialize,
-    )
-
     load_tables(spark, sf_dir)
     per_cust = materialize(spark.sql(f"""
         SELECT o_custkey AS custkey, {R("sum(o_totalprice)")} AS revenue
@@ -592,11 +576,6 @@ def lorenz_decile_shares(spark: SparkSession, sf_dir: str) -> DataFrame:
     only when 10 divides n). The cumulative share is a window over the
     10-row decile table (hash%1 declares the bounded single
     partition)."""
-    from database_toolbox_spark.session import (  # noqa: PLC0415
-        load_tables,
-        materialize,
-    )
-
     load_tables(spark, sf_dir)
     per_cust = materialize(spark.sql(f"""
         SELECT o_custkey AS custkey, {R("sum(o_totalprice)")} AS revenue
@@ -764,8 +743,6 @@ def rfm_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded trans relation (_RFM_MIG_WINDOW_TAIL) — the join spelling
     referenced trans twice and CTE inlining replayed the whole
     per_cy + 5-window chain per reference; the oracle keeps the join."""
-    from database_toolbox_spark.session import load_tables  # noqa: PLC0415
-
     load_tables(spark, sf_dir)
     return spark.sql(
         _RFM_MIG_SQL.format(tail=_RFM_MIG_WINDOW_TAIL).format(

@@ -7,7 +7,7 @@ before per-query release existed)."""
 
 import pytest
 
-from database_toolbox_spark.operators import graph
+from database_toolbox_spark.operators import graph, similarity
 from database_toolbox_spark.session import (
     materialize,
     measured,
@@ -260,14 +260,40 @@ GRAPH_CHECKPOINTS = {
     "personalized_pagerank": 3,
 }
 
+# the vector tier: each IVF consumer's one index checkpoint (from
+# similarity._ivf_assigned), the code tables, and the few multiply-read
+# intermediates; ivf_cell_assignments reads the assignment once and pins
+# nothing. A consumer that re-checkpoints the index fails here.
+SIMILARITY_CHECKPOINTS = {
+    "mutual_nn_pairs": 2,
+    **dict.fromkeys((
+        "ann_recall_eval", "bq_ann_topk", "bq_asym_recall_curve",
+        "bq_bits_recall_curve", "embedding_anisotropy",
+        "hard_negative_pairs", "ivf_ann_topk", "ivf_bq_ann_topk",
+        "ivf_nprobe_recall_curve", "ivf_rebalance_advisor",
+        "ivfpq_ann_topk", "mmr_diverse_topk", "ndcg_ann_eval",
+    ), 1),
+    **dict.fromkeys((
+        "cosine_topk", "dim_truncation_recall", "embedding_centroid_drift",
+        "hard_negative_mining", "hybrid_rrf_search", "ivf_cell_assignments",
+        "jl_projection_stats", "knn_graph_topk", "lsh_ann_topk",
+        "lsh_bucket_histogram", "mrl_dim_recall_curve", "pq_ann_topk",
+        "pq_distortion_eval", "sq8_ann_topk",
+    ), 0),
+}
+PINNED_QUERIES = {**graph.QUERIES, **similarity.QUERIES}
+PINNED_CHECKPOINTS = {**GRAPH_CHECKPOINTS, **SIMILARITY_CHECKPOINTS}
 
-@pytest.mark.parametrize("name", sorted(graph.QUERIES))
-def test_graph_query_checkpoints_are_pinned(spark, name):
+
+@pytest.mark.parametrize("name", sorted(PINNED_QUERIES))
+def test_graph_query_checkpoints_are_pinned(spark, monkeypatch, name):
+    # the durable ANN index path reads parquet instead of checkpointing
+    monkeypatch.delenv(similarity.ANN_PERSIST_ENV, raising=False)
     with measured(spark, name) as run:
-        df = run.build(graph.QUERIES[name], spark, SF_DIR)
+        df = run.build(PINNED_QUERIES[name], spark, SF_DIR)
         run.execute(noop_write, df)
         rows = df.collect()
-    expected = GRAPH_CHECKPOINTS[name]
+    expected = PINNED_CHECKPOINTS[name]
     if expected is None:
         # edges + the symmetrized graph, then one per peeling round run:
         # every round reported after round 0 plus the unchanged round that
