@@ -12,17 +12,20 @@ Reimplements the reference's catalog surface natively on `spark.catalog`:
   — `/root/reference/tests/sqlite/sqlite.yaml:7-24`.
 - `search_entries` (dataplex-style): wildcard catalog search with paging
   — `/root/reference/tests/dataplex/test_mcp.py:160-189`.
+- `lookup_entry` / `search_aspect_types` (dataplex-style): one entry's
+  columns, and the column types with their usage counts.
 
 Catalog metadata is inherently tiny (hundreds of rows for thousands of
-tables), so rows are assembled driver-side from `spark.catalog` and returned
-as a DataFrame — the scan/shuffle machinery is irrelevant here; what matters
-at scale is that we read only metadata, never data files.
+tables), so every tool builds its answer on the driver from one column
+listing (`_column_rows`): filtering, ordering, paging and counting happen in
+Python, and the result is a `local_frame` (a LocalRelation). A catalog
+answer runs no Spark job — not even when it is rendered to JSON — and
+reads only metadata, never data files.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from database_toolbox_spark.session import local_frame
@@ -66,10 +69,12 @@ def _visible_tables(spark: SparkSession) -> list[tuple[str, str]]:
     ]
 
 
-def list_tables(
+def _column_rows(
     spark: SparkSession, table_names: str | None = "", schema_name: str = "default"
-) -> DataFrame:
-    """Redshift-dialect `list_tables`: one row per column, ordered."""
+) -> list[tuple]:
+    """The `list_tables` rows, built on the driver: one LIST_TABLES_SCHEMA
+    tuple per column of every visible table the CSV filter admits, ordered
+    by (schema, table, position)."""
     wanted = _csv_names(table_names)
     rows = []
     for namespace, name in _visible_tables(spark):
@@ -91,11 +96,35 @@ def list_tables(
                     None,  # temp views carry no column defaults
                 )
             )
-    # rows are already driver-local: sort here (ASCII names — Python and
-    # UTF8-binary order agree) instead of paying a sort exchange for a
-    # ~70-row result
+    # Python and Spark's UTF8-binary string order agree (code point order)
     rows.sort(key=lambda r: (r[0], r[1], r[3]))
-    return local_frame(spark, rows, LIST_TABLES_SCHEMA)
+    return rows
+
+
+def _matches(query: str, *values: str) -> bool:
+    """Search semantics shared by the Dataplex-style tools: `*` (or empty)
+    matches everything, else a case-insensitive substring match on any of
+    `values` (surrounding `*` are dropped from the query)."""
+    if not query or query == "*":
+        return True
+    q = query.lower().strip("*")
+    return any(q in v.lower() for v in values)
+
+
+def _page(rows: list, page_size: int) -> list:
+    n = int(page_size)
+    if n < 0:
+        raise ValueError(f"page_size must be >= 0, got {n}")
+    return rows[:n]
+
+
+def list_tables(
+    spark: SparkSession, table_names: str | None = "", schema_name: str = "default"
+) -> DataFrame:
+    """Redshift-dialect `list_tables`: one row per column, ordered."""
+    return local_frame(
+        spark, _column_rows(spark, table_names, schema_name), LIST_TABLES_SCHEMA
+    )
 
 
 def list_table_names(spark: SparkSession, table_names: str | None = "") -> DataFrame:
@@ -118,16 +147,12 @@ def search_entries(
     spark: SparkSession, query: str = "*", page_size: int = 10
 ) -> DataFrame:
     """Dataplex-style catalog search: substring match on table/column names,
-    `*` (or empty) matches everything; paged via LIMIT
-    (tests/dataplex/test_mcp.py:160-189 calls {"query": "*", "page_size": 1})."""
-    cat = list_tables(spark, table_names="")
-    if query and query not in ("*", ""):
-        q = query.lower().strip("*")
-        cat = cat.filter(
-            F.lower(F.col("table_name")).contains(q)
-            | F.lower(F.col("column_name")).contains(q)
-        )
-    return cat.orderBy("table_name", "column_position").limit(int(page_size))
+    `*` (or empty) matches everything; ordered by (table, position) and
+    paged (tests/dataplex/test_mcp.py:160-189 calls
+    {"query": "*", "page_size": 1})."""
+    rows = [r for r in _column_rows(spark) if _matches(query, r[1], r[2])]
+    rows.sort(key=lambda r: (r[1], r[3]))
+    return local_frame(spark, _page(rows, page_size), LIST_TABLES_SCHEMA)
 
 
 def lookup_entry(spark: SparkSession, entry: str) -> DataFrame:
@@ -135,17 +160,21 @@ def lookup_entry(spark: SparkSession, entry: str) -> DataFrame:
     upstream prebuilt the reference targets via `--prebuilt dataplex`,
     /root/reference/README.md:692-714; no in-repo test pins the row shape,
     so this keeps the list_tables column contract plus the entry name):
-    full per-column metadata for ONE catalog entry. Unknown entries raise —
-    the lookup tool's error contract, vs search's empty result."""
-    cat = list_tables(spark, table_names=entry)
-    rows = cat.collect()  # guard-exempt: bounded driver fetch (one table's columns)
+    full per-column metadata for ONE catalog entry, ordered by position.
+    Unknown entries raise — the lookup tool's error contract, vs search's
+    empty result."""
+    rows = _column_rows(spark, table_names=entry)
     if not rows:
         raise KeyError(f"unknown catalog entry {entry!r}")
-    return cat.select(
-        F.concat(F.col("schema_name"), F.lit("."), F.col("table_name"))
-        .alias("entry_name"),
-        "*",
-    ).orderBy("column_position")
+    rows.sort(key=lambda r: r[3])
+    return local_frame(
+        spark,
+        [(f"{r[0]}.{r[1]}", *r) for r in rows],
+        T.StructType(
+            [T.StructField("entry_name", T.StringType(), False)]
+            + LIST_TABLES_SCHEMA.fields
+        ),
+    )
 
 
 def search_aspect_types(
@@ -155,16 +184,22 @@ def search_aspect_types(
     the upstream prebuilt): the engine's "aspect types" are its column data
     types — one row per distinct type with its usage count, substring-
     filtered and paged like search_entries."""
-    cat = list_tables(spark, table_names="")
-    agg = (
-        cat.groupBy(F.col("data_type").alias("aspect_type"))
-        .agg(
-            F.count("*").alias("n_columns"),
-            F.countDistinct("table_name").alias("n_tables"),
-        )
+    tables: dict[str, list[str]] = {}  # data type -> table of each column
+    for r in _column_rows(spark):
+        tables.setdefault(r[4], []).append(r[1])
+    rows = [
+        (t, len(names), len(set(names)))
+        for t, names in sorted(tables.items())
+        if _matches(query, t)
+    ]
+    return local_frame(
+        spark,
+        _page(rows, page_size),
+        T.StructType(
+            [
+                T.StructField("aspect_type", T.StringType(), False),
+                T.StructField("n_columns", T.LongType(), False),
+                T.StructField("n_tables", T.LongType(), False),
+            ]
+        ),
     )
-    if query and query not in ("*", ""):
-        agg = agg.filter(
-            F.lower(F.col("aspect_type")).contains(query.lower().strip("*"))
-        )
-    return agg.orderBy("aspect_type").limit(int(page_size))

@@ -12,6 +12,14 @@ Here the engine is Spark SQL: gate → `spark.sql` → Catalyst/Tungsten.
 Parameter binding (the reference's three modes: `$1` positional, `:name`
 named, `{{sql}}` raw template — SURVEY.md §3) collapses to Spark's native
 parameterized SQL `spark.sql(stmt, args=...)`.
+
+A served read pays a fixed floor whatever the data size, so it is kept
+small: the row renderer is one SQL projection built in Python (a handful
+of py4j calls, not a `Column` call per field), and the capped collect's
+first job covers up to `cpus` scan splits (`capped_mcp_content`), so a
+point read is one Spark job. Tool results the driver already
+holds (catalog answers, docstore acknowledgements) are LocalRelations and
+render without a Spark job.
 """
 
 from __future__ import annotations
@@ -20,7 +28,6 @@ import json
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from database_toolbox_spark.gate import check
@@ -40,26 +47,31 @@ def execute_sql(
 def json_rows(df: DataFrame, limit: int | None = None) -> DataFrame:
     """One JSON string column, one row per result row, capped at ``limit``.
 
-    Rows render executor-side with ``to_json(struct(...))`` and the cap
-    stays a DataFrame ``limit`` at the plan root, so it plans as a
-    ``CollectLimit`` (``TakeOrderedAndProject`` under an ORDER BY) that
-    reads only as many partitions as it needs. ``df.toJSON()`` would drop
-    to an RDD first, and the limit would then plan as a ``GlobalLimit``
-    over a single-partition shuffle. The strings are the ones
-    ``Dataset.toJSON`` writes: columns are renamed positionally before the
-    struct is built (duplicate and dotted names stay addressable) and cast
-    to the row encoder's types, which is what ``toJSON`` renders (ANSI
-    intervals widen to DAY TO SECOND / YEAR TO MONTH). Null fields are
-    omitted and timestamps use the session time zone, as in ``toJSON``."""
-    enc = T.StructType.fromJson(json.loads(df._jdf.exprEnc().schema().json()))
-    cols = []
+    Rows render executor-side with ``to_json(struct(...))``, built as one
+    SQL projection (a single ``selectExpr`` instead of a PySpark ``Column``
+    call per field), and the cap stays a DataFrame ``limit`` at the plan
+    root, so it plans as a ``CollectLimit`` (``TakeOrderedAndProject``
+    under an ORDER BY) that reads only as many partitions as it needs.
+    ``df.toJSON()`` would drop to an RDD first, and the limit would then
+    plan as a ``GlobalLimit`` over a single-partition shuffle. The strings
+    are the ones ``Dataset.toJSON`` writes: columns are renamed
+    positionally before the struct is built (duplicate and dotted names
+    stay addressable) and cast to the row encoder's types, which is what
+    ``toJSON`` renders (ANSI intervals widen to DAY TO SECOND / YEAR TO
+    MONTH). The cast target is the encoder type's own SQL text, so nested
+    field names that need quoting parse. Null fields are omitted and
+    timestamps use the session time zone, as in ``toJSON``."""
+    jenc = df._jdf.exprEnc().schema()
+    enc = T.StructType.fromJson(json.loads(jenc.json()))
+    fields = []
     for i, (f, e) in enumerate(zip(df.schema.fields, enc.fields)):
-        col = F.col(f"_{i}")
+        col = f"`_{i}`"
         if e.dataType != f.dataType:
-            col = col.cast(e.dataType)
-        cols.append(col.alias(f.name))
-    out = df.toDF(*[f"_{i}" for i in range(len(cols))]).select(
-        F.to_json(F.struct(*cols)).alias("json")
+            col = f"CAST({col} AS {jenc.apply(i).dataType().sql()})"
+        name = f.name.replace("`", "``")
+        fields.append(f"{col} AS `{name}`")
+    out = df.toDF(*[f"_{i}" for i in range(len(fields))]).selectExpr(
+        f"to_json(struct({', '.join(fields)})) AS json"
     )
     return out if limit is None else out.limit(limit)
 
@@ -99,7 +111,15 @@ def capped_mcp_content(
     driver from `SELECT * FROM lineitem` arriving over MCP — the plan
     itself stays distributed, and the cap is a CollectLimit at its root
     (see json_rows), so no shuffle and no extra job gathers the capped
-    rows."""
+    rows. The CollectLimit's first job scans up to `cpus` partitions
+    (`spark.sql.limit.initialNumPartitions`, set by `session.get_spark`
+    to its local thread count, 32 by default), so a point read whose
+    match sits in any of those scan splits runs one Spark job. Each
+    partition of a round renders up to max_rows+1 rows, so the first job
+    hands the driver at most min(cpus, splits) x (max_rows+1) rendered
+    rows; an unordered bulk read over many non-empty splits (`SELECT *`
+    over a multi-row-group table) pays for the point-read job in rendered
+    rows and driver bytes."""
     n = max_tool_rows() if max_rows is None else max_rows
     if n <= 0:
         return mcp_content(df)

@@ -2847,8 +2847,7 @@ ORACLE["ivf_rebalance_advisor"] = _ivf_rebalance_sql(
 MRL_DIMS = (8, 16, 32)
 
 
-def _mrl_sql(dims_rel: str, qnorm2: str, cos: str, pcos: str,
-             aslice) -> str:
+def _mrl_sql(dims_rel: str, qnorm2: str, cos: str, pcos: str) -> str:
     return f"""
         WITH dims AS ({dims_rel}),
         qs AS (
@@ -2913,7 +2912,6 @@ def mrl_dim_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         qnorm2=_QNORM2,
         cos=_query_cos("e"),
         pcos=fold_cos(ep, qp, fold_norm2(ep), fold_norm2(qp)),
-        aslice=aslice,
     ))
 
 
@@ -2940,7 +2938,6 @@ def _mrl_oracle() -> str:
         qnorm2=norm2("embedding"),
         cos=cos,
         pcos=pcos,
-        aslice=aslice,
     )
 
 

@@ -70,6 +70,13 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", shuffle)
+        # A capped read (CollectLimit) scans up to `cpus` partitions in its
+        # first job instead of one: a point lookup whose match sits in any
+        # of those scan splits needs one Spark job, not a probe plus
+        # retries. The price: an unordered capped read renders up to
+        # max_rows+1 rows in every non-empty split of that first round
+        # (see executor.capped_mcp_content).
+        .config("spark.sql.limit.initialNumPartitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -11,7 +11,12 @@ import json
 import pytest
 
 from database_toolbox_spark import registry
-from database_toolbox_spark.catalog import list_table_names, list_tables, search_entries
+from database_toolbox_spark.catalog import (
+    list_table_names,
+    list_tables,
+    search_aspect_types,
+    search_entries,
+)
 from database_toolbox_spark.session import TABLES, load_tables
 from tests.conftest import SF_DIR
 
@@ -66,6 +71,12 @@ def test_search_entries_wildcard_and_paging(spark):
     assert search_entries(spark, "*", page_size=1).count() == 1
     hits = search_entries(spark, "orderkey", page_size=50).collect()
     assert hits and all("orderkey" in r.column_name for r in hits)
+
+
+@pytest.mark.parametrize("tool", [search_entries, search_aspect_types])
+def test_negative_page_size_raises(spark, tool):
+    with pytest.raises(ValueError, match="page_size"):
+        tool(spark, "*", page_size=-1)
 
 
 def test_registry_surface(spark):

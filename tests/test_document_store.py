@@ -5,6 +5,7 @@ structured filters, and the read-only write-tool policy."""
 from __future__ import annotations
 
 import json
+import re
 
 import pytest
 
@@ -78,6 +79,24 @@ def test_get_documents_roundtrip_and_payload(spark):
     assert doc["o_orderkey"] == first_key and "o_totalprice" in doc
     assert rows[1].get("data") is None  # NULL data (serializer may omit)
 
+
+def test_get_documents_collects_one_filtered_scan_per_collection(spark):
+    """get_documents answers with a LocalRelation, so the plan it collects
+    while building that answer is pinned here rather than by its operator's
+    plan fingerprint: one parquet scan per requested collection with the
+    key predicate pushed into it, no exchange and no join."""
+    from database_toolbox_spark.document_store import _path_matches
+    from database_toolbox_spark.operators.docstore_ops import _GET_PATHS
+    from database_toolbox_spark.plans import explain_str
+
+    plan = explain_str(_path_matches(spark, _GET_PATHS), "formatted")
+    assert "Exchange" not in plan and "Join" not in plan
+    scans = len(re.findall(r"^\(\d+\) Scan parquet", plan, re.M))
+    assert scans == 4  # orders, documents, lineitem, part
+    pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
+    assert len(pushed) == scans
+    for key in ("o_orderkey", "doc_id", "l_orderkey", "p_partkey"):
+        assert sum(key in ln for ln in pushed) == 1, (key, pushed)
 
 def test_query_collection_filters_order_limit(spark):
     result = _call_tool(

@@ -3,6 +3,8 @@
 - ``rows_as_json`` writes the exact strings ``Dataset.toJSON`` writes,
   over a corpus of column types and names, and its row cap sits at the
   plan root (CollectLimit / TakeOrderedAndProject, no shuffle).
+- A served call runs a fixed number of Spark jobs: one for a capped read,
+  one for a docstore fetch or update, none for a catalog answer.
 - Driver-local tool results (catalog listings, docstore reads and write
   acknowledgements, looker metadata) and the docstore write overlays are
   LocalRelations. None is a parallelized RDD (``LogicalRDD``), whose every
@@ -25,7 +27,7 @@ from database_toolbox_spark.executor import (
     rows_as_json,
 )
 from database_toolbox_spark.plans import explain_str
-from database_toolbox_spark.session import TABLES, load_tables
+from database_toolbox_spark.session import TABLES, load_tables, measured
 from tests.conftest import SF_DIR
 
 
@@ -64,6 +66,10 @@ CORPUS = {
         "AS s, array(map('a', array(1))) AS deep"
     ),
     "names": "SELECT 1 AS a, 2 AS a, 'x' AS `b.c`, 'y' AS `b`, 3 AS `x y`",
+    "quoted": (
+        "SELECT 1 AS `a``b`, named_struct('a b', INTERVAL '1' DAY, "
+        "'c`d', array(INTERVAL '2' HOUR)) AS `s``t`"
+    ),
     "empty": "SELECT id, CAST(id AS STRING) AS s FROM range(5) WHERE id < 0",
     "ordered": ORDERED,
     "table": "SELECT * FROM orders WHERE o_orderkey < 100",
@@ -95,6 +101,13 @@ def test_max_rows_truncation_marker(spark):
     assert len(content) == 6
     exact = capped_mcp_content(spark.sql(ORDERED + " LIMIT 5"), max_rows=5)
     assert len(exact) == 5
+
+
+def test_capped_table_scan_returns_the_cap_and_the_marker(spark):
+    content = capped_mcp_content(spark.sql("SELECT * FROM lineitem"), max_rows=50)
+    assert len(content) == 51
+    assert all("l_orderkey" in json.loads(c["text"]) for c in content[:50])
+    assert json.loads(content[50]["text"]) == {"truncated": True, "max_rows": 50}
 
 
 def test_row_cap_is_the_plan_root_without_a_shuffle(spark):
@@ -179,6 +192,57 @@ def test_write_results_and_overlays_are_local(spark):
     finally:
         spark.conf.set(WRITES_CONF, "deny")
         load_tables(spark, SF_DIR, replace=True)
+
+
+@pytest.fixture
+def split_orders(spark, tmp_path):
+    """``orders`` spread over four parquet files (four scan partitions)."""
+    spark.table("orders").repartition(4).write.parquet(str(tmp_path / "o"))
+    spark.read.parquet(str(tmp_path / "o")).createOrReplaceTempView("orders_split")
+    yield
+    spark.catalog.dropTempView("orders_split")
+
+
+# case -> (tool, arguments, Spark jobs the call runs, needs opted-in writes)
+SERVED_JOBS = {
+    "execute_sql_point": (
+        "execute_sql", {"sql": "SELECT * FROM orders WHERE o_orderkey = 1"}, 1, False,
+    ),
+    "execute_sql_split_miss": (
+        "execute_sql", {"sql": "SELECT * FROM orders_split WHERE o_orderkey < 0"},
+        1, False,
+    ),
+    "list_tables": ("list_tables", {}, 0, False),
+    "search_entries": ("search_entries", {"query": "key", "page_size": 5}, 0, False),
+    "lookup_entry": ("lookup_entry", {"entry": "orders"}, 0, False),
+    "search_aspect_types": ("search_aspect_types", {}, 0, False),
+    "get_documents": (
+        "get_documents",
+        {"document_paths": '["customer/1", "orders/1", "orders/999999999"]'},
+        1, False,
+    ),
+    "update_document": (
+        "update_document",
+        {"collection": "customer", "document_path": "customer/1",
+         "fields": '{"c_acctbal": 1.5}'},
+        1, True,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(SERVED_JOBS))
+def test_served_call_spark_jobs(spark, split_orders, case):
+    tool, arguments, jobs, writes = SERVED_JOBS[case]
+    if writes:
+        spark.conf.set(WRITES_CONF, "session")
+    try:
+        with measured(spark, case) as run:
+            registry.call_tool(spark, tool, arguments)
+    finally:
+        if writes:
+            spark.conf.set(WRITES_CONF, "deny")
+            load_tables(spark, SF_DIR, replace=True)
+    assert run.jobs == jobs
 
 
 def test_explore_tables_match_their_from_clause():
