@@ -496,7 +496,8 @@ def get_rules(spark: SparkSession) -> DataFrame:
 # of (update, a per-column CASE) or filters rows out of (delete, a NOT
 # key-IN filter) the immutable parquet; added rows are a LocalRelation, so
 # reads of the overlaid view stay JVM-only. Storage is never touched (the
-# sinks policy holds); a load_tables() re-register drops the overlay. This
+# sinks policy holds). The overlay is a caller-substituted view to
+# load_tables(), which keeps it; load_tables(replace=True) drops it. This
 # is the Spark-native reading of a document write: a new logical plan over
 # the same files, not an in-place mutation.
 
@@ -511,8 +512,8 @@ def _persist_overlay(spark: SparkSession, collection: str) -> None:
     """Round-10 (opt-in on top of opt-in): when $SPARK_GRAFT_DOCSTORE_PERSIST
     names a scratch directory, write the collection's current overlay view
     back to `<dir>/<collection>.parquet` and re-register the view from the
-    persisted copy — session.load_table prefers that copy, so the write
-    survives a fresh load_tables() / a new session (upstream Firestore
+    persisted copy — session registration prefers that copy, so the write
+    survives load_tables(replace=True) / a new session (upstream Firestore
     durability, README.md:792-836). Write-to-tmp-then-swap: the overlay
     plan may READ the previous persisted copy, so it is fully spooled to a
     sibling tmp dataset before the old files are replaced. The fixture
@@ -522,45 +523,21 @@ def _persist_overlay(spark: SparkSession, collection: str) -> None:
 
     from database_toolbox_spark.session import (  # noqa: PLC0415
         DOCSTORE_PERSIST_ENV,
-        _view_registry,
+        active_sf_dir,
+        load_table,
+        scratch_dir,
     )
 
-    d = os.environ.get(DOCSTORE_PERSIST_ENV, "").strip()
-    if not d:
+    d = scratch_dir(DOCSTORE_PERSIST_ENV)
+    if d is None:
         return
-    real = os.path.realpath(d)
-    # Also refuse the ACTIVE fixture tree, wherever it lives: a custom
-    # $SPARK_GRAFT_SF_DIR outside /root/testdata would otherwise collide
-    # with the fixture's <collection>.parquet FILE (rmtree no-ops on a
-    # file, then the move errors mid-write) — round-10 ADVICE item 2.
-    from database_toolbox_spark.session import DEFAULT_SF_DIR  # noqa: PLC0415
-
-    active_sf = os.path.realpath(
-        os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
-    )
-    forbidden_roots = ["/root/testdata", "/root/reference", active_sf]
-    for forbidden in forbidden_roots:
-        if (
-            real == forbidden
-            or real.startswith(forbidden + os.sep)
-            or forbidden.startswith(real + os.sep)
-        ):
-            raise ValueError(
-                f"{DOCSTORE_PERSIST_ENV} must point at a scratch "
-                f"directory disjoint from {forbidden}"
-            )
     os.makedirs(d, exist_ok=True)
     dst = os.path.join(d, f"{collection}.parquet")
     tmp = dst + ".tmp"
     spark.table(collection).write.mode("overwrite").parquet(tmp)
     shutil.rmtree(dst, ignore_errors=True)
     os.replace(tmp, dst) if os.path.isfile(tmp) else shutil.move(tmp, dst)
-    df = spark.read.parquet(dst)
-    df = df.select(*[f.name for f in df.schema])
-    df.createOrReplaceTempView(collection)
-    # registry entries are (df, source path) so load_table can detect a
-    # mid-session source switch and re-register (session._view_registry)
-    _view_registry(spark)[collection] = (df, dst)
+    load_table(spark, active_sf_dir(), collection, replace=True)
 
 
 def _deny(name: str) -> None:

@@ -34,6 +34,7 @@ from database_toolbox_spark.operators._fold import (
 )
 from database_toolbox_spark.operators._oracle import R
 from database_toolbox_spark.session import (
+    load_table,
     load_tables,
     materialize,
     report_sort,
@@ -200,7 +201,7 @@ def near_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = materialize(
         minhash_near_dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
     )
-    docs = load_tables(spark, sf_dir)["documents"]
+    docs = load_table(spark, sf_dir, "documents")
     dup_docs = (
         pairs.select(F.col("doc_a").alias("doc_id"))
         .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))

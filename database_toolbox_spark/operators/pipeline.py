@@ -17,7 +17,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from database_toolbox_spark.operators._oracle import R
-from database_toolbox_spark.session import load_tables, local_frame, materialize
+from database_toolbox_spark.session import (
+    load_table,
+    load_tables,
+    local_frame,
+    materialize,
+)
 
 CHUNK_TOKENS = 32
 CHUNK_STRIDE = 24  # 8-token overlap
@@ -538,7 +543,7 @@ def train_bpe(
 
     from pyspark.sql import functions as F  # noqa: PLC0415
 
-    docs = load_tables(spark, sf_dir)["documents"]
+    docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.select(
             F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("word")
@@ -642,7 +647,7 @@ def apply_bpe(
 
     from pyspark.sql import functions as F  # noqa: PLC0415
 
-    docs = load_tables(spark, sf_dir)["documents"]
+    docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.select(
             F.explode(F.split(F.lower("text"), "[^a-z]+")).alias("word")

@@ -46,11 +46,11 @@ from database_toolbox_spark.operators._fold import (
 )
 from database_toolbox_spark.operators._oracle import R
 from database_toolbox_spark.session import (
-    DEFAULT_SF_DIR,
     load_table,
     load_tables,
     materialize,
     persisted_table_path,
+    scratch_dir,
 )
 
 N_PLANES = 8
@@ -507,9 +507,8 @@ def jl_projection_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.06 s read was contended) - the fixture table is small enough to
     be overhead-bound; the rewrite is kept for the scale shape: the
     projection executes exactly once and runs in codegen."""
-    tables = load_tables(spark, sf_dir)
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    tables["embeddings"].repartitionByRange(
+    load_table(spark, sf_dir, "embeddings").repartitionByRange(
         n_parts, "vec_id"
     ).createOrReplaceTempView("jl_emb")
 
@@ -2643,26 +2642,11 @@ def _ann_index_location(sf_dir: str) -> str | None:
     digest of the source parquet's (realpath, size, mtime_ns) — a changed
     fixture changes the digest, so a stale artifact can never be read:
     the new digest simply misses and the index rebuilds (the same
-    part-file identity idea the nanos-footer cache uses). Refuses the
+    part-file identity idea session._dataset keys on). Refuses the
     fixture/reference trees like the docstore persist path does."""
-    d = os.environ.get(ANN_PERSIST_ENV, "").strip()
-    if not d:
+    d = scratch_dir(ANN_PERSIST_ENV, sf_dir)
+    if d is None:
         return None
-    real = os.path.realpath(d)
-    active_sf = os.path.realpath(
-        os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
-    )
-    for forbidden in ["/root/testdata", "/root/reference", active_sf,
-                      os.path.realpath(sf_dir)]:
-        if (
-            real == forbidden
-            or real.startswith(forbidden + os.sep)
-            or forbidden.startswith(real + os.sep)
-        ):
-            raise ValueError(
-                f"{ANN_PERSIST_ENV} must point at a scratch directory "
-                f"disjoint from {forbidden}"
-            )
     src = persisted_table_path("embeddings") or os.path.join(
         sf_dir, "embeddings.parquet"
     )

@@ -73,7 +73,7 @@ def theta_set_ops_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     which plain HLL cannot: distinct clickers ∪/∩/∖ purchasers, each
     estimate checked within 5% of the exact value. At scale the sketches
     are built once per source partition and combined without a re-scan."""
-    events = load_tables(spark, sf_dir)["events"]
+    events = load_table(spark, sf_dir, "events")
     clicks = events.filter(F.col("event_type") == "click")
     buys = events.filter(F.col("event_type") == "purchase")
     sk = (
@@ -165,7 +165,7 @@ def hll_time_rollup_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollups one-pass at 100 TB (hour partials persist; coarser grains merge
     sketches instead of rescanning events). Flag = merged estimate within
     5% of the exact daily distinct."""
-    events = load_tables(spark, sf_dir)["events"]
+    events = load_table(spark, sf_dir, "events")
     hourly = events.groupBy(
         F.date_trunc("hour", "ts").alias("h")
     ).agg(F.hll_sketch_agg("user_id").alias("sk"))
@@ -282,7 +282,7 @@ def bitmap_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Reference parity: exact/approx distinct rollups are warehouse-core SQL
     committed via passthrough (/root/reference/README.md:1715-1716)."""
-    events = load_tables(spark, sf_dir)["events"]
+    events = load_table(spark, sf_dir, "events")
     hourly = events.groupBy(
         F.date_trunc("hour", "ts").alias("h"),
         F.bitmap_bucket_number("user_id").alias("bucket"),

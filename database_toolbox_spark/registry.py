@@ -204,15 +204,13 @@ def _looker_query_tool(
 ) -> DataFrame:
     """The canonical Looker `query` tool: CSV field list, JSON filters."""
     import json as _json  # noqa: PLC0415
-    import os as _os  # noqa: PLC0415
 
     from database_toolbox_spark import looker as _looker  # noqa: PLC0415
-    from database_toolbox_spark.session import DEFAULT_SF_DIR  # noqa: PLC0415
+    from database_toolbox_spark.session import active_sf_dir  # noqa: PLC0415
 
-    sf_dir = _os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
     return _looker.run_query(
         spark,
-        sf_dir,
+        active_sf_dir(),
         explore,
         [f.strip() for f in fields.split(",") if f.strip()],
         _json.loads(filters) if filters else None,
@@ -222,13 +220,10 @@ def _looker_query_tool(
 
 
 def _looker_run_look_tool(spark: SparkSession, look_id: str) -> DataFrame:
-    import os as _os  # noqa: PLC0415
-
     from database_toolbox_spark import looker as _looker  # noqa: PLC0415
-    from database_toolbox_spark.session import DEFAULT_SF_DIR  # noqa: PLC0415
+    from database_toolbox_spark.session import active_sf_dir  # noqa: PLC0415
 
-    sf_dir = _os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
-    return _looker.run_look(spark, sf_dir, int(look_id))
+    return _looker.run_look(spark, active_sf_dir(), int(look_id))
 
 
 def _looker_meta(fn_name: str):

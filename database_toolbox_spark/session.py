@@ -6,6 +6,18 @@ through a connection config (`/root/reference/images/redshift/redshift.yaml:1-8`
 Parquet star schema (TESTDATA.md); "connecting" = registering the Parquet files
 as temp views so `spark.sql` and the catalog tools see them as tables.
 
+Registration and reading are two jobs, and this module owns both:
+- `load_tables` keeps the ten views registered for an sf dir and returns the
+  frame registered under each name. A view whose registration over the same
+  source stands costs a catalog lookup, not a parquet read, so an operator
+  that only runs `spark.sql` over the views pays no read per call.
+- `load_table` registers one table the same way and hands out a FRESH read
+  of it (fresh expression IDs), which DataFrame-API self-joins need.
+- Both read through one per-dataset fact (`_dataset`: schema plus
+  TIMESTAMP(NANOS) columns) and one read (`_read`). No other module writes
+  the view registry (tests/test_local_frame_gate.py): the docstore persist
+  path re-registers its copy through `load_table(..., replace=True)`.
+
 Scale notes (100 TB design):
 - Everything is declarative `spark.read.parquet` → Catalyst gets predicate
   pushdown, column pruning, and partition pruning for free on every operator.
@@ -135,12 +147,44 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def active_sf_dir() -> str:
+    """The data dir a call without one serves, read at call time (tests and
+    callers switch it through the environment after import)."""
+    return os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
+
+
+def scratch_dir(env: str, *also: str) -> str | None:
+    """The directory ``$env`` names for a durable write, or None when it is
+    unset. Raises ValueError unless it is disjoint from the fixture and
+    reference trees, the active data dir and every dir in ``also``: a
+    write there would overwrite (or, for a data dir elsewhere, collide
+    with the ``<table>.parquet`` file of) a source — the sinks policy is
+    "never the source dir"."""
+    d = os.environ.get(env, "").strip()
+    if not d:
+        return None
+    real = os.path.realpath(d)
+    data_dirs = [os.path.realpath(p) for p in (active_sf_dir(), *also)]
+    for forbidden in ["/root/testdata", "/root/reference", *data_dirs]:
+        if (
+            real == forbidden
+            or real.startswith(forbidden + os.sep)
+            or forbidden.startswith(real + os.sep)
+        ):
+            raise ValueError(
+                f"{env} must point at a scratch directory disjoint from "
+                f"{forbidden}"
+            )
+    return d
+
+
 # Opt-in durable docstore writes (see document_store.py): when this env var
 # names a scratch directory and a persisted copy of a table exists there,
-# load_table reads the persisted copy INSTEAD of the fixture parquet — that
-# is what makes a docstore write survive a fresh load_tables()/session. The
-# fixture dir itself is never written (document_store refuses testdata
-# paths), so unsetting the variable restores pristine reads.
+# the table is registered and read from the persisted copy INSTEAD of the
+# fixture parquet — that is what makes a docstore write survive a
+# load_tables(replace=True) or a new session. The fixture dir itself is
+# never written (scratch_dir refuses it), so unsetting the variable
+# restores pristine reads.
 DOCSTORE_PERSIST_ENV = "SPARK_GRAFT_DOCSTORE_PERSIST"
 
 
@@ -170,54 +214,14 @@ def persisted_table_path(name: str) -> str | None:
     return None
 
 
-def _dataset_file_key(path: str) -> str:
-    """Cache key for per-dataset footer-derived facts: directory datasets
-    (the docstore persist path) resolve to ONE part file FIRST and the
-    caches key on that part file's path — Spark writes fresh randomized
-    part names on every overwrite, so a rewritten persisted dataset never
-    returns stale footer info (round-10 ADVICE item 5); fixture files are
-    immutable, so caching by path is sound."""
-    if os.path.isdir(path):
-        parts = [f for f in os.listdir(path) if f.endswith(".parquet")]
-        if not parts:
-            return path
-        return os.path.join(path, sorted(parts)[0])
-    return path
-
-
-def _nanos_ts_columns(path: str) -> tuple[str, ...]:
-    """Columns stored as parquet TIMESTAMP(NANOS), which Spark's vectorized
-    reader rejects ([PARQUET_TYPE_ILLEGAL]). Detected from the footer only;
-    cached per resolved part file (see _dataset_file_key)."""
-    key = _dataset_file_key(path)
-    if os.path.isdir(key):  # directory with no part files yet
-        return ()
-    return _nanos_ts_columns_cached(key)
-
-
-@_lru_cache(maxsize=256)
-def _nanos_ts_columns_cached(path: str) -> tuple[str, ...]:
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    schema = pq.read_schema(path)
-    return tuple(
-        f.name
-        for f in schema
-        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-    )
-
-
 def _view_registry(spark: SparkSession) -> dict[str, tuple[DataFrame, str]]:
     """Per-session map of temp views THIS module registered →
     (the DataFrame we registered, the parquet path it reads). Lets
-    load_table distinguish its own registrations (safe to hand out fresh
-    reads — fresh expression IDs avoid ambiguous self-join errors when
-    operators recombine tables) from caller-substituted views (must be
-    left alone so operators compose — see test_scale_stress replication).
-    The recorded path is what detects a mid-session source switch (a new
-    sf_dir, or a docstore persisted copy appearing/disappearing) and
-    forces a real re-registration."""
+    registration tell its own views (kept while their source stands) from
+    caller-substituted views (must be left alone so operators compose —
+    see test_scale_stress replication). The recorded path is what detects
+    a mid-session source switch (a new sf_dir, or a docstore persisted
+    copy appearing/disappearing) and forces a real re-registration."""
     reg = getattr(spark, "_dts_views", None)
     if reg is None:
         reg = {}
@@ -225,88 +229,105 @@ def _view_registry(spark: SparkSession) -> dict[str, tuple[DataFrame, str]]:
     return reg
 
 
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def _dataset(spark: SparkSession, path: str) -> tuple[T.StructType, tuple[str, ...]]:
+    """The Spark schema of the parquet dataset at ``path`` and its columns
+    stored as TIMESTAMP(NANOS), which Spark's reader rejects
+    ([PARQUET_TYPE_ILLEGAL]) unless they are read as nanos-since-epoch
+    longs: when there are any, ``nanosAsLong`` is set on every call.
+
+    Looked up per resolved data file: a directory dataset (the docstore
+    persist path) resolves to its first part file, and Spark writes fresh
+    randomized part names on every overwrite, so a rewritten dataset never
+    gets stale facts; fixture files are immutable."""
+    key = path
+    if os.path.isdir(path):
+        parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+        key = os.path.join(path, parts[0]) if parts else path
+    schema, nanos = _dataset_facts(spark, key, path)
+    if nanos:
+        spark.conf.set(_NANOS_AS_LONG, "true")
+    return schema, nanos
+
+
 @_lru_cache(maxsize=256)
-def _dataset_schema(spark: SparkSession, key: str, path: str) -> T.StructType:
-    """Parquet schema per resolved data file (``key``, see
-    _dataset_file_key): the first read of a dataset infers the schema
-    JVM-side (~85 ms of file listing + footer work); every later read
-    passes it explicitly (~14 ms). Keyed on the part FILE path, so a
-    rewritten docstore dataset (fresh randomized part names per
-    overwrite) can never hit a stale entry; bounded like
-    _nanos_ts_columns_cached, so dead keys from overwrites age out."""
-    return spark.read.parquet(path).schema
+def _dataset_facts(
+    spark: SparkSession, key: str, path: str
+) -> tuple[T.StructType, tuple[str, ...]]:
+    """``_dataset`` per resolved data file ``key``, bounded so dead keys
+    from overwrites age out. The nanos columns come from the footer; the
+    schema inference (~85 ms of JVM file listing and footer work) is paid
+    once, and every later read passes the schema explicitly (~14 ms)."""
+    import pyarrow as pa  # noqa: PLC0415
+    import pyarrow.parquet as pq  # noqa: PLC0415
+
+    nanos = () if os.path.isdir(key) else tuple(
+        f.name
+        for f in pq.read_schema(key)
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    )
+    if nanos:  # inference rejects the file unless they read as longs
+        spark.conf.set(_NANOS_AS_LONG, "true")
+    return spark.read.parquet(path).schema, nanos
 
 
-def _fresh_read(spark: SparkSession, path: str) -> DataFrame:
-    """A fresh DataFrame over ``path`` (fresh expression IDs per call)
-    with schema inference paid once per dataset per process."""
-    schema = _dataset_schema(spark, _dataset_file_key(path), path)
-    return spark.read.schema(schema).parquet(path)
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    """A fresh read of ``path`` (fresh expression IDs per call), with
+    TIMESTAMP(NANOS) columns cast back to microsecond timestamps
+    scan-side — a codegen'd projection, no UDF — in the original column
+    order."""
+    schema, nanos = _dataset(spark, path)
+    df = spark.read.schema(schema).parquet(path)
+    if not nanos:
+        return df
+    for c in nanos:
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    return df.select(*schema.names)
 
 
-def load_table(
-    spark: SparkSession, sf_dir: str, name: str, replace: bool = False
-) -> DataFrame:
-    """Read one table and register it as a temp view under its bare name.
+def _register(
+    spark: SparkSession, sf_dir: str, name: str, replace: bool
+) -> tuple[DataFrame, str | None]:
+    """Keep ``name`` registered as a temp view; return the frame registered
+    under it, and its source path when that is our registration standing
+    from an earlier call (no parquet read ran), else None.
 
-    Composability contract: if the CURRENT view under `name` is a caller's
-    substitution (its plan differs from what we registered — detected via
-    ``sameSemantics``, which canonicalizes expression IDs), it is preserved
-    and returned as-is, so operators run against the caller's data. Our own
-    registrations are refreshed with a fresh parquet read each call — fresh
-    expression IDs, so recombining the same table twice never trips Spark's
-    ambiguous-self-join check. ``replace=True`` forces re-registration from
-    parquet (restoring the real table after a test swapped in a view).
-
-    TIMESTAMP(NANOS) columns (e.g. events.ts) are read as nanos-since-epoch
-    longs (`spark.sql.legacy.parquet.nanosAsLong`) and cast back to
-    microsecond timestamps scan-side — a codegen'd projection, no UDF.
-    """
+    A caller-substituted view (its plan differs from what we registered —
+    ``sameSemantics`` canonicalizes expression IDs) is kept, so operators
+    run against the caller's data. Our registration is redone from parquet
+    when its source changed (a new ``sf_dir``, or a docstore persisted copy
+    appeared or vanished) or ``replace`` is set; otherwise it stands,
+    skipping the read and the ~40 ms createOrReplaceTempView round trip."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    ensure_session_confs(spark)
     reg = _view_registry(spark)
     path = persisted_table_path(name) or table_path(sf_dir, name)
     if not replace and spark.catalog.tableExists(name):
         cur = spark.table(name)
         entry = reg.get(name)
         if entry is None or not cur.sameSemantics(entry[0]):
-            # caller-registered (or caller-overwritten) view: leave it
-            return cur
+            return cur, None  # caller-registered (or -overwritten) view
         if entry[1] == path:
-            # the view is our own registration over the SAME source: the
-            # registration stands — just hand out a fresh read (fresh
-            # expression IDs per call; the schema cache makes this ~6x
-            # cheaper than the inferring read, and skipping the ~40 ms
-            # createOrReplaceTempView round trip per table is what makes
-            # per-query-build table loading cheap — the bench now times
-            # construction, and re-registering 10 unchanged views was
-            # ~0.8 s of every build)
-            return _read_with_nanos_cast(spark, path)
-        # our registration but the source path changed (new sf_dir or a
-        # docstore persisted copy appeared/vanished): fall through and
-        # re-register from the new path
-    df = _read_with_nanos_cast(spark, path)
+            _dataset(spark, path)  # scans of the view need nanosAsLong
+            return cur, path
+    df = _read(spark, path)
     df.createOrReplaceTempView(name)
     reg[name] = (df, path)
-    return df
+    return df, None
 
 
-def _read_with_nanos_cast(spark: SparkSession, path: str) -> DataFrame:
-    """Fresh read of ``path`` with TIMESTAMP(NANOS) columns read as
-    nanos-since-epoch longs (the legacy conf MUST be set before the read
-    or inference rejects the file) and cast back to microsecond
-    timestamps scan-side — a codegen'd projection, no UDF — preserving
-    the original column order."""
-    nanos_cols = _nanos_ts_columns(path)
-    if nanos_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = _fresh_read(spark, path)
-    if not nanos_cols:
-        return df
-    for c in nanos_cols:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    return df.select(*[f.name for f in df.schema])  # original column order
+def load_table(
+    spark: SparkSession, sf_dir: str, name: str, replace: bool = False
+) -> DataFrame:
+    """Register one table (see ``load_tables``) and return a fresh read of
+    it: fresh expression IDs per call, so recombining the same table twice
+    through the DataFrame API never trips Spark's ambiguous-self-join
+    check. A caller-substituted view is returned as-is."""
+    ensure_session_confs(spark)
+    df, source = _register(spark, sf_dir, name, replace)
+    return df if source is None else _read(spark, source)
 
 
 def report_sort(df: DataFrame, *cols) -> DataFrame:
@@ -530,13 +551,16 @@ def ensure_session_confs(spark: SparkSession) -> None:
 def load_tables(
     spark: SparkSession, sf_dir: str, replace: bool = False
 ) -> dict[str, DataFrame]:
-    """Register the full star schema as temp views; return name → DataFrame.
-    Register-if-absent (see load_table); ``replace=True`` forces parquet
-    re-registration of every table.
+    """Keep the full star schema registered as temp views; return name →
+    the frame registered under it. No parquet read runs for a view whose
+    registration over the same source still stands (see ``_register``);
+    ``replace=True`` forces parquet re-registration of every table. The
+    returned frames share the views' expression IDs: a DataFrame-API join
+    of a table with itself takes ``load_table`` frames instead.
 
     Mirrors the reference's "source" concept (a connection makes the engine's
     tables visible; `/root/reference/images/redshift/redshift.yaml:1-8`): after
     this call, `spark.sql` and the catalog tools can see every table.
     """
     ensure_session_confs(spark)
-    return {name: load_table(spark, sf_dir, name, replace=replace) for name in TABLES}
+    return {name: _register(spark, sf_dir, name, replace)[0] for name in TABLES}

@@ -23,13 +23,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from database_toolbox_spark.session import _nanos_ts_columns, table_path
+from database_toolbox_spark.session import _dataset, table_path
 
 
 def _raw_schema(ts_nanos: bool) -> T.StructType:
     """events schema for the file stream source. The fixture's ts physical
     type varies by generator version (TIMESTAMP(NANOS) vs MICROS) — detected
-    from the parquet footer, same as session.load_table. Nanos are read as
+    from the parquet footer by session._dataset. Nanos are read as
     longs (nanosAsLong) and converted scan-side; micros are native."""
     ts_type = T.LongType() if ts_nanos else T.TimestampType()
     return T.StructType(
@@ -62,9 +62,8 @@ def _stream_dir(sf_dir: str) -> str:
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as a stream (file source over a staged directory)."""
-    ts_nanos = "ts" in _nanos_ts_columns(table_path(sf_dir, "events"))
-    if ts_nanos:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # sets nanosAsLong when ts is TIMESTAMP(NANOS)
+    ts_nanos = "ts" in _dataset(spark, table_path(sf_dir, "events"))[1]
     raw = (
         spark.readStream.schema(_raw_schema(ts_nanos))
         .format("parquet")

@@ -10,7 +10,7 @@ import re
 import pytest
 
 from database_toolbox_spark.server import handle_request
-from database_toolbox_spark.session import load_tables
+from database_toolbox_spark.session import _view_registry, load_tables, table_path
 from tests.conftest import SF_DIR
 
 
@@ -396,7 +396,9 @@ def test_write_tools_session_overlay_roundtrip(spark):
             assert _call_tool(spark, name, args)["isError"] is True
     finally:
         spark.conf.set(WRITES_CONF, "deny")
-        load_tables(spark, SF_DIR)
+        # the overlay is a substituted view to load_tables(), which keeps
+        # it; only a forced re-registration drops it
+        load_tables(spark, SF_DIR, replace=True)
 
     # deny-by-default restored; parquet (via reloaded views) untouched
     denied = _call_tool(spark, "add_documents", {
@@ -404,6 +406,9 @@ def test_write_tools_session_overlay_roundtrip(spark):
     assert denied["isError"] is True
     assert {r.n_nationkey for r in spark.table("nation").collect()} \
         == base_rows
+    registered, source = _view_registry(spark)["nation"]
+    assert source == table_path(SF_DIR, "nation")
+    assert spark.table("nation").sameSemantics(registered)
 
 
 def test_docstore_persist_roundtrip(spark, tmp_path, monkeypatch):

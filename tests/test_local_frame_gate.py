@@ -16,6 +16,11 @@ place that may call ``localCheckpoint``, ``persist``, ``cache`` or
 ``checkpoint``. It records each pin under the caller's job group, which is
 what lets ``release_materialized`` free a query's storage without touching
 anyone else's; a pin made anywhere else would never be released.
+
+Table registration has one owner too: only ``session.py`` may reference
+the view registry (``_view_registry`` and the session attribute behind
+it). A view registered elsewhere would not be in the registry, so
+``load_tables`` would mistake it for a caller's substitution and keep it.
 """
 
 import ast
@@ -33,6 +38,7 @@ BANNED = ("createDataFrame", "parallelize")
 # (file, enclosing function) -> reviewed block-storage call count
 STORAGE_ALLOWED = {("session.py", "materialize"): 1}
 STORAGE = ("localCheckpoint", "persist", "cache", "checkpoint")
+REGISTRY = ("_view_registry", "_dts_views")
 
 
 class _Sites(ast.NodeVisitor):
@@ -84,4 +90,30 @@ def test_block_storage_goes_through_materialize():
     assert got == STORAGE_ALLOWED, (
         f"block-storage call sites changed: {got} — pin intermediates "
         "with session.materialize, which scopes them to the job group"
+    )
+
+
+def _referenced_name(node: ast.AST):
+    """The name a node refers to: a variable, an attribute, an imported
+    name, or a string constant (``getattr(spark, "...")``)."""
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    if isinstance(node, ast.alias):
+        return node.name
+    if isinstance(node, ast.Constant):
+        return node.value
+    return None
+
+
+def test_view_registry_is_referenced_only_in_session():
+    owners = set()
+    for path in sorted(glob.glob(f"{PKG}/**/*.py", recursive=True)):
+        for node in ast.walk(ast.parse(open(path).read(), filename=path)):
+            if _referenced_name(node) in REGISTRY:
+                owners.add(os.path.relpath(path, PKG))
+    assert owners == {"session.py"}, (
+        f"view registry referenced in {sorted(owners)} — register tables "
+        "through session.load_table / load_tables"
     )
