@@ -42,6 +42,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from database_toolbox_spark.operators._oracle import R
+from database_toolbox_spark.operators.dedup import (
+    _band_pairs_sql,
+    _DUCK_SHINGLES,
+    connected_components,
+    minhash_near_dup_pairs,
+)
 from database_toolbox_spark.session import load_tables, materialize
 
 SEG_TOKENS = 8  # non-overlapping segment width for corpus-level dedup
@@ -251,11 +257,6 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(log diameter)), then each cluster keeps its LONGEST member (token
     count, ties → min doc_id) instead of the arbitrary min-id doc — the
     "keep the best copy" policy real pipelines use."""
-    from database_toolbox_spark.operators.dedup import (  # noqa: PLC0415
-        connected_components,
-        minhash_near_dup_pairs,
-    )
-
     pairs = materialize(
         minhash_near_dup_pairs(spark, sf_dir)
         .select("doc_a", "doc_b")
@@ -521,10 +522,6 @@ QUERIES = {
 
 
 def _duck_oracles() -> dict[str, str]:
-    from database_toolbox_spark.operators.dedup import (  # noqa: PLC0415
-        _band_pairs_sql,
-        _DUCK_SHINGLES,
-    )
     from database_toolbox_spark.operators.text import (  # noqa: PLC0415
         STOPWORDS,
         _sql_list,

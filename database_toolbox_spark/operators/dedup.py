@@ -12,6 +12,11 @@ Design (Spark-first, 100 TB scale):
   candidates = docs sharing a band bucket — the only shuffle is on band
   keys, never a cross join. Exact Jaccard verification runs only on the
   candidate set.
+- One MinHash tier builder (Spark side): `_shingles` checkpoints the
+  shingles into the one `mh_sh` view and `_signatures` the (doc_id, n,
+  h0..h7) signatures over it into the one `mh_sig` view; the shingle set
+  (`_SPARK_SHINGLE_SET`), hash slice (`_minhash_slice`) and band union
+  (`_bands_sql`) are spelled once, for batch and streaming alike.
 - SimHash is a per-doc 16-bit signature via bit-majority voting — one
   grouped aggregation.
 - Embedding near-dup is capped to a fixed id range for the oracle-checked
@@ -26,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from database_toolbox_spark.functions import ratio
 from database_toolbox_spark.operators._fold import (
     fold_cos,
     fold_dot,
@@ -48,17 +54,17 @@ JACCARD_THRESHOLD = 0.5
 # --- shared SQL fragments (per dialect) ------------------------------------
 
 # word 3-gram shingles, distinct per doc; Spark element_at / DuckDB [] are
-# both 1-based.
-_SPARK_SHINGLES = """
+# both 1-based. _SPARK_SHINGLE_SET is the set over a doc's word array `w`.
+_SPARK_SHINGLE_SET = (
+    "array_distinct(transform(sequence(1, size(w) - 2), "
+    "i -> concat_ws('_', element_at(w, i), element_at(w, i + 1), "
+    "element_at(w, i + 2))))"
+)
+_SPARK_SHINGLES = f"""
     WITH toks AS (SELECT /*+ REPARTITION */ doc_id, split(text, ' ') AS w
                   FROM documents),
     sh AS (
-        SELECT doc_id,
-               explode(array_distinct(transform(
-                   sequence(1, size(w) - 2),
-                   i -> concat_ws('_', element_at(w, i), element_at(w, i + 1),
-                                  element_at(w, i + 2))
-               ))) AS s
+        SELECT doc_id, explode({_SPARK_SHINGLE_SET}) AS s
         FROM toks WHERE size(w) >= 3
     )
 """
@@ -76,36 +82,59 @@ _DUCK_SHINGLES = """
 """
 
 
+def _minhash_slice(k: int) -> str:
+    """Hash function k over shingle `s`: a 32-bit slice (8 hex chars) of
+    md5('<k // 4>|' || s), so each digest yields 4 independent functions
+    and k=8 costs two md5 calls per shingle, not eight. Lexicographic min
+    over fixed-width hex = numeric min. md5/substr/concat are identical in
+    both dialects."""
+    return f"substr(md5(concat('{k // 4}|', s)), {1 + 8 * (k % 4)}, 8)"
+
+
 def _minhash_cols() -> str:
-    """k=8 hash functions from 2 md5 digests: each digest yields 4
-    independent 32-bit slices (8 hex chars), so the per-shingle cost is two
-    md5 calls, not eight. Lexicographic min over fixed-width hex = numeric
-    min. md5/substr/concat are identical in both dialects."""
-    cols = []
-    for k in range(N_HASHES):
-        seed, off = k // 4, k % 4
-        cols.append(
-            f"min(substr(md5(concat('{seed}|', s)), {1 + 8 * off}, 8)) AS h{k}"
-        )
-    return ", ".join(cols)
+    """The k=8 signature columns h0..h7 of a per-doc GROUP BY over `sh`."""
+    return ", ".join(
+        f"min({_minhash_slice(k)}) AS h{k}" for k in range(N_HASHES)
+    )
 
 
-def _band_pairs_sql(shingles: str, concat2) -> str:
-    """Full MinHash→LSH→verify pipeline, shared shape for both dialects.
+def _sig_sql(src: str = "sh", sep: str = " ") -> str:
+    """The per-doc (doc_id, n, h0..h7) signature aggregate over the
+    shingle relation `src`; `sep` is the whitespace before FROM."""
+    return (
+        f"SELECT doc_id, count(*) AS n, {_minhash_cols()}{sep}"
+        f"FROM {src} GROUP BY doc_id"
+    )
 
-    concat2(a, b) renders 2-column concatenation in the dialect.
-    """
-    bands_union = "\n            UNION ALL\n".join(
+
+def _bands_sql(concat2, sig: str = "sig") -> str:
+    """The LSH band relation over signature relation `sig`: one UNION ALL
+    branch per band, each (doc_id, band, bkey) with bkey the band's two
+    hashes joined by concat2(a, b) (the dialect's concatenation)."""
+    return "\n            UNION ALL\n".join(
         f"            SELECT doc_id, {b} AS band, "
-        f"{concat2(f'h{2*b}', f'h{2*b+1}')} AS bkey FROM sig"
+        f"{concat2(f'h{2 * b}', f'h{2 * b + 1}')} AS bkey FROM {sig}"
         for b in range(N_BANDS)
     )
+
+
+def _spark_concat2(a: str, b: str) -> str:
+    return f"concat({a}, {b})"
+
+
+def _band_pairs_sql(shingles: str, concat2, sig_body: str | None = None) -> str:
+    """Full MinHash→LSH→verify pipeline, shared shape for both dialects.
+
+    concat2(a, b) renders 2-column concatenation in the dialect; sig_body
+    replaces the inline signature aggregate (the Spark side reads the
+    checkpointed signature view).
+    """
+    sig = sig_body or _sig_sql(sep="\n                ")
     return f"""
         {shingles},
-        sig AS (SELECT doc_id, count(*) AS n, {_minhash_cols()}
-                FROM sh GROUP BY doc_id),
+        sig AS ({sig}),
         bands AS (
-{bands_union}
+{_bands_sql(concat2)}
         ),
         cand AS (
             SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -128,6 +157,34 @@ def _band_pairs_sql(shingles: str, concat2) -> str:
         WHERE m.n_common * 1e0 / (ca.n + cb.n - m.n_common) >= {JACCARD_THRESHOLD}
         ORDER BY m.doc_a, m.doc_b
     """
+
+
+# --- the MinHash tier builder (Spark side) ---------------------------------
+# Catalyst INLINES CTEs: a statement reading the shingle CTE k times
+# explodes the corpus k times, and a banded self-join re-runs the signature
+# aggregate up to 8 times. Consumers read one checkpoint of each instead
+# (session.materialize, an eager localCheckpoint — ~3x less wall clock than
+# cache() at sf0.1). The DuckDB oracles keep the single-statement CTE form.
+_SH_VIEW, _SIG_VIEW = "mh_sh", "mh_sig"
+_SH_CTE = f"WITH sh AS (SELECT * FROM {_SH_VIEW})"
+
+
+def _shingles(spark: SparkSession) -> None:
+    """Checkpoint the (doc_id, s) shingles of the registered `documents`
+    view (a caller-substituted view is honoured) and register them as
+    `mh_sh`."""
+    materialize(
+        spark.sql(f"{_SPARK_SHINGLES} SELECT * FROM sh")
+    ).createOrReplaceTempView(_SH_VIEW)
+
+
+def _signatures(spark: SparkSession) -> None:
+    """`_shingles`, then the (doc_id, n, h0..h7) signatures over `mh_sh`,
+    checkpointed and registered as `mh_sig`."""
+    _shingles(spark)
+    materialize(spark.sql(_sig_sql(_SH_VIEW))).createOrReplaceTempView(
+        _SIG_VIEW
+    )
 
 
 def exact_dup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -155,32 +212,14 @@ def minhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash LSH near-dup detection: band bucketing (4 bands × 2 hashes)
     for candidates, exact Jaccard ≥ 0.5 verification on candidates only.
 
-    Catalyst INLINES CTEs, so in the one-statement form the shingle
-    explosion runs 3× (signature + both verify sides) and the signature
-    aggregate up to 8× (4 band branches × self-join). Materializing both
-    (session.materialize: an eager localCheckpoint) computes each
-    exactly once — same results, ~3× less wall
-    clock at sf0.1 vs cache() (no InMemoryRelation columnar rebuild; the
-    DuckDB oracle keeps the single-statement CTE form, DuckDB materializes
-    CTEs referenced more than once)."""
+    The shingle explosion (signature + both verify sides) and the
+    signature aggregate (4 band branches × self-join) each run once: both
+    are the tier builder's checkpoints (`_signatures`)."""
     load_tables(spark, sf_dir)
-    sh = materialize(spark.sql(f"{_SPARK_SHINGLES} SELECT * FROM sh"))
-    sh.createOrReplaceTempView("mh_sh")
-    sig = materialize(spark.sql(
-        f"SELECT doc_id, count(*) AS n, {_minhash_cols()} "
-        "FROM mh_sh GROUP BY doc_id"
+    _signatures(spark)
+    return spark.sql(_band_pairs_sql(
+        _SH_CTE, _spark_concat2, sig_body=f"SELECT * FROM {_SIG_VIEW}"
     ))
-    sig.createOrReplaceTempView("mh_sig")
-    body = _band_pairs_sql("WITH sh AS (SELECT * FROM mh_sh)",
-                           lambda a, b: f"concat({a}, {b})")
-    # swap the inline sig CTE for the materialized view
-    inline_sig = (
-        f"sig AS (SELECT doc_id, count(*) AS n, {_minhash_cols()}\n"
-        "                FROM sh GROUP BY doc_id),"
-    )
-    assert inline_sig in body, "sig CTE shape drifted; update the swap"
-    body = body.replace(inline_sig, "sig AS (SELECT * FROM mh_sig),")
-    return spark.sql(body)
 
 
 def near_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -208,8 +247,6 @@ def near_dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("is_dup", F.lit(1))
     )
-    from database_toolbox_spark.functions import ratio  # noqa: PLC0415
-
     return (
         docs.join(F.broadcast(dup_docs), "doc_id", "left")
         .groupBy("source")
@@ -242,22 +279,11 @@ def minhash_delta_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     store. Signatures are per-doc (corpus-independent), so the oracle's
     full recompute restricted to delta-touching pairs is value-identical."""
     load_tables(spark, sf_dir)
-    sh = materialize(spark.sql(f"{_SPARK_SHINGLES} SELECT * FROM sh"))
-    sh.createOrReplaceTempView("mhd_sh")
-    sig = materialize(spark.sql(
-        f"SELECT doc_id, count(*) AS n, {_minhash_cols()} "
-        "FROM mhd_sh GROUP BY doc_id"
-    ))
-    sig.createOrReplaceTempView("mhd_sig")
-    bands_union = "\n            UNION ALL\n".join(
-        f"            SELECT doc_id, {b} AS band, "
-        f"concat(h{2 * b}, h{2 * b + 1}) AS bkey FROM mhd_sig"
-        for b in range(N_BANDS)
-    )
+    _signatures(spark)
     delta = f"doc_id % {DELTA_MOD} = {DELTA_REM}"
     return spark.sql(f"""
         WITH bands AS (
-{bands_union}
+{_bands_sql(_spark_concat2, _SIG_VIEW)}
         ),
         delta_bands AS (SELECT * FROM bands WHERE {delta}),
         cand AS (
@@ -269,15 +295,15 @@ def minhash_delta_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         common AS (
             SELECT c.doc_a, c.doc_b, count(*) AS n_common
             FROM cand c
-            JOIN mhd_sh x ON x.doc_id = c.doc_a
-            JOIN mhd_sh y ON y.doc_id = c.doc_b AND y.s = x.s
+            JOIN {_SH_VIEW} x ON x.doc_id = c.doc_a
+            JOIN {_SH_VIEW} y ON y.doc_id = c.doc_b AND y.s = x.s
             GROUP BY c.doc_a, c.doc_b
         )
         SELECT m.doc_a, m.doc_b,
                {R("m.n_common * 1e0 / (ca.n + cb.n - m.n_common)", 6)} AS jaccard
         FROM common m
-        JOIN mhd_sig ca ON ca.doc_id = m.doc_a
-        JOIN mhd_sig cb ON cb.doc_id = m.doc_b
+        JOIN {_SIG_VIEW} ca ON ca.doc_id = m.doc_a
+        JOIN {_SIG_VIEW} cb ON cb.doc_id = m.doc_b
         WHERE m.n_common * 1e0 / (ca.n + cb.n - m.n_common) >= {JACCARD_THRESHOLD}
         ORDER BY m.doc_a, m.doc_b
     """)
@@ -286,14 +312,12 @@ def minhash_delta_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact all-candidate n-gram Jaccard (no LSH): docs sharing ≥1 shingle,
     Jaccard ≥ 0.5. The ground-truth near-dup set that LSH approximates.
-    Shingles materialize once (CTE inlining would explode the corpus 3×;
-    session.materialize cuts lineage without a columnar cache rebuild)."""
+    Reads the builder's shingle checkpoint (inlined, the CTE would explode
+    the corpus 3×)."""
     load_tables(spark, sf_dir)
-    materialize(spark.sql(f"{_SPARK_SHINGLES} SELECT * FROM sh")).createOrReplaceTempView(
-        "nj_sh"
-    )
+    _shingles(spark)
     return spark.sql(f"""
-        WITH sh AS (SELECT * FROM nj_sh),
+        {_SH_CTE},
         cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
         common AS (
             SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, count(*) AS n_common
@@ -310,13 +334,13 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """)
 
 
-# Candidate-generation CTEs for AllPairs prefix filtering (over the
-# materialized `pf_sh` shingle view). Shared with the selectivity test in
-# tests/test_scale_stress.py, which counts `cand` directly. The doc size
-# joins in from the grouped `cnt` relation rather than a second
-# (unordered-frame) window — one Window pass instead of two.
-_PREFIX_CAND_CTES = f"""
-        WITH sh AS (SELECT * FROM pf_sh),
+# Global rarity order over the builder's shingle view: every doc's
+# shingles ranked by document frequency, then shingle text — the order
+# both prefix filters (Jaccard and containment) take their prefixes in.
+# The doc size joins in from the grouped `cnt` relation rather than a
+# second (unordered-frame) window — one Window pass instead of two.
+_RARITY_CTES = f"""
+        {_SH_CTE},
         df AS (SELECT s, count(*) AS df FROM sh GROUP BY s),
         cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
         ordered AS (
@@ -324,7 +348,12 @@ _PREFIX_CAND_CTES = f"""
                    row_number() OVER (PARTITION BY sh.doc_id
                                       ORDER BY df.df, sh.s) AS r
             FROM sh JOIN df ON df.s = sh.s
-        ),
+        )"""
+
+# Candidate-generation CTEs for AllPairs prefix filtering. Shared with the
+# selectivity test in tests/test_scale_stress.py, which counts `cand`
+# directly.
+_PREFIX_CAND_CTES = f"""{_RARITY_CTES},
         prefix AS (
             SELECT o.doc_id, o.s, c.n
             FROM ordered o JOIN cnt c ON c.doc_id = o.doc_id
@@ -371,9 +400,7 @@ def jaccard_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     negligible at any shingle count a document holds, but stated here
     because the oracle intersects the string shingles directly)."""
     load_tables(spark, sf_dir)
-    materialize(spark.sql(f"{_SPARK_SHINGLES} SELECT * FROM sh")).createOrReplaceTempView(
-        "pf_sh"
-    )
+    _shingles(spark)
     # report_sort instead of a trailing ORDER BY: the verify subtree is
     # broadcast-join-heavy with no exchange below the sort, so the range
     # sampler re-ran the whole candidate+intersect pipeline per action
@@ -826,19 +853,13 @@ def benchmark_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     across two disjoint slice scans, and the join back to documents
     disappears. The oracle keeps the join-filtered spelling."""
     load_tables(spark, sf_dir)
-    return spark.sql("""
+    return spark.sql(f"""
         WITH toks AS (
             SELECT /*+ REPARTITION */ doc_id, source, split(text, ' ') AS w
             FROM documents
         ),
         sh AS (
-            SELECT doc_id, source,
-                   explode(array_distinct(transform(
-                       sequence(1, size(w) - 2),
-                       i -> concat_ws('_', element_at(w, i),
-                                      element_at(w, i + 1),
-                                      element_at(w, i + 2))
-                   ))) AS s
+            SELECT doc_id, source, explode({_SPARK_SHINGLE_SET}) AS s
             FROM toks WHERE size(w) >= 3
         ),
         bench AS (SELECT DISTINCT s FROM sh WHERE source = 'src0'),
@@ -1442,11 +1463,7 @@ def source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_tables(spark, sf_dir)
     materialize(spark.sql(_SOURCE_OVERLAP_HEAD.format(
         split="split(text, ' ')",
-        shingle_unnest=(
-            "explode(array_distinct(transform(sequence(1, size(w) - 2), "
-            "i -> concat_ws('_', element_at(w, i), element_at(w, i + 1), "
-            "element_at(w, i + 2)))))"
-        ),
+        shingle_unnest=f"explode({_SPARK_SHINGLE_SET})",
         wlen="size(w)",
     ) + " SELECT * FROM ss")).createOrReplaceTempView("so_ss")
     return spark.sql(("WITH ss AS (SELECT * FROM so_ss)," + _SOURCE_OVERLAP_TAIL).format(
@@ -1565,20 +1582,9 @@ def containment_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     way the Jaccard AllPairs join does; the rarity window partitions by
     doc_id; verification touches candidates only."""
     load_tables(spark, sf_dir)
-    materialize(
-        spark.sql(f"{_SPARK_SHINGLES} SELECT * FROM sh")
-    ).createOrReplaceTempView("ct_sh")
+    _shingles(spark)
     tau = f"{CONTAINMENT_NUM}e0 / {CONTAINMENT_DEN}e0"
-    body = f"""
-        WITH sh AS (SELECT * FROM ct_sh),
-        df AS (SELECT s, count(*) AS df FROM sh GROUP BY s),
-        cnt AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-        ordered AS (
-            SELECT sh.doc_id, sh.s,
-                   row_number() OVER (PARTITION BY sh.doc_id
-                                      ORDER BY df.df, sh.s) AS r
-            FROM sh JOIN df ON df.s = sh.s
-        ),
+    body = f"""{_RARITY_CTES},
         prefix AS (
             SELECT o.doc_id, o.s
             FROM ordered o JOIN cnt c ON c.doc_id = o.doc_id
@@ -1795,15 +1801,7 @@ def _calibration_curve_sql(
     diagnostic that justifies (or indicts) a chosen signature width —
     E[matches/k] = J per component (Broder, SEQUENCES'97), so avg_true
     should track est within the binomial band."""
-    bands_union = "\n            UNION ALL\n".join(
-        f"            SELECT doc_id, {b} AS band, "
-        f"{concat2(f'h{2 * b}', f'h{2 * b + 1}')} AS bkey FROM sig"
-        for b in range(N_BANDS)
-    )
-    sig = sig_body or (
-        f"SELECT doc_id, count(*) AS n, {_minhash_cols()}"
-        " FROM sh GROUP BY doc_id"
-    )
+    sig = sig_body or _sig_sql()
     eq = " + ".join(
         f"CASE WHEN sa.h{k} = sb.h{k} THEN 1 ELSE 0 END"
         for k in range(N_HASHES)
@@ -1812,7 +1810,7 @@ def _calibration_curve_sql(
         {shingles},
         sig AS {mat}({sig}),
         bands AS (
-{bands_union}
+{_bands_sql(concat2)}
         ),
         cand AS (
             SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -1856,20 +1854,12 @@ def minhash_estimate_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical candidate generation to minhash_near_dup_pairs
     (banded equi-join, never all-pairs); shingles and signatures are
-    materialized once and shared by the band branches, the component
-    comparison, and the exact verify."""
+    the builder's checkpoints (`_signatures`), shared by the band branches,
+    the component comparison, and the exact verify."""
     load_tables(spark, sf_dir)
-    sh = materialize(spark.sql(f"{_SPARK_SHINGLES} SELECT * FROM sh"))
-    sh.createOrReplaceTempView("mh_sh")
-    sig = materialize(spark.sql(
-        f"SELECT doc_id, count(*) AS n, {_minhash_cols()} "
-        "FROM mh_sh GROUP BY doc_id"
-    ))
-    sig.createOrReplaceTempView("mh_sig")
+    _signatures(spark)
     return spark.sql(_calibration_curve_sql(
-        "WITH sh AS (SELECT * FROM mh_sh)",
-        lambda a, b: f"concat({a}, {b})",
-        sig_body="SELECT * FROM mh_sig",
+        _SH_CTE, _spark_concat2, sig_body=f"SELECT * FROM {_SIG_VIEW}"
     ))
 
 
@@ -1988,15 +1978,10 @@ def _lsh_budget_sql(sig_src: str, concat2, intdiv: str) -> str:
     bucket fan-out. The ALL row (band = -1) is the whole pipeline's
     budget, directly comparable to SCALING.md's measured candidate
     counts."""
-    bands_union = "\n            UNION ALL\n".join(
-        f"            SELECT doc_id, {b} AS band, "
-        f"{concat2(f'h{2 * b}', f'h{2 * b + 1}')} AS bkey FROM sig"
-        for b in range(N_BANDS)
-    )
     return f"""
         {sig_src},
         bands AS (
-{bands_union}
+{_bands_sql(concat2)}
         ),
         bk AS (
             SELECT band, bkey, count(*) AS n
@@ -2027,12 +2012,11 @@ def lsh_candidate_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     (band, bkey) — map-combinable, bounded output, and the expensive join
     it prices is never executed."""
     load_tables(spark, sf_dir)
-    sh = materialize(spark.sql(f"{_SPARK_SHINGLES} SELECT * FROM sh"))
-    sh.createOrReplaceTempView("mh_sh")
+    _shingles(spark)
     return spark.sql(_lsh_budget_sql(
         f"WITH sig AS (SELECT doc_id, {_minhash_cols()} "
-        "FROM mh_sh GROUP BY doc_id)",
-        lambda a, b: f"concat({a}, {b})",
+        f"FROM {_SH_VIEW} GROUP BY doc_id)",
+        _spark_concat2,
         "DIV",
     ))
 
@@ -2067,11 +2051,11 @@ _PLANNER_GRID = [(1, 64), (2, 32), (4, 16), (8, 8), (16, 4), (32, 2),
 _PLANNER_VALUES = ", ".join(f"({b}, {r})" for b, r in _PLANNER_GRID)
 
 
-def _planner_cols(p_of, fold_grid, js_len):
+def _planner_cols(p_of, fold_grid, js_len, js_min):
     """Shared column expressions: p_of(x) -> detect-prob SQL for jaccard
     expr x; fold_grid(lo, hi, body) -> deterministic sequential sum of
-    body(k) over the midpoint grid k in [lo, hi]; js_len -> array length
-    expr. Both engines fold arrays in identical element order, so every
+    body(k) over the midpoint grid k in [lo, hi]; js_len / js_min ->
+    array length / minimum expr. Both engines fold arrays in identical element order, so every
     float accumulates identically (group-sum merge order is
     nondeterministic in Spark — the fold is the determinism guarantee)."""
     s = "((k - 0.5e0) / 200)"
@@ -2083,7 +2067,7 @@ def _planner_cols(p_of, fold_grid, js_len):
             {R(f"{fold_grid('js', p_of('j'))} / {js_len}", 6)}
         END AS expected_recall,
         CASE WHEN {js_len} = 0 THEN NULL ELSE
-            {R(p_of("__MINJ__"), 6)}
+            {R(p_of(js_min), 6)}
         END AS worst_pair_detect,
         {R(f"{fold_grid('lo', p_of(s))} / 200", 6)} AS fp_area,
         {R(f"{fold_grid('hi', '1e0 - (' + p_of(s) + ')')} / 200", 6)}
@@ -2120,9 +2104,7 @@ def lsh_banding_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (f"aggregate({rng}, CAST(0 AS DOUBLE), "
                 f"(acc, {var}) -> acc + ({body}))")
 
-    cols = _planner_cols(p_of, fold_grid, "size(js)").replace(
-        "__MINJ__", "array_min(js)"
-    )
+    cols = _planner_cols(p_of, fold_grid, "size(js)", "array_min(js)")
     return spark.sql(f"""
         WITH parr AS (
             SELECT transform(
@@ -2152,8 +2134,8 @@ def _planner_oracle() -> str:
                 f"{var} -> ({body})), 'sum')")
 
     cols = _planner_cols(
-        p_of, fold_grid, "coalesce(len(js), 0)"
-    ).replace("__MINJ__", "list_min(js)")
+        p_of, fold_grid, "coalesce(len(js), 0)", "list_min(js)"
+    )
     return f"""
         WITH pairs AS MATERIALIZED ({_NGRAM_JACCARD_ORACLE}),
         parr AS (

@@ -45,10 +45,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from database_toolbox_spark.operators._oracle import R
+# md5 split buckets live in operators/dedup.py (fuzzy_decontamination
+# shares them and dedup must import without this module being loaded)
 from database_toolbox_spark.operators.dedup import (
     _band_pairs_sql,
     _DUCK_SHINGLES,
-    _SPARK_SHINGLES,
+    _SH_CTE,
+    _shingles,
+    _SPLIT_BUCKET_DUCK,
+    _SPLIT_BUCKET_SPARK,
+    minhash_near_dup_pairs,
 )
 from database_toolbox_spark.session import (
     load_tables,
@@ -295,15 +301,6 @@ def cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ))
 
 
-# md5 split buckets live in operators/dedup.py (fuzzy_decontamination
-# shares them and dedup must import without this module being loaded);
-# re-exported here for the original call sites
-from database_toolbox_spark.operators.dedup import (  # noqa: E402,F401
-    _SPLIT_BUCKET_DUCK,
-    _SPLIT_BUCKET_SPARK,
-)
-
-
 def _leakage_sql(pairs_sql: str, bucket_expr: str) -> str:
     # thresholds match operators/curation.py hash_split_counts (90/5/5)
     return f"""
@@ -348,10 +345,6 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate up to 8x within the statement (the round-12
     fuzzy_decontamination lesson applied); the oracle keeps the inline
     single-statement spelling."""
-    from database_toolbox_spark.operators.dedup import (  # noqa: PLC0415
-        minhash_near_dup_pairs,
-    )
-
     load_tables(spark, sf_dir)
     minhash_near_dup_pairs(spark, sf_dir).select(
         "doc_a", "doc_b"
@@ -422,19 +415,15 @@ def idf_cosine_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the same postings self-equi-join as the exact-Jaccard
     ground truth (1.82x time at 10x rows in SCALING.md); the df join is
     a shingle-keyed broadcast-sized dimension at any corpus size where
-    df-bucket weights matter. The shingle stream and the weighted
-    postings are each materialized once (sh feeds df + the weight join;
-    w feeds norms + both pair-join sides) — inlined, Catalyst replays
-    the tokenize+shingle pipeline per reference."""
+    df-bucket weights matter. The shingle stream (the dedup tier
+    builder's checkpoint) and the weighted postings are each materialized
+    once (sh feeds df + the weight join; w feeds norms + both pair-join
+    sides) — inlined, Catalyst replays the tokenize+shingle pipeline per
+    reference."""
     load_tables(spark, sf_dir)
+    _shingles(spark)
     materialize(
-        spark.sql(f"{_SPARK_SHINGLES} SELECT * FROM sh")
-    ).createOrReplaceTempView("idf_sh_v")
-    materialize(
-        spark.sql(
-            f"WITH sh AS (SELECT * FROM idf_sh_v), {_IDF_W_CTE} "
-            "SELECT * FROM w"
-        )
+        spark.sql(f"{_SH_CTE}, {_IDF_W_CTE} SELECT * FROM w")
     ).createOrReplaceTempView("idf_w_v")
     # report_sort: the norm2 joins above the dots aggregate are broadcast
     # joins, so a trailing ORDER BY made the range sampler re-run the
@@ -630,10 +619,6 @@ def split_decontaminated_counts(
     (same rationale as split_leakage_audit above — the inline
     _band_pairs_sql replayed shingles/signatures within the resplit
     build); the oracle keeps the inline single-statement spelling."""
-    from database_toolbox_spark.operators.dedup import (  # noqa: PLC0415
-        minhash_near_dup_pairs,
-    )
-
     load_tables(spark, sf_dir)
     minhash_near_dup_pairs(spark, sf_dir).select(
         "doc_a", "doc_b"

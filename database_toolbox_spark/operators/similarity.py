@@ -46,6 +46,7 @@ from database_toolbox_spark.operators._fold import (
 )
 from database_toolbox_spark.operators._oracle import R
 from database_toolbox_spark.session import (
+    dataset_file,
     load_table,
     load_tables,
     materialize,
@@ -2642,21 +2643,15 @@ def _ann_index_location(sf_dir: str) -> str | None:
     digest of the source parquet's (realpath, size, mtime_ns) — a changed
     fixture changes the digest, so a stale artifact can never be read:
     the new digest simply misses and the index rebuilds (the same
-    part-file identity idea session._dataset keys on). Refuses the
-    fixture/reference trees like the docstore persist path does."""
+    part-file identity, session.dataset_file, that session._dataset keys
+    on). Refuses the fixture/reference trees like the docstore persist
+    path does."""
     d = scratch_dir(ANN_PERSIST_ENV, sf_dir)
     if d is None:
         return None
-    src = persisted_table_path("embeddings") or os.path.join(
+    p = dataset_file(persisted_table_path("embeddings") or os.path.join(
         sf_dir, "embeddings.parquet"
-    )
-    p = src
-    if os.path.isdir(p):
-        parts = sorted(
-            f for f in os.listdir(p) if f.endswith(".parquet")
-        )
-        if parts:
-            p = os.path.join(p, parts[0])
+    ))
     st = os.stat(p)
     digest = hashlib.sha1(
         f"{os.path.realpath(p)}|{st.st_size}|{st.st_mtime_ns}".encode()

@@ -20,6 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from database_toolbox_spark.operators._oracle import R
+from database_toolbox_spark.operators.dedup import (
+    _DUCK_SHINGLES,
+    _SPARK_SHINGLES,
+)
 from database_toolbox_spark.session import load_tables, materialize
 
 # Tiny stopword lists for the heuristic scorers (public knowledge).
@@ -922,10 +926,6 @@ def ngram_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinable; the join key is the shingle (the same co-location the
     dedup tier shuffles on)."""
     load_tables(spark, sf_dir)
-    from database_toolbox_spark.operators.dedup import (  # noqa: PLC0415
-        _SPARK_SHINGLES,
-    )
-
     return spark.sql(_NOVELTY_SQL.format(
         shingles=_SPARK_SHINGLES.rstrip(),
         ratio=R("sum(CASE WHEN f.first_doc = sh.doc_id THEN 1 ELSE 0 END)"
@@ -934,10 +934,6 @@ def ngram_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _novelty_oracle() -> str:
-    from database_toolbox_spark.operators.dedup import (  # noqa: PLC0415
-        _DUCK_SHINGLES,
-    )
-
     return _NOVELTY_SQL.format(
         shingles=_DUCK_SHINGLES.rstrip(),
         ratio=R("sum(CASE WHEN f.first_doc = sh.doc_id THEN 1 ELSE 0 END)"

@@ -14,7 +14,8 @@ Registration and reading are two jobs, and this module owns both:
 - `load_table` registers one table the same way and hands out a FRESH read
   of it (fresh expression IDs), which DataFrame-API self-joins need.
 - Both read through one per-dataset fact (`_dataset`: schema plus
-  TIMESTAMP(NANOS) columns) and one read (`_read`). No other module writes
+  TIMESTAMP(NANOS) columns, keyed by `dataset_file`) and one read
+  (`_read`). No other module writes
   the view registry (tests/test_local_frame_gate.py): the docstore persist
   path re-registers its copy through `load_table(..., replace=True)`.
 
@@ -232,21 +233,31 @@ def _view_registry(spark: SparkSession) -> dict[str, tuple[DataFrame, str]]:
 _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 
-def _dataset(spark: SparkSession, path: str) -> tuple[T.StructType, tuple[str, ...]]:
+def dataset_file(path: str) -> str:
+    """The data file that identifies the parquet dataset at ``path``: the
+    path itself, or a directory dataset's first part file by name (the
+    docstore persist path). Spark writes fresh randomized part names on
+    every overwrite, so a rewritten dataset resolves to a new file."""
+    if os.path.isdir(path):
+        parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+        if parts:
+            return os.path.join(path, parts[0])
+    return path
+
+
+def _dataset(
+    spark: SparkSession, path: str
+) -> tuple[T.StructType, dict[str, bool]]:
     """The Spark schema of the parquet dataset at ``path`` and its columns
     stored as TIMESTAMP(NANOS), which Spark's reader rejects
     ([PARQUET_TYPE_ILLEGAL]) unless they are read as nanos-since-epoch
-    longs: when there are any, ``nanosAsLong`` is set on every call.
+    longs: when there are any, ``nanosAsLong`` is set on every call. Each
+    nanos column maps to whether it is wall-clock time (not adjusted to
+    UTC), which Spark infers as TIMESTAMP_NTZ when stored as micros.
 
-    Looked up per resolved data file: a directory dataset (the docstore
-    persist path) resolves to its first part file, and Spark writes fresh
-    randomized part names on every overwrite, so a rewritten dataset never
-    gets stale facts; fixture files are immutable."""
-    key = path
-    if os.path.isdir(path):
-        parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
-        key = os.path.join(path, parts[0]) if parts else path
-    schema, nanos = _dataset_facts(spark, key, path)
+    Looked up per resolved data file (``dataset_file``), so a rewritten
+    dataset never gets stale facts; fixture files are immutable."""
+    schema, nanos = _dataset_facts(spark, dataset_file(path), path)
     if nanos:
         spark.conf.set(_NANOS_AS_LONG, "true")
     return schema, nanos
@@ -255,7 +266,7 @@ def _dataset(spark: SparkSession, path: str) -> tuple[T.StructType, tuple[str, .
 @_lru_cache(maxsize=256)
 def _dataset_facts(
     spark: SparkSession, key: str, path: str
-) -> tuple[T.StructType, tuple[str, ...]]:
+) -> tuple[T.StructType, dict[str, bool]]:
     """``_dataset`` per resolved data file ``key``, bounded so dead keys
     from overwrites age out. The nanos columns come from the footer; the
     schema inference (~85 ms of JVM file listing and footer work) is paid
@@ -263,11 +274,11 @@ def _dataset_facts(
     import pyarrow as pa  # noqa: PLC0415
     import pyarrow.parquet as pq  # noqa: PLC0415
 
-    nanos = () if os.path.isdir(key) else tuple(
-        f.name
+    nanos = {} if os.path.isdir(key) else {
+        f.name: f.type.tz is None
         for f in pq.read_schema(key)
         if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-    )
+    }
     if nanos:  # inference rejects the file unless they read as longs
         spark.conf.set(_NANOS_AS_LONG, "true")
     return spark.read.parquet(path).schema, nanos
@@ -275,15 +286,21 @@ def _dataset_facts(
 
 def _read(spark: SparkSession, path: str) -> DataFrame:
     """A fresh read of ``path`` (fresh expression IDs per call), with
-    TIMESTAMP(NANOS) columns cast back to microsecond timestamps
-    scan-side — a codegen'd projection, no UDF — in the original column
-    order."""
+    TIMESTAMP(NANOS) columns cast back to microsecond timestamps of the
+    type Spark infers for micros (TIMESTAMP_NTZ for wall-clock columns,
+    independent of the session time zone) scan-side — a codegen'd
+    projection, no UDF — in the original column order."""
     schema, nanos = _dataset(spark, path)
     df = spark.read.schema(schema).parquet(path)
     if not nanos:
         return df
-    for c in nanos:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    for c, ntz in nanos.items():
+        micros = f"`{c}` div 1000"
+        df = df.withColumn(c, F.expr(
+            f"timestampadd(MICROSECOND, {micros},"
+            " TIMESTAMP_NTZ'1970-01-01 00:00:00')"
+            if ntz else f"timestamp_micros({micros})"
+        ))
     return df.select(*schema.names)
 
 

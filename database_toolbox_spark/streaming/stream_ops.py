@@ -23,6 +23,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from database_toolbox_spark.operators.dedup import (
+    _minhash_slice,
+    _SPARK_SHINGLE_SET,
+    JACCARD_THRESHOLD,
+    N_BANDS,
+    N_HASHES,
+)
 from database_toolbox_spark.session import _dataset, table_path
 
 
@@ -500,10 +507,6 @@ DOCS_STREAM_SCHEMA = T.StructType(
     ]
 )
 
-_N_MINHASH = 8  # mirror operators/dedup.py constants (k hashes, 4 bands)
-_N_BANDS = 4
-_NEARDUP_JACCARD = 0.5
-
 
 def read_docs_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     """documents as a file-source stream over a directory of parquet
@@ -518,34 +521,26 @@ def read_docs_stream(spark: SparkSession, src_dir: str) -> DataFrame:
 
 
 def _doc_signatures(batch_df: DataFrame) -> DataFrame:
-    """(doc_id, sh array<string>, h0..h7) per doc — the same MinHash
-    construction as operators/dedup.py (k=8 functions = 4 slices each of 2
-    md5 digests over '<seed>|shingle'), computed with array expressions
-    only (no explode — the per-doc shingle set rides along for exact
-    Jaccard verification at probe time)."""
-    sh = (
-        "array_distinct(transform(sequence(1, size(w) - 2), "
-        "i -> concat_ws('_', element_at(w, i), element_at(w, i + 1), "
-        "element_at(w, i + 2))))"
-    )
-    out = batch_df.selectExpr(
+    """(doc_id, sh array<string>, h0..h7) per doc — operators/dedup.py's
+    shingle set and hash slices, computed with array expressions only (no
+    explode — the per-doc shingle set rides along for exact Jaccard
+    verification at probe time)."""
+    return batch_df.selectExpr(
         "doc_id", "split(text, ' ') AS w"
-    ).where("size(w) >= 3").selectExpr("doc_id", f"{sh} AS sh")
-    for k in range(_N_MINHASH):
-        seed, off = k // 4, k % 4
-        out = out.selectExpr(
-            "*",
-            f"array_min(transform(sh, s -> substring(md5(concat('{seed}|', s)),"
-            f" {1 + 8 * off}, 8))) AS h{k}",
-        )
-    return out
+    ).where("size(w) >= 3").selectExpr(
+        "doc_id", f"{_SPARK_SHINGLE_SET} AS sh"
+    ).selectExpr(
+        "*",
+        *(f"array_min(transform(sh, s -> {_minhash_slice(k)})) AS h{k}"
+          for k in range(N_HASHES)),
+    )
 
 
 def _band_view(sigs: DataFrame) -> DataFrame:
     """(doc_id, band, bkey) — 2-hash LSH bands, one row per band."""
     bands = ", ".join(
         f"named_struct('band', {b}, 'bkey', concat(h{2*b}, h{2*b+1}))"
-        for b in range(_N_BANDS)
+        for b in range(N_BANDS)
     )
     return sigs.selectExpr(
         "doc_id", f"inline(array({bands}))"
@@ -624,7 +619,7 @@ def stream_minhash_near_dup(
                 " (size(sa) + size(sb) - size(array_intersect(sa, sb)))"
                 " AS j_raw",
             )
-            .where(F.col("j_raw") >= _NEARDUP_JACCARD)
+            .where(F.col("j_raw") >= JACCARD_THRESHOLD)
             .selectExpr(
                 "doc_a", "doc_b",
                 "floor(j_raw * 1000000 + 0.501e0) / 1000000e0 AS jaccard",

@@ -7,7 +7,12 @@ before per-query release existed)."""
 
 import pytest
 
-from database_toolbox_spark.operators import graph, similarity
+from database_toolbox_spark.operators import (
+    dedup,
+    fingerprints,
+    graph,
+    similarity,
+)
 from database_toolbox_spark.session import (
     materialize,
     measured,
@@ -281,8 +286,37 @@ SIMILARITY_CHECKPOINTS = {
         "pq_distortion_eval", "sq8_ann_topk",
     ), 0),
 }
-PINNED_QUERIES = {**graph.QUERIES, **similarity.QUERIES}
-PINNED_CHECKPOINTS = {**GRAPH_CHECKPOINTS, **SIMILARITY_CHECKPOINTS}
+
+# the MinHash tier: the shingle checkpoint (dedup._shingles), the
+# signature checkpoint over it (dedup._signatures), and the composed
+# pair relation where a consumer reads it more than once. The inline
+# consumers pin nothing. A consumer that re-checkpoints the shingles or
+# the signatures fails here.
+DEDUP_CHECKPOINTS = {
+    **dict.fromkeys(("minhash_signatures", "near_dup_threshold_curve"), 0),
+    **dict.fromkeys((
+        "ngram_jaccard_pairs", "jaccard_prefix_filter_pairs",
+        "containment_dup_pairs", "lsh_candidate_budget",
+    ), 1),
+    **dict.fromkeys((
+        "minhash_near_dup_pairs", "minhash_delta_pairs",
+        "minhash_estimate_calibration", "idf_cosine_dup_pairs",
+        "split_leakage_audit",
+    ), 2),
+    **dict.fromkeys((
+        "near_dup_rate_by_source", "fuzzy_decontamination",
+        "split_decontaminated_counts",
+    ), 3),
+}
+_DEDUP_TIER = {**dedup.QUERIES, **fingerprints.QUERIES}
+PINNED_QUERIES = {
+    **graph.QUERIES,
+    **similarity.QUERIES,
+    **{name: _DEDUP_TIER[name] for name in DEDUP_CHECKPOINTS},
+}
+PINNED_CHECKPOINTS = {
+    **GRAPH_CHECKPOINTS, **SIMILARITY_CHECKPOINTS, **DEDUP_CHECKPOINTS,
+}
 
 
 @pytest.mark.parametrize("name", sorted(PINNED_QUERIES))

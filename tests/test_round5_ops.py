@@ -235,10 +235,8 @@ def test_idf_cosine_exact_dup_is_one(spark):
     """Exact-duplicate docs share every shingle at identical weights, so
     their rarity-weighted cosine is exactly 1.0; an unrelated doc never
     pairs; and every reported pair clears the 0.6 threshold."""
-    from database_toolbox_spark.operators.fingerprints import (
-        _idf_cosine_sql,
-        _SPARK_SHINGLES,
-    )
+    from database_toolbox_spark.operators.dedup import _SPARK_SHINGLES
+    from database_toolbox_spark.operators.fingerprints import _idf_cosine_sql
 
     twin = "alpha bravo charlie delta echo foxtrot golf hotel"
     rows = [

@@ -363,11 +363,12 @@ def test_prefix_filter_jaccard_exact_and_selective(spark):
     touch only each doc's rarest n - ceil(τ·n) + 1 shingles)."""
     from database_toolbox_spark.operators.dedup import (
         _PREFIX_CAND_CTES,
-        _SPARK_SHINGLES,
+        _SH_CTE,
+        _shingles,
         jaccard_prefix_filter_pairs,
         ngram_jaccard_pairs,
     )
-    from database_toolbox_spark.session import load_tables, materialize
+    from database_toolbox_spark.session import load_tables
 
     exact = {
         (r.doc_a, r.doc_b, r.jaccard)
@@ -380,11 +381,9 @@ def test_prefix_filter_jaccard_exact_and_selective(spark):
     assert pruned == exact and exact  # identical, and non-trivial
 
     load_tables(spark, SF_DIR)
-    materialize(
-        spark.sql(f"{_SPARK_SHINGLES} SELECT * FROM sh")
-    ).createOrReplaceTempView("pf_sh")
+    _shingles(spark)
     n_full = spark.sql(f"""
-        WITH sh AS (SELECT * FROM pf_sh)
+        {_SH_CTE}
         SELECT count(*) AS c FROM (
             SELECT DISTINCT x.doc_id, y.doc_id
             FROM sh x JOIN sh y ON x.s = y.s AND x.doc_id < y.doc_id
